@@ -186,8 +186,9 @@ class IcebergLikeStore(spark: SparkSession, root: String) {
   def rankCheckpointer(table: String = "ranks"): PageRank.Checkpointer =
     new PageRank.Checkpointer {
       def save(iter: Int, ranks: DataFrame, metrics: Seq[IterMetrics]): DataFrame = {
-        commit(table, ranks, iter, metrics)
-        read(table)
+        val meta = commit(table, ranks, iter, metrics)
+        // the written schema is known, so the read-back infers none (a job)
+        spark.read.schema(ranks.schema).parquet(meta.dataDir)
       }
       def latest(): Option[(Int, DataFrame, Seq[IterMetrics])] =
         currentSnapshot(table).map(m => (m.iter, read(table, Some(m.snapshotId)), m.metrics))

@@ -89,7 +89,7 @@ object ConnectedComponents {
       val next = msgs.unionByName(own)
         .groupBy("vid").agg(min(col("label")).as("label"), min(col("old")).as("old"))
       val mat = next.localCheckpoint(false) // materialized by the agg below
-      changed = mat.agg(sum(when(col("label") < col("old"), 1L).otherwise(0L)))
+      changed = mat.agg(coalesce(sum(when(col("label") < col("old"), 1L).otherwise(0L)), lit(0L)))
         .first().getLong(0)
       GraphOps.freeCheckpoint(labels)
       if (mid ne labels) GraphOps.freeCheckpoint(mid)

@@ -133,11 +133,13 @@ object GraphOps {
    * right-sized width from the cache. Big graphs take exactly the old path
    * (one shuffle, one count); tiny graphs pay one extra tiny shuffle once to
    * save it on every superstep. Returns (cached edges, |E|, parts).
+   * `minParts` floors the right-sized width (capped at `confParts`).
    */
-  def layoutForIteration(edges: DataFrame, confParts: Int): (DataFrame, Long, Int) = {
+  def layoutForIteration(edges: DataFrame, confParts: Int,
+                         minParts: Int = 1): (DataFrame, Long, Int) = {
     val e0  = partitionForIteration(edges, confParts)
     val cnt = e0.count()
-    val p   = rightSizedParts(cnt, confParts)
+    val p   = math.max(math.min(minParts, confParts), rightSizedParts(cnt, confParts))
     if (p == confParts) (e0, cnt, confParts)
     else {
       val e1 = partitionForIteration(e0, p)

@@ -85,7 +85,7 @@ object LabelPropagation {
         if (steps < 2) labels
         else superstep(labels).select("vid", "label").localCheckpoint(false)
       val mat = superstep(mid).localCheckpoint(false) // materialized below
-      changed = mat.agg(sum(when(col("label") =!= col("old"), 1L).otherwise(0L)))
+      changed = mat.agg(coalesce(sum(when(col("label") =!= col("old"), 1L).otherwise(0L)), lit(0L)))
         .first().getLong(0)
       GraphOps.freeCheckpoint(labels)
       if (mid ne labels) GraphOps.freeCheckpoint(mid)

@@ -1,7 +1,10 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.CheckpointShim
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Per-partition lineage stat for one superstep (rows that landed in each
@@ -47,12 +50,7 @@ final case class PageRankConfig(
      * sort-merge would re-sort the O(|E|) cached edge side every superstep.
      */
     joinStrategy: String = "auto",
-    broadcastMaxRows: Long = 500000L,
-    /** eager=true runs the truncating checkpoint as its own job before the
-      * closing aggregate (2 jobs/superstep); the default false folds both
-      * into ONE job per superstep (the closing aggregate materializes the
-      * lazy checkpoint) — safe because the plan is deterministic. */
-    eagerCheckpoint: Boolean = false)
+    broadcastMaxRows: Long = 500000L)
 
 /**
  * Damped power-iteration PageRank (d=0.85, dangling-mass redistribution,
@@ -67,32 +65,82 @@ final case class PageRankConfig(
  *  - edges are hash-partitioned on `src` ONCE and persisted; every superstep
  *    join reuses that partitioning, so per-iteration shuffle traffic is
  *    O(|V|) ranks + O(|V|) partial sums, never O(|E|) edges;
- *  - dangling mass needs no extra anti-join pass: each non-dangling vertex
- *    transmits exactly its rank, so danglingMass = 1 − Σ(partial sums) —
- *    one scalar action per superstep, self-normalizing (Σ ranks stays 1);
+ *  - the rank state `(vid, rank, outDeg)` is laid out by an explicit
+ *    `repartition(parts, vid)` that both the contribution join and the
+ *    update join read; AQE can coalesce neither an explicit-count exchange
+ *    nor the partial-sum shuffle joined against it, so the state stays
+ *    `parts` wide. The update join's output keeps that layout, and the
+ *    state's checkpoint records it ([[CheckpointShim]]; a plain
+ *    `localCheckpoint` under AQE records none), so from the second
+ *    superstep on the planner drops the repartition: the state is never
+ *    shuffled again;
+ *  - dangling mass needs no extra pass: each non-dangling vertex transmits
+ *    exactly its rank, so danglingMass = 1 − Σ rank over non-dangling
+ *    vertices. That sum and the L1 delta are observed on the pass that
+ *    eagerly checkpoints the new state (no closing aggregate, no extra
+ *    shuffle) and are summed exactly in fixed point, so the L1 trail and the
+ *    superstep count are bit-identical run to run;
+ *  - the per-superstep scalar enters the plan through a closure UDF, not a
+ *    literal, so every superstep generates the same code and the codegen
+ *    cache compiles it once per JVM;
  *  - hub sources (out-degree > threshold) are salted: their rank row is
  *    replicated S ways and edges join on (vid, salt) — on top of AQE's
  *    skew-join splits (both layers mandated by BASELINE.json:6);
- *  - lineage is truncated every superstep (localCheckpoint) and durably
- *    checkpointed every `ckptEvery` supersteps via the pluggable
- *    [[Checkpointer]], so a run resumes mid-iteration.
+ *  - lineage is truncated every superstep (localCheckpoint) and every
+ *    `ckptEvery` supersteps the materialized state is written through the
+ *    pluggable [[Checkpointer]], so a run resumes mid-iteration; the run
+ *    itself continues from memory.
+ *
+ * Spark jobs per superstep (JobCountSpec). With AQE off, 1: one job runs
+ * every stage. With AQE on, each query stage is its own job, so 2: the
+ * partial-sum exchange (shuffle regime) or the broadcast build (broadcast
+ * regime), then the materializing pass. One exception: in the shuffle regime
+ * with `parts` other than `spark.sql.shuffle.partitions`, the planner lays
+ * the update join out at the session's width, so the state is exchanged for
+ * the contribution join and again for the update join (4 jobs).
  */
 object PageRank {
 
   /** Pluggable durable checkpoint (implemented by ckpt.IcebergLikeStore). */
   trait Checkpointer {
-    /** Persist ranks+metrics for `iter`; return the re-read (lineage-free) ranks. */
+    /** Persist ranks+metrics for `iter`; return the persisted ranks. `run`
+      * continues from its own materialized state and does not read the
+      * returned frame. */
     def save(iter: Int, ranks: DataFrame, metrics: Seq[IterMetrics]): DataFrame
     /** Most recent saved state, if any: (iter, ranks, metrics so far). */
     def latest(): Option[(Int, DataFrame, Seq[IterMetrics])]
   }
 
-  /** No durability: truncate lineage in memory only. */
+  /** No durability: nothing is written. */
   object NoopCheckpointer extends Checkpointer {
-    def save(iter: Int, ranks: DataFrame, metrics: Seq[IterMetrics]): DataFrame =
-      ranks.localCheckpoint(true)
+    def save(iter: Int, ranks: DataFrame, metrics: Seq[IterMetrics]): DataFrame = ranks
     def latest(): Option[(Int, DataFrame, Seq[IterMetrics])] = None
   }
+
+  /** Fixed-point scale of the observed sums. Σ|Δrank| ≤ 2 and Σ rank ≤ 1, so
+    * the scaled sums stay below 2^62; each term is rounded to the nearest
+    * 2^-60. Long addition is exact, so the order in which task results merge
+    * on the driver cannot change the result. */
+  private val Scale = math.pow(2, 60)
+
+  /** Eagerly checkpoint `df` projected to `keep`, keeping its hash
+    * partitioning, and return the exact sums of `terms` over its rows,
+    * observed in the same pass. */
+  private def materialize(df: DataFrame, keep: Seq[String],
+                          terms: Column*): (DataFrame, Seq[Double]) = {
+    val sums = terms.zipWithIndex.map { case (t, i) =>
+      sum(rint(t * lit(Scale)).cast("long")).as(s"s$i")
+    }
+    val observed = df.observe("pagerank_sums", sums.head, sums.tail: _*)
+      .select(keep.map(col): _*)
+    val cp = CheckpointShim.localCheckpoint(observed)
+    val row = observed.queryExecution.observedMetrics("pagerank_sums")
+    (cp, terms.indices.map(i => if (row.isNullAt(i)) 0.0 else row.getLong(i) / Scale))
+  }
+
+  /** `v` as a column whose generated code does not depend on `v`: a literal
+    * is inlined into the generated code, so a new value compiles anew. */
+  private def scalar(v: Double): Column = udf(() => v).asNonNullable().apply()
 
   def run(spark: SparkSession, edges: DataFrame,
           cfg: PageRankConfig = PageRankConfig(),
@@ -103,24 +151,19 @@ object PageRank {
     // --- static per-run state, partitioned for the iteration and cached ---
     // explicit numPartitions is honored exactly (the scaling bench pins it);
     // otherwise the width is right-sized from the materialized edge count so
-    // tiny graphs don't pay confParts near-empty tasks per superstep stage
+    // tiny graphs don't pay confParts near-empty tasks per superstep stage.
+    // The floor is 2: a one-partition exchange plans as SinglePartition,
+    // which the co-partitioned superstep joins do not accept — they then
+    // re-shuffle the state (and in the shuffle regime the edges) every
+    // superstep
     val (eSrc, edgeCount, parts) =
       if (cfg.numPartitions > 0) {
         val e0 = GraphOps.partitionForIteration(typedEdges, cfg.numPartitions)
         (e0, e0.count(), cfg.numPartitions)
       } else {
         GraphOps.layoutForIteration(typedEdges,
-          spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+          spark.conf.get("spark.sql.shuffle.partitions", "32").toInt, minParts = 2)
       }
-
-    val outDeg = GraphOps.outDegrees(eSrc)
-      .repartition(parts, col("vid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val verts = GraphOps.vertices(eSrc)
-      .repartition(parts, col("vid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = verts.count()
-    require(n > 0, "empty graph")
 
     // hub sources for salting: threshold from the run's own degree stats when
     // not pinned (SURVEY.md §5.2); membership stays distributed as a DataFrame
@@ -128,9 +171,43 @@ object PageRank {
     val hubThreshold =
       if (cfg.hubDegreeThreshold > 0) cfg.hubDegreeThreshold
       else math.max(1024L, edgeCount / (2L * parts))
-    val hubs = outDeg.filter(col("outDeg") > hubThreshold).select("vid")
-    val hubCount = hubs.count() // outDeg is cached — one cheap scan
 
+    // the vertex table (vid, outDeg), outDeg null for dangling vertices, from
+    // ONE aggregation over the laid edges; cached: it is the cold-start state,
+    // the hub set's source and the resume path's degree side
+    val verts = eSrc.select(col("src").as("vid"), lit(1L).as("o"))
+      .unionByName(eSrc.select(col("dst").as("vid"), lit(0L).as("o")))
+      .groupBy("vid").agg(sum(col("o")).as("o"))
+      .select(col("vid"), when(col("o") > 0L, col("o")).as("outDeg"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // rows per hash partition of the rank state at `width` partitions: the
+    // state is laid out by vid and the vertex set is fixed, so they hold for
+    // every superstep
+    def partStatsOf(rows: Array[Row], width: Int): Seq[PartStat] = {
+      val byPid = rows.map(r => r.getInt(0) -> r.getLong(1)).toMap
+      (0 until width).map(p => PartStat(p, byPid.getOrElse(p, 0L)))
+    }
+    def pid(width: Int): Column = pmod(hash(col("vid")), lit(width)).as("pid")
+    // ONE action (it also fills the cache): rows, transmitting rows and hubs
+    // per partition of the `parts`-wide state
+    val byPart = verts.groupBy(pid(parts))
+      .agg(count(lit(1)).as("rows"), count(col("outDeg")).as("out"),
+        count_if(col("outDeg") > hubThreshold).as("hubs"))
+      .collect()
+    val n = byPart.map(_.getLong(1)).sum
+    val transmitting = byPart.map(_.getLong(2)).sum
+    val hubCount = byPart.map(_.getLong(3)).sum
+    var partStats = partStatsOf(byPart, parts)
+
+    if (n == 0) {
+      verts.unpersist(false)
+      eSrc.unpersist(false)
+      val schema = StructType(Seq(StructField("vid", LongType), StructField("rank", DoubleType)))
+      return PageRankResult(spark.createDataFrame(java.util.List.of[Row](), schema),
+        Seq.empty, 0, 0L, hubThreshold)
+    }
+
+    val hubs = verts.filter(col("outDeg") > hubThreshold).select("vid")
     val d = cfg.damping
     val strategy = cfg.joinStrategy match {
       case "auto" => if (n <= cfg.broadcastMaxRows) "broadcast" else "shuffle_hash"
@@ -144,13 +221,12 @@ object PageRank {
     // branch-wise hub/non-hub sums and their co-partitioned merge
     // (Salting.contribSums) — lands on the cached partitioning and the
     // superstep runs with NO shuffle at all: broadcast build + map-side
-    // chain + the tiny closing aggregate. One extra edge shuffle up front
-    // buys maxIter shuffle-free supersteps. The shuffle regime keeps the
-    // src layout (its join streams the cached edge side); raising the
-    // broadcast crossover past 500k rows was probed at the 2M-vertex
-    // headline and REJECTED: the per-superstep driver-side broadcast build
-    // (collect + hash relation of |V| rows) costs more than the
-    // contribution shuffle it replaces (13.1 s vs 11.3 s
+    // chain. One extra edge shuffle up front buys maxIter shuffle-free
+    // supersteps. The shuffle regime keeps the src layout (its join streams
+    // the cached edge side); raising the broadcast crossover past 500k rows
+    // was probed at the 2M-vertex headline and REJECTED: the per-superstep
+    // driver-side broadcast build (collect + hash relation of |V| rows)
+    // costs more than the contribution shuffle it replaces (13.1 s vs 11.3 s
     // sum-of-supersteps, HeadlineProbe).
     val e =
       if (strategy == "broadcast") {
@@ -161,97 +237,88 @@ object PageRank {
         laid
       } else eSrc
 
-    // Ranks carry the static nullable out-degree column so each superstep is
-    // ONE Spark job: the closing aggregate computes this iteration's L1 AND
-    // the next iteration's transmitted mass (Σ rank over non-dangling
-    // vertices) in the same pass that materializes the lineage-truncating
-    // checkpoint. No separate dangling action, no persisted sums stage.
-    def withDeg(r: DataFrame): DataFrame =
-      r.join(outDeg, Seq("vid"), "left").select(col("vid"), col("rank"), col("outDeg"))
-
-    // --- resume or cold start ---
-    val (startIter, ranksInit, metrics0) = ckpt.latest() match {
-      case Some((it, saved, ms)) => (it + 1, withDeg(saved), ms.toVector)
+    // --- resume or cold start: the rank state (vid, rank, outDeg) and the
+    // mass its non-dangling vertices transmit ---
+    val transmits = when(col("outDeg").isNotNull, col("rank"))
+    val (startIter, ranks0, metrics0, transmitted0) = ckpt.latest() match {
+      case Some((it, saved, ms)) =>
+        val (state, Seq(t)) = materialize(
+          verts.join(saved, Seq("vid")).select(col("vid"), col("rank"), col("outDeg")),
+          Seq("vid", "rank", "outDeg"), transmits)
+        (it + 1, state, ms.toVector, t)
       case None =>
-        (0, withDeg(verts.select(col("vid"), lit(1.0 / n).as("rank"))), Vector.empty[IterMetrics])
+        (0, verts.select(col("vid"), lit(1.0 / n).as("rank"), col("outDeg")),
+          Vector.empty[IterMetrics], transmitting.toDouble / n)
     }
 
-    var ranks   = ranksInit.localCheckpoint(true)
-    var metrics = metrics0
-    var iter    = startIter
-    var l1      = Double.MaxValue
-    // transmitted mass of the CURRENT ranks (one bootstrap action per run)
-    var transmitted = Option(
-      ranks.filter(col("outDeg").isNotNull).agg(sum(col("rank"))).first().get(0))
-      .map(_.asInstanceOf[Double]).getOrElse(0.0)
+    var ranks       = ranks0
+    var metrics     = metrics0
+    var iter        = startIter
+    var l1          = Double.MaxValue
+    var transmitted = transmitted0
 
     while (l1 >= cfg.eps && iter < cfg.maxIter) {
       val t0 = System.nanoTime()
       val dangling = math.max(0.0, 1.0 - transmitted)
+      val base = (1.0 - d) / n + d * dangling / n
 
-      // rank/outDeg weights of transmitting vertices (outDeg column is local)
-      val rankDeg = ranks.filter(col("outDeg").isNotNull)
-        .select(col("vid"), (col("rank") / col("outDeg")).as("w"))
+      // the state's layout; a no-op once the state is a checkpoint that
+      // already has it. Dangling vertices (outDeg null) own no edges, so the
+      // inner contribution join drops them without a filter
+      val cur = ranks.repartition(parts, col("vid"))
+      val rankDeg = cur.select(col("vid"), (col("rank") / col("outDeg")).as("w"))
 
       // per-destination partial sums (J1 + A1), hub-salted when needed (J4);
       // branch-wise aggregation + co-partitioned merge (r6) so the broadcast
       // regime's dst layout carries the whole superstep shuffle-free
       val sums = Salting.contribSums(e, rankDeg, hubs, hubCount, cfg.saltBuckets, strategy)
 
-      val base = (1.0 - d) / n + d * dangling / n
       // both sides hash-partitioned on the key — pin SHJ so neither is sorted
-      val newRank = lit(base) + lit(d) * coalesce(col("s"), lit(0.0))
-      val next = ranks.join(sums.hint("shuffle_hash"), ranks("vid") === sums("dst"), "left")
-        .select(ranks("vid"), newRank.as("rank"),
-          abs(newRank - ranks("rank")).as("delta"), ranks("outDeg"))
-
-      // lazy checkpoint: the closing aggregate below materializes it —
-      // exactly one job per superstep
-      val durable = cfg.ckptEvery > 0 && (iter + 1) % cfg.ckptEvery == 0
-      val mat =
-        if (durable) next.persist(StorageLevel.MEMORY_AND_DISK)
-        else next.localCheckpoint(cfg.eagerCheckpoint)
-      // ONE closing job per superstep: grouped by physical partition it yields
-      // the per-partition lineage stats (row counts) AND the global L1 +
-      // transmitted-mass sums (driver folds ≤`parts` partials), while
-      // materializing the lazily-checkpointed new rank state in the same pass.
-      val prows = mat.groupBy(spark_partition_id().as("pid"))
-        .agg(count(lit(1)).as("rows"), sum(col("delta")).as("d"),
-          sum(when(col("outDeg").isNotNull, col("rank"))).as("t"))
-        .collect()
-      l1 = prows.iterator.map(r => if (r.isNullAt(2)) 0.0 else r.getDouble(2)).sum
-      transmitted = prows.iterator.map(r => if (r.isNullAt(3)) 0.0 else r.getDouble(3)).sum
-      val partStats = prows.map(r => PartStat(r.getInt(0), r.getLong(1))).sortBy(_.pid).toSeq
+      val newRank = scalar(base) + lit(d) * coalesce(col("s"), lit(0.0))
+      val next = cur.join(sums.hint("shuffle_hash"), cur("vid") === sums("dst"), "left")
+        .select(cur("vid"), newRank.as("rank"), cur("outDeg"), cur("rank").as("prev"))
+      val (mat, Seq(delta, t)) = materialize(next, Seq("vid", "rank", "outDeg"),
+        abs(col("rank") - col("prev")), transmits)
+      l1 = delta
+      transmitted = t
+      // in the shuffle regime with `parts` other than spark.sql.shuffle.
+      // partitions, the planner lays the update join out at the latter width
+      // (and exchanges the state twice); count the state's real partitions once
+      val width = mat.queryExecution.logical match {
+        case lr: LogicalRDD => lr.rdd.getNumPartitions
+        case _              => partStats.size
+      }
+      if (width != partStats.size)
+        partStats = partStatsOf(verts.groupBy(pid(width)).count().collect(), width)
 
       val wallMs = (System.nanoTime() - t0) / 1000000
       metrics = metrics :+ IterMetrics(iter, l1, dangling, edgeCount, wallMs, partStats)
 
-      val newRanks =
-        if (durable) {
-          val r = withDeg(ckpt.save(iter, mat.select("vid", "rank"), metrics)).localCheckpoint(true)
-          mat.unpersist(false)
-          r
-        } else mat.select("vid", "rank", "outDeg")
+      // durable step: write the state that is already materialized
+      if (cfg.ckptEvery > 0 && (iter + 1) % cfg.ckptEvery == 0)
+        ckpt.save(iter, mat.select("vid", "rank"), metrics)
 
       // free the PREVIOUS superstep's checkpoint blocks now that the new
-      // state is materialized — the ContextCleaner is too lazy for a tight loop
-      GraphOps.freeCheckpoint(ranks)
-      ranks = newRanks
+      // state is materialized — the ContextCleaner is too lazy for a tight
+      // loop. At iter 0 the state is a plan over the cached vertex table,
+      // whose lineage holds the caller's input: nothing of ours to free.
+      if (iter > 0) GraphOps.freeCheckpoint(ranks)
+      ranks = mat
       iter += 1
     }
-    val finalRanks = ranks.select("vid", "rank")
-    ranks = finalRanks
+    // a cold start that ran no superstep still returns ranks independent of
+    // the caches released below
+    val finalRanks = (if (iter == 0) ranks.localCheckpoint(true) else ranks).select("vid", "rank")
 
     // final state is always durably recorded (exact resume point = done)
     if (metrics.nonEmpty && !(cfg.ckptEvery > 0 && iter % cfg.ckptEvery == 0))
-      ranks = ckpt.save(iter - 1, ranks, metrics)
+      ckpt.save(iter - 1, finalRanks, metrics)
 
-    // release per-run caches (edge layout, degrees, vertex set) — the result
-    // ranks are checkpoint-backed and independent of them
+    // release per-run caches (edge layout, vertex table) — the result ranks
+    // are checkpoint-backed and independent of them
     e.unpersist(false)
-    outDeg.unpersist(false)
     verts.unpersist(false)
 
-    PageRankResult(ranks, metrics, iter, hubCount, hubThreshold)
+    PageRankResult(finalRanks, metrics, iter, hubCount, hubThreshold)
   }
 }

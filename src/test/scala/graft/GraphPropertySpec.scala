@@ -99,6 +99,28 @@ class GraphPropertySpec extends SparkSpec {
     }
   }
 
+  test("PageRank under AQE: the same input gives a bit-identical L1 trail and superstep count") {
+    val edges = graft.sources.PageSynth.edgeList(spark, 2000L, 7L).toDF()
+    def trail(): (Int, Seq[Long]) = {
+      val res = PageRank.run(spark, edges, PageRankConfig(eps = 1e-6, numPartitions = 4, ckptEvery = 0))
+      GraphOps.freeCheckpoint(res.ranks)
+      (res.iterations, res.metrics.map(m => java.lang.Double.doubleToRawLongBits(m.l1)))
+    }
+    val (itA, a) = trail()
+    val (itB, b) = trail()
+    assert(itA == itB && itA > 5, s"supersteps $itA then $itB")
+    assert(a == b, "L1 trails differ between two runs of the same input")
+  }
+
+  test("empty edge table: PageRank, CC and LP return empty results") {
+    val e = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val pr = PageRank.run(spark, e)
+    assert(pr.iterations == 0 && pr.metrics.isEmpty && pr.hubCount == 0)
+    assert(pr.ranks.columns.toSeq == Seq("vid", "rank") && pr.ranks.count() == 0)
+    assert(ConnectedComponents.run(spark, e).count() == 0)
+    assert(LabelPropagation.run(spark, e).count() == 0)
+  }
+
   test("alternating CC converges in O(log n) rounds on a high-diameter chain") {
     // a 400-node path: HashMin would need 400 supersteps (= diameter); the
     // star-contraction variant must finish well inside 15 alternating rounds

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.graph._
 
@@ -21,7 +22,9 @@ import graft.graph._
  * action into one job per materialized query stage, making counts
  * plan-shape-dependent) and broadcasts are disabled via joinStrategy /
  * broadcastMaxRows = 0 (each BroadcastExchange submits its own async collect
- * job). Under those pins, jobs == driver actions exactly.
+ * job). Under those pins, jobs == driver actions exactly. PageRank is also
+ * pinned in the suite's default AQE-on session, where every materialized
+ * query stage is its own job, so the count is the superstep's stage shape.
  */
 class JobCountSpec extends SparkSpec {
 
@@ -50,6 +53,13 @@ class JobCountSpec extends SparkSpec {
     (0L until 30L).map(i => (i, i + 1)).toDF("src", "dst")
   }
 
+  /** The same path with nullable id columns, as an edge table read from
+    * parquet has them. */
+  private def nullablePathEdges(s: SparkSession): DataFrame = {
+    val p = pathEdges(s)
+    s.createDataFrame(p.rdd, StructType(p.schema.map(_.copy(nullable = true))))
+  }
+
   test("PageRank: exactly one job per extra superstep") {
     val e = pathEdges(noAqe)
     def cfg(k: Int) = PageRankConfig(eps = 0.0, maxIter = k, ckptEvery = 0,
@@ -57,6 +67,43 @@ class JobCountSpec extends SparkSpec {
     val j3 = jobsDuring { PageRank.run(noAqe, e, cfg(3)) }
     val j6 = jobsDuring { PageRank.run(noAqe, e, cfg(6)) }
     assert(j6 - j3 == 3, s"expected 1 job/superstep, got j3=$j3 j6=$j6")
+  }
+
+  test("PageRank under AQE: exactly two jobs per extra superstep, state kept `parts` wide") {
+    // the suite's default session (AQE on) — the setting every real session
+    // runs with. Shuffle regime at the session's 4 shuffle partitions: the
+    // partial-sum exchange and the materializing pass each submit one job;
+    // no closing aggregate, and no exchange of the state, whose checkpoint
+    // keeps the hash partitioning it was produced with.
+    val e = nullablePathEdges(spark)
+    def cfg(k: Int) = PageRankConfig(eps = 0.0, maxIter = k, ckptEvery = 0,
+      numPartitions = 4, joinStrategy = "shuffle_hash")
+    var r6: PageRankResult = null
+    val j3 = jobsDuring { PageRank.run(spark, e, cfg(3)) }
+    val j6 = jobsDuring { r6 = PageRank.run(spark, e, cfg(6)) }
+    assert(j6 - j3 == 6, s"expected 2 jobs/superstep, got j3=$j3 j6=$j6")
+    assert(r6.metrics.size == 6)
+    r6.metrics.foreach { m =>
+      assert(m.partStats.map(_.pid) == (0 until 4), s"superstep ${m.iter}: ${m.partStats}")
+      assert(m.partStats.map(_.rows).sum == 31L, s"superstep ${m.iter}: ${m.partStats}")
+    }
+    // no coalesced read: the materialized state has all 4 partitions, with
+    // exactly the rows partStats reports
+    val got = r6.ranks.groupBy(org.apache.spark.sql.functions.spark_partition_id()).count()
+      .collect().map(r => PartStat(r.getInt(0), r.getLong(1))).sortBy(_.pid).toSeq
+    assert(r6.ranks.rdd.getNumPartitions == 4)
+    assert(got == r6.metrics.last.partStats.filter(_.rows > 0))
+  }
+
+  test("warm PageRank.run compiles no code: the per-superstep scalar is not a literal") {
+    val e = pathEdges(spark)
+    def cfg(k: Int) = PageRankConfig(eps = 0.0, maxIter = k, ckptEvery = 0,
+      numPartitions = 4, joinStrategy = "shuffle_hash")
+    PageRank.run(spark, e, cfg(3)) // warm: compiles this plan shape once
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    PageRank.run(spark, e, cfg(6)) // 3 more supersteps, each with a new scalar
+    assert(compiles.getCount - before == 0, "a warm run compiled generated code")
   }
 
   test("HashMin CC: exactly one job per strided superstep PAIR (r6)") {
