@@ -37,9 +37,6 @@ import graft.sources.PageSynth
  *   `pagerank_median_edges_per_sec` — median-superstep rate of the best run
  *   `pagerank_salted_edges_per_sec` — same engine on a hub-skewed graph where
  *                                     the salted-join path is actually active
- * `SPARK_GRAFT_CSR_BENCH=1` additionally times the §4.4 packed-CSR engine
- * under the same warmed best-of-k protocol (default off — EngineAB is the
- * matched-window A/B instrument for that comparison).
  * Scaling-efficiency evidence (local[8] vs local[32]) is produced by
  * [[graft.tools.ScalingBench]] and recorded in BENCH/BASELINE.md.
  */
@@ -162,34 +159,6 @@ object Bench {
     metric("pagerank_edges_per_sec",           nEdges.toDouble * iters / bestSec)
     metric("pagerank_median_edges_per_sec",    nEdges.toDouble / (bestMedMs / 1000.0))
     spark.catalog.clearCache()
-
-    // §4.4 packed-CSR engine (measured alternative; Catalyst is the default —
-    // BENCH/BASELINE.md A/B). OFF by default: a single cold run here published
-    // a contended 478 k/s against EngineAB's matched-window 4.57 M/s and added
-    // 152 s to the official bench wall. EngineAB is the A/B instrument; set
-    // SPARK_GRAFT_CSR_BENCH=1 for an in-bench number (warmed, best-of-k,
-    // same-run median — same protocol as the Catalyst headline above).
-    if (sys.env.get("SPARK_GRAFT_CSR_BENCH").contains("1")) {
-      graft.graph.CsrPageRank.run(spark, edges.toDF(), eps = 0.0, maxIter = 2) // warm-up
-      var csrBestSec = Double.MaxValue
-      var csrBestMedMs = Long.MaxValue
-      var csrRuns = Vector.empty[Run]
-      (1 to hRepeats).foreach { _ =>
-        var medMs = 0L
-        val r = measured {
-          val res = graft.graph.CsrPageRank.run(spark, edges.toDF(), eps = 0.0, maxIter = iters)
-          val walls = res.metrics.map(_.wallMs).sorted
-          medMs = walls(walls.length / 2)
-        }
-        csrRuns :+= r
-        if (r.sec < csrBestSec) { csrBestSec = r.sec; csrBestMedMs = medMs }
-      }
-      results("pagerank_csr_bench")            = csrBestSec
-      runLog("pagerank_csr_bench")             = csrRuns
-      metric("pagerank_csr_edges_per_sec",       nEdges.toDouble * iters / csrBestSec)
-      metric("pagerank_csr_median_edges_per_sec", nEdges.toDouble / (csrBestMedMs / 1000.0))
-      spark.catalog.clearCache()
-    }
 
     // ---- salted path: hub-skewed graph where hub detection actually fires --
     val hubPages = nPages / 4

@@ -169,7 +169,7 @@ object SparkEntry {
       .filter(col("ppm") >= 8000L)
       .localCheckpoint(true)
     val dirPairs = pairs.select(col("a").as("src"), col("b").as("dst"))
-    val cc = ConnectedComponents.runLaid(s,
+    val cc = ConnectedComponents.runLaid(
       GraphOps.layoutDedupForIteration(
         dirPairs.unionByName(pairs.select(col("b").as("src"), col("a").as("dst"))),
         s.conf.get("spark.sql.shuffle.partitions", "32").toInt,
@@ -468,7 +468,7 @@ object SparkEntry {
     // r6: the graph engines below consume DocGraph's laid-out (one-exchange,
     // cached) edge tables instead of re-deriving explode+distinct per
     // internal reference — same rows, guide §2.4
-    "q_cc" -> ((s, d) => ConnectedComponents.runLaid(s, DocGraph.laidSym(s, d))),
+    "q_cc" -> ((s, d) => ConnectedComponents.runLaid(DocGraph.laidSym(s, d))),
     // strongly connected components to convergence — scc_id = min vid of the
     // SCC is algorithm-independent, so the oracle replays it from recursive
     // reachability ground truth, not from the engine's iteration schedule
@@ -498,7 +498,7 @@ object SparkEntry {
       laid.unpersist(false) // out is eagerly checkpointed
       out
     }),
-    "q_lp" -> ((s, d) => LabelPropagation.runLaid(s, DocGraph.laidSym(s, d), maxIter = 10)),
+    "q_lp" -> ((s, d) => LabelPropagation.runLaid(DocGraph.laidSym(s, d), maxIter = 10)),
 
     // ---- relational coverage (TPC-H-ish; exact integer-cent arithmetic) ----
     "q1_agg" -> ((s, d) => li(s, d)

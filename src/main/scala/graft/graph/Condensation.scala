@@ -41,17 +41,14 @@ object Condensation {
     * the condensation of `edges`: (vid, scc_id, layer_k). */
   def topoLayers(spark: SparkSession, edges: DataFrame, k: Int,
                  assumeDistinct: Boolean = false,
-                 broadcastMaxRows: Long = 500000L): DataFrame = {
+                 broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
     val scc = StronglyConnectedComponents.run(spark, edges,
       assumeDistinct = assumeDistinct).localCheckpoint(true)
     val ce  = condense(edges, scc).localCheckpoint(true)
-    // r6 crossover pin: the layering state is one row per CONDENSATION
-    // component (≤ |V|, ≪ |V| on web graphs) — below the crossover it
-    // broadcasts instead of re-shuffling per max-plus superstep; the
-    // membership count is a cheap scan of the eager scc checkpoint
-    val nV = scc.count()
-    def pin(df: DataFrame): DataFrame =
-      if (nV <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
+    // the kernel's crossover, sized by |V| (a cheap scan of the eager scc
+    // checkpoint), which bounds the layering state's one row per
+    // condensation component
+    val pin = Superstep.pinFor(scc.count(), broadcastMaxRows)
     val inter = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var st = scc.select(col("scc_id").as("c")).distinct()
       .select(col("c"), lit(0L).as("l"))

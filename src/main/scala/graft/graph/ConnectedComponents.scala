@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Connected components via iterative min-label hash-join propagation
@@ -12,92 +11,41 @@ import org.apache.spark.storage.StorageLevel
  *
  * Each superstep: every vertex sends its current label along every undirected
  * edge; new label = min(own, received). Converged when no label changes —
- * integer exactness makes the stop test exact. Lineage truncated per
- * superstep; messages use the same src-partitioned cached edge table pattern
- * as PageRank, so per-superstep shuffle is O(|V|) labels, not O(|E|) edges.
+ * integer exactness makes the stop test exact. The loop is
+ * [[Superstep.untilStable]] over the src-partitioned cached symmetric edge
+ * table, so per-superstep shuffle is O(|V|) labels, not O(|E|) edges.
  *
  * HashMin rounds = graph diameter; web graphs are small-diameter so this is
- * the right trade at scale (the alternating large-star/small-star variant is
- * a drop-in behind the same signature if ever needed).
+ * the right trade at scale ([[runAlternating]] is the O(log n)-round variant
+ * behind the same output contract).
  */
 object ConnectedComponents {
 
   def run(spark: SparkSession, edges: DataFrame,
           numPartitions: Int = 0, maxIter: Int = 100,
-          broadcastMaxRows: Long = 500000L): DataFrame = {
-    // explicit numPartitions honored exactly; otherwise right-sized from the
-    // materialized symmetric edge count (same rationale as PageRank.run)
-    val laid =
-      if (numPartitions > 0) {
-        val s0 = GraphOps.partitionForIteration(GraphOps.symmetrized(edges), numPartitions)
-        (s0, s0.count(), numPartitions)
-      } else {
-        GraphOps.layoutForIteration(GraphOps.symmetrized(edges),
-          spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-      }
-    runLaid(spark, laid, maxIter, broadcastMaxRows)
+          broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame =
+    runLaid(GraphOps.layoutForIteration(GraphOps.symmetrized(edges),
+      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt,
+      numPartitions = numPartitions), maxIter, broadcastMaxRows)
+
+  /** [[run]] over a laid symmetric edge table (e.g. DocGraph.laidSym's
+    * one-exchange layout), which is unpersisted on return. */
+  private[graft] def runLaid(laidSym: Superstep.Laid, maxIter: Int = 100,
+                             broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
+    val g = Superstep(laidSym, broadcastMaxRows)
+    g.untilStable(g.vertices.select(col("vid"), col("vid").as("label")), maxIter,
+      col("label") < col("old"))(hashMin(g))
   }
 
-  /** [[run]] core over a pre-laid-out symmetric edge table (cached,
-    * src-hash-partitioned `(edges, |E|, parts)` — e.g. DocGraph.laidSym's
-    * one-exchange layout). The laid table is unpersisted on return. */
-  private[graft] def runLaid(spark: SparkSession, laidSym: (DataFrame, Long, Int),
-                             maxIter: Int = 100,
-                             broadcastMaxRows: Long = 500000L): DataFrame = {
-    val (sym, _, parts) = laidSym
-    // lazy: the |V| count below is the materializing action (r6)
-    var labels = GraphOps.vertices(sym)
-      .select(col("vid"), col("vid").as("label"))
-      .repartition(parts, col("vid"))
-      .localCheckpoint(false)
-
-    // same broadcast-or-shuffle-hash selection as PageRank: broadcast the
-    // O(|V|) label side while it fits, co-partitioned SHJ beyond — never SMJ
-    // (it would re-sort the cached O(|E|) edge side every superstep)
-    val nV = labels.count()
-    def pin(df: DataFrame): DataFrame =
-      if (nV <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
-
-    var changed = 1L
-    var iter    = 0
-    while (changed > 0 && iter < maxIter) {
-      // STRIDED HashMin (r6): up to two supersteps per driver round-trip.
-      // The first chains lazily (no `old` bookkeeping, no action); the
-      // second carries its previous label in `old` so the counting
-      // aggregate — the ONE job of the pair — yields the new state and the
-      // exact change count together (mirrors PageRank's closing agg). A
-      // HashMin superstep at fixpoint is the identity, so stopping on the
-      // second step's zero count is the former per-superstep test at half
-      // the driver actions; cost ≤ 1 redundant superstep per run. `maxIter`
-      // is still respected EXACTLY (the tail stride shrinks to fit) — a
-      // capped run executes the same superstep count as before.
-      val steps = math.min(2, maxIter - iter)
-      val mid =
-        if (steps < 2) labels
-        else {
-          val m = sym.join(pin(labels), sym("src") === labels("vid"))
-            .select(sym("dst").as("vid"), labels("label"))
-            .unionByName(labels.select(col("vid"), col("label")))
-            .groupBy("vid").agg(min(col("label")).as("label"))
-            .localCheckpoint(false)
-          m
-        }
-      val msgs = sym.join(pin(mid), sym("src") === mid("vid"))
-        .select(sym("dst").as("vid"), mid("label"),
-          lit(null).cast("long").as("old"))
-      val own = mid.select(col("vid"), col("label"), col("label").as("old"))
-      val next = msgs.unionByName(own)
-        .groupBy("vid").agg(min(col("label")).as("label"), min(col("old")).as("old"))
-      val mat = next.localCheckpoint(false) // materialized by the agg below
-      changed = mat.agg(coalesce(sum(when(col("label") < col("old"), 1L).otherwise(0L)), lit(0L)))
-        .first().getLong(0)
-      GraphOps.freeCheckpoint(labels)
-      if (mid ne labels) GraphOps.freeCheckpoint(mid)
-      labels = mat.select("vid", "label")
-      iter += steps
-    }
-    sym.unpersist(false)
-    labels
+  /** One HashMin superstep over `g`'s symmetric edges: the least of a
+    * vertex's own and its neighbours' labels, with the previous label in
+    * `old`. */
+  private[graft] def hashMin(g: Superstep)(st: DataFrame): DataFrame = {
+    val sym = g.edges
+    sym.join(g.pin(st), sym("src") === st("vid"))
+      .select(sym("dst").as("vid"), st("label"), lit(null).cast("long").as("old"))
+      .unionByName(st.select(col("vid"), col("label"), col("label").as("old")))
+      .groupBy("vid").agg(min(col("label")).as("label"), min(col("old")).as("old"))
   }
 
   // ---------------------------------------------------------------------------
@@ -164,7 +112,7 @@ object ConnectedComponents {
    */
   def runAlternating(spark: SparkSession, edges: DataFrame,
                      maxIter: Int = 50,
-                     broadcastMaxRows: Long = 500000L): DataFrame =
+                     broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame =
     runAlternatingDetailed(spark, edges, maxIter, broadcastMaxRows)._1
 
   /** [[runAlternating]] plus the number of contraction rounds it took — the
@@ -172,17 +120,16 @@ object ConnectedComponents {
     * evidence proved contaminable; the structural job count is not). */
   private[graft] def runAlternatingDetailed(
       spark: SparkSession, edges: DataFrame,
-      maxIter: Int = 50, broadcastMaxRows: Long = 500000L): (DataFrame, Int) = {
+      maxIter: Int = 50,
+      broadcastMaxRows: Long = Superstep.BroadcastMaxRows): (DataFrame, Int) = {
     val verts = GraphOps.vertices(edges).localCheckpoint(true)
     var e = edges
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
       .localCheckpoint(true)
-    // the per-round min tables are keyed by vertex — same broadcast-or-SHJ
-    // crossover as run(); nV is a cheap count on the checkpointed vertex set
-    val nV = verts.count()
-    def pin(df: DataFrame): DataFrame =
-      if (nV <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
+    // the per-round min tables are keyed by vertex — the kernel's crossover,
+    // sized by a cheap count on the checkpointed vertex set
+    val pin = Superstep.pinFor(verts.count(), broadcastMaxRows)
     // right-size the per-round shuffle width from the materialized edge count
     // (stars symmetrize, hence 2×) — applied as explicit repartitions on the
     // shuffle keys inside the star operators, which the downstream

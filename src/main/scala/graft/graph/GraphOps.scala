@@ -83,16 +83,6 @@ object GraphOps {
   }
 
   /**
-   * W5 — CSR-style layout (BASELINE.json:6): range-partition by `src`, sort
-   * within partitions, persist. Each partition then holds contiguous
-   * adjacency runs — the Catalyst-native reading of a per-partition CSR.
-   * No global sort; the range exchange is the only shuffle.
-   */
-  def csrLayout(edges: DataFrame, numPartitions: Int): DataFrame =
-    edges.repartitionByRange(numPartitions, col("src"))
-      .sortWithinPartitions("src")
-
-  /**
    * Iteration-ready edge cache: hash-partitioned on `src` so every superstep
    * join `edges.src == ranks.vid` reuses this partitioning and only the
    * (much smaller) rank side shuffles. Persisted MEMORY_AND_DISK — at 100 TB
@@ -133,14 +123,18 @@ object GraphOps {
    * right-sized width from the cache. Big graphs take exactly the old path
    * (one shuffle, one count); tiny graphs pay one extra tiny shuffle once to
    * save it on every superstep. Returns (cached edges, |E|, parts).
-   * `minParts` floors the right-sized width (capped at `confParts`).
+   * `minParts` floors the right-sized width (capped at `confParts`); a
+   * positive `numPartitions` is taken exactly instead.
    */
-  def layoutForIteration(edges: DataFrame, confParts: Int,
-                         minParts: Int = 1): (DataFrame, Long, Int) = {
-    val e0  = partitionForIteration(edges, confParts)
+  def layoutForIteration(edges: DataFrame, confParts: Int, minParts: Int = 1,
+                         numPartitions: Int = 0): (DataFrame, Long, Int) = {
+    val width = if (numPartitions > 0) numPartitions else confParts
+    val e0  = partitionForIteration(edges, width)
     val cnt = e0.count()
-    val p   = math.max(math.min(minParts, confParts), rightSizedParts(cnt, confParts))
-    if (p == confParts) (e0, cnt, confParts)
+    val p   =
+      if (numPartitions > 0) width
+      else math.max(math.min(minParts, confParts), rightSizedParts(cnt, confParts))
+    if (p == width) (e0, cnt, width)
     else {
       val e1 = partitionForIteration(e0, p)
       e1.count()
@@ -169,12 +163,15 @@ object GraphOps {
    * The estimate only picks the partition count — correctness never depends
    * on it, and the returned count is the exact materialized |E|.
    *
-   * Lifetime: callers whose output is EAGERLY materialized unpersist the
-   * laid table on return; callers returning LAZY plans over it (truss peel,
-   * neighborhood loops, fixed-k ccIter/lpIter) cannot, and rely on session
-   * cache hygiene (the bench clears the cache between queries; a Verify
-   * sweep accumulates these small cached tables for its lifetime — stated,
-   * bounded by table count × the laid edge size).
+   * Lifetime: the caller owns the cached table. A [[Superstep]] driver
+   * (CC, LP and the fixed-k doc-graph drivers) unpersists it before
+   * returning its eagerly checkpointed result, as do WL refinement and the
+   * SCC, condensation, alternating-CC and neighbourhood-function queries.
+   * Callers that return a LAZY plan over it (truss peel, the exact-ball and
+   * harmonic neighbourhood queries) cannot, and leave it to session cache
+   * hygiene: the bench clears the cache between queries, while a Verify
+   * sweep keeps these small tables for its lifetime, bounded by their count
+   * × the laid edge size.
    */
   def layoutDedupForIteration(rawEdges: DataFrame, confParts: Int,
                               estEdges: Long,

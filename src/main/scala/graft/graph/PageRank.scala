@@ -3,7 +3,6 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.graft.CheckpointShim
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
@@ -50,7 +49,7 @@ final case class PageRankConfig(
      * sort-merge would re-sort the O(|E|) cached edge side every superstep.
      */
     joinStrategy: String = "auto",
-    broadcastMaxRows: Long = 500000L)
+    broadcastMaxRows: Long = Superstep.BroadcastMaxRows)
 
 /**
  * Damped power-iteration PageRank (d=0.85, dangling-mass redistribution,
@@ -123,24 +122,8 @@ object PageRank {
     * on the driver cannot change the result. */
   private val Scale = math.pow(2, 60)
 
-  /** Eagerly checkpoint `df` projected to `keep`, keeping its hash
-    * partitioning, and return the exact sums of `terms` over its rows,
-    * observed in the same pass. */
-  private def materialize(df: DataFrame, keep: Seq[String],
-                          terms: Column*): (DataFrame, Seq[Double]) = {
-    val sums = terms.zipWithIndex.map { case (t, i) =>
-      sum(rint(t * lit(Scale)).cast("long")).as(s"s$i")
-    }
-    val observed = df.observe("pagerank_sums", sums.head, sums.tail: _*)
-      .select(keep.map(col): _*)
-    val cp = CheckpointShim.localCheckpoint(observed)
-    val row = observed.queryExecution.observedMetrics("pagerank_sums")
-    (cp, terms.indices.map(i => if (row.isNullAt(i)) 0.0 else row.getLong(i) / Scale))
-  }
-
-  /** `v` as a column whose generated code does not depend on `v`: a literal
-    * is inlined into the generated code, so a new value compiles anew. */
-  private def scalar(v: Double): Column = udf(() => v).asNonNullable().apply()
+  /** `t` in fixed point at [[Scale]], for an exact observed sum. */
+  private def fixed(t: Column): Column = rint(t * lit(Scale)).cast("long")
 
   def run(spark: SparkSession, edges: DataFrame,
           cfg: PageRankConfig = PageRankConfig(),
@@ -156,14 +139,9 @@ object PageRank {
     // which the co-partitioned superstep joins do not accept — they then
     // re-shuffle the state (and in the shuffle regime the edges) every
     // superstep
-    val (eSrc, edgeCount, parts) =
-      if (cfg.numPartitions > 0) {
-        val e0 = GraphOps.partitionForIteration(typedEdges, cfg.numPartitions)
-        (e0, e0.count(), cfg.numPartitions)
-      } else {
-        GraphOps.layoutForIteration(typedEdges,
-          spark.conf.get("spark.sql.shuffle.partitions", "32").toInt, minParts = 2)
-      }
+    val (eSrc, edgeCount, parts) = GraphOps.layoutForIteration(typedEdges,
+      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt, minParts = 2,
+      numPartitions = cfg.numPartitions)
 
     // hub sources for salting: threshold from the run's own degree stats when
     // not pinned (SURVEY.md §5.2); membership stays distributed as a DataFrame
@@ -242,10 +220,10 @@ object PageRank {
     val transmits = when(col("outDeg").isNotNull, col("rank"))
     val (startIter, ranks0, metrics0, transmitted0) = ckpt.latest() match {
       case Some((it, saved, ms)) =>
-        val (state, Seq(t)) = materialize(
+        val (state, Seq(t)) = Superstep.materialize(
           verts.join(saved, Seq("vid")).select(col("vid"), col("rank"), col("outDeg")),
-          Seq("vid", "rank", "outDeg"), transmits)
-        (it + 1, state, ms.toVector, t)
+          Seq("vid", "rank", "outDeg"), fixed(transmits))
+        (it + 1, state, ms.toVector, t / Scale)
       case None =>
         (0, verts.select(col("vid"), lit(1.0 / n).as("rank"), col("outDeg")),
           Vector.empty[IterMetrics], transmitting.toDouble / n)
@@ -274,13 +252,13 @@ object PageRank {
       val sums = Salting.contribSums(e, rankDeg, hubs, hubCount, cfg.saltBuckets, strategy)
 
       // both sides hash-partitioned on the key — pin SHJ so neither is sorted
-      val newRank = scalar(base) + lit(d) * coalesce(col("s"), lit(0.0))
+      val newRank = Superstep.scalar(base) + lit(d) * coalesce(col("s"), lit(0.0))
       val next = cur.join(sums.hint("shuffle_hash"), cur("vid") === sums("dst"), "left")
         .select(cur("vid"), newRank.as("rank"), cur("outDeg"), cur("rank").as("prev"))
-      val (mat, Seq(delta, t)) = materialize(next, Seq("vid", "rank", "outDeg"),
-        abs(col("rank") - col("prev")), transmits)
-      l1 = delta
-      transmitted = t
+      val (mat, Seq(delta, t)) = Superstep.materialize(next, Seq("vid", "rank", "outDeg"),
+        fixed(abs(col("rank") - col("prev"))), fixed(transmits))
+      l1 = delta / Scale
+      transmitted = t / Scale
       // in the shuffle regime with `parts` other than spark.sql.shuffle.
       // partitions, the planner lays the update join out at the latter width
       // (and exchanges the state twice); count the state's real partitions once

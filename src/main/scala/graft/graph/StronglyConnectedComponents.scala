@@ -55,7 +55,7 @@ object StronglyConnectedComponents {
     * exchange) when the caller guarantees the input edge set is already
     * distinct — DocGraph.edges / its laid-out variants are. */
   def run(spark: SparkSession, edges: DataFrame, maxRounds: Int = 64,
-          broadcastMaxRows: Long = 500000L, verbose: Boolean = false,
+          broadcastMaxRows: Long = Superstep.BroadcastMaxRows, verbose: Boolean = false,
           assumeDistinct: Boolean = false): DataFrame = {
     def say(s: => String): Unit = if (verbose) Console.err.println(s"[scc] $s")
     val t0 = System.nanoTime()
@@ -72,8 +72,8 @@ object StronglyConnectedComponents {
     // lazy: the |V| count on the next line is the materializing action (r6)
     var v = GraphOps.vertices(edges).repartition(parts, col("vid")).localCheckpoint(false)
     var nV = v.count()
-    def pin(df: DataFrame): DataFrame =
-      if (nV <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
+    // re-sized as the residual vertex set shrinks
+    def pin(df: DataFrame): DataFrame = Superstep.pinFor(nV, broadcastMaxRows)(df)
 
     /** Label propagation to fixpoint, STRIDED (r6): two supersteps per
       * driver round-trip — the first chains lazily (no `old` bookkeeping,

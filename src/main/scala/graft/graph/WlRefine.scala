@@ -43,12 +43,11 @@ object WlRefine {
   /** [[refine]] core over a pre-laid-out symmetric edge table (cached,
     * src-hash-partitioned — e.g. DocGraph.laidSym's one-exchange layout). */
   private[graft] def refineLaid(spark: SparkSession, laidSym: (DataFrame, Long, Int),
-                                k: Int, broadcastMaxRows: Long = 500000L): DataFrame = {
+                                k: Int, broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
     val (e, nE, parts) = laidSym
-    // r6 crossover pin sized from the laid |E|: below it the O(|V|) state
-    // sides broadcast instead of re-shuffling per round; beyond it inert
-    def pin(df: DataFrame): DataFrame =
-      if (nE <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
+    // the kernel's crossover, sized here by the laid |E| (an upper bound of
+    // |V| on a symmetric table) so the loop needs no |V| count
+    val pin = Superstep.pinFor(nE, broadcastMaxRows)
     // color_0 = symmetric degree (every vertex of sym appears as a src)
     var st = e.groupBy(col("src").as("vid")).agg(count(lit(1)).as("c"))
       .localCheckpoint(true)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.graph.GraphOps
+
 /**
  * Deduplication suite for training-data pipelines: exact, MinHash+LSH,
  * SimHash, and exact n-gram Jaccard on LSH candidates.
@@ -129,20 +131,23 @@ object Dedup {
    */
   def contamination(docs: DataFrame, isBenchmark: Column,
                     idCol: String, textCol: String, k: Int = 3): DataFrame = {
-    // r6: three consumers (benchmark union, per-doc sizes, the semi-join
-    // probe side) each re-ran the tokenize+hash explode — lazy persist
-    // computes it once; released by the caller's session hygiene
+    // three consumers (benchmark union, per-doc sizes, the semi-join probe
+    // side) would each re-run the tokenize+hash explode — the persist
+    // computes it once, and is released once the result is checkpointed
     val sh = docs.select(col(idCol).as("id"), isBenchmark.as("bench"),
         explode(shingleHashes(col(textCol), k)).as("s"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val benchSh = sh.filter(col("bench")).select(col("s")).distinct()
     val corp = sh.filter(!col("bench"))
     val sizes = corp.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    corp.join(benchSh, Seq("s"), "left_semi")
+    val out = corp.join(benchSh, Seq("s"), "left_semi")
       .groupBy("id").agg(count(lit(1)).as("n_shared"))
       .join(sizes, Seq("id"))
       .select(col("id"), col("n_shared"), col("n_sh"),
         call_function("div", col("n_shared") * lit(1000000L), col("n_sh")).as("ppm"))
+      .localCheckpoint(true)
+    sh.unpersist(false)
+    out
   }
 
   /** Exact n-gram Jaccard for candidate pairs (a, b) — see [[jaccardCounts]]. */
@@ -287,18 +292,22 @@ object Dedup {
         v
       }
     }
-    // r6: materialize the block table ONCE — each side of the self-join
+    // materialize the block table ONCE — each side of the self-join
     // otherwise re-runs the tokenize+simhash projection (the pipeline's
-    // expensive part); one eager checkpoint of 4·|docs| narrow rows
+    // expensive part); one eager checkpoint of 4·|docs| narrow rows, freed
+    // once the pairs are checkpointed
     val blocks = sigs.select(col("id"), col("sig"), posexplode(array(blockVals: _*)))
       .withColumnRenamed("pos", "blk").withColumnRenamed("col", "bval")
       .localCheckpoint(true)
-    blocks.as("x").join(blocks.as("y"),
+    val pairs = blocks.as("x").join(blocks.as("y"),
         col("x.blk") === col("y.blk") && col("x.bval") === col("y.bval") &&
           col("x.id") < col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"),
         hamming(col("x.sig"), col("y.sig")).as("dist"))
       .distinct()
       .filter(col("dist") <= maxHamming)
+      .localCheckpoint(true)
+    GraphOps.freeCheckpoint(blocks)
+    pairs
   }
 }

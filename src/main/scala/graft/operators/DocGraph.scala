@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graph._
+import graft.graph.Superstep.Laid
 
 /**
  * Harness-facing deterministic link graph derived from the driver's
@@ -58,9 +59,9 @@ object DocGraph {
   /** Directed doc edge table laid out for iteration — same rows as
     * [[edges]], produced with ONE exchange (dedup folded into the
     * src-partitioned layout shuffle, guide §2.4) instead of the former
-    * distinct-exchange → repartition-exchange → re-layout triple.
-    * Returns (cached edges, |E|, parts); callers unpersist. */
-  private[graft] def laidDirected(spark: SparkSession, sfDir: String): (DataFrame, Long, Int) =
+    * distinct-exchange → repartition-exchange → re-layout triple. The
+    * consuming driver unpersists it. */
+  private[graft] def laidDirected(spark: SparkSession, sfDir: String): Laid =
     GraphOps.layoutDedupForIteration(rawEdges(spark, sfDir),
       confParts(spark), estEdges(spark, sfDir))
 
@@ -68,36 +69,52 @@ object DocGraph {
     * broadcast-regime fixed-k PageRank wants: its per-superstep groupBy(dst)
     * lands on the cached partitioning (zero exchange), while the rank side
     * ships as a broadcast hash relation and never needs src clustering. */
-  private[graft] def laidDirectedDst(spark: SparkSession, sfDir: String): (DataFrame, Long, Int) =
+  private[graft] def laidDirectedDst(spark: SparkSession, sfDir: String): Laid =
     GraphOps.layoutDedupForIteration(rawEdges(spark, sfDir),
       confParts(spark), estEdges(spark, sfDir), keyCol = "dst")
 
   /** Directed doc edges REVERSED (dst→src), laid out in one exchange —
     * the landmark driver's propagation orientation. */
-  private[graft] def laidReversed(spark: SparkSession, sfDir: String): (DataFrame, Long, Int) =
-    GraphOps.layoutDedupForIteration(
-      rawEdges(spark, sfDir).select(col("dst").as("src"), col("src").as("dst")),
+  private[graft] def laidReversed(spark: SparkSession, sfDir: String): Laid =
+    GraphOps.layoutDedupForIteration(reversed(rawEdges(spark, sfDir)),
       confParts(spark), estEdges(spark, sfDir))
 
   /** Symmetric doc edge set (both orientations, distinct — identical rows to
     * `GraphOps.symmetrized(edges(…))`), laid out in ONE exchange: distinct of
     * the union of both orientations ≡ both orientations of the distinct
     * undirected set. */
-  private[graft] def laidSym(spark: SparkSession, sfDir: String): (DataFrame, Long, Int) = {
+  private[graft] def laidSym(spark: SparkSession, sfDir: String): Laid = {
     val r = rawEdges(spark, sfDir)
     GraphOps.layoutDedupForIteration(
-      r.unionByName(r.select(col("dst").as("src"), col("src").as("dst"))),
-      confParts(spark), 2L * estEdges(spark, sfDir))
+      r.unionByName(reversed(r)), confParts(spark), 2L * estEdges(spark, sfDir))
   }
 
   /** Canonical undirected pairs a < b as (src, dst) — identical rows to
     * `GraphOps.undirected(edges(…))` under that renaming — laid out in ONE
     * exchange. */
-  private[graft] def laidUnd(spark: SparkSession, sfDir: String): (DataFrame, Long, Int) =
+  private[graft] def laidUnd(spark: SparkSession, sfDir: String): Laid =
     GraphOps.layoutDedupForIteration(
       rawEdges(spark, sfDir).select(
         least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst")),
       confParts(spark), estEdges(spark, sfDir))
+
+  /** Any (src, dst) edge table with its ids cast to long, oriented by
+    * `orient` and laid out for iteration as it is (no dedup) — the drivers'
+    * `*IterLaid` entry on an edge table of the caller's. Orientations:
+    * identity (directed), [[reversed]], `GraphOps.symmetrized`,
+    * [[canonical]]. */
+  private[graft] def lay(spark: SparkSession, edges: DataFrame,
+                         orient: DataFrame => DataFrame = identity): Laid =
+    GraphOps.layoutForIteration(orient(edges.select(
+      col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))), confParts(spark))
+
+  /** Edges dst→src. */
+  private[graft] def reversed(edges: DataFrame): DataFrame =
+    edges.select(col("dst").as("src"), col("src").as("dst"))
+
+  /** `GraphOps.undirected` pairs a < b as (src, dst). */
+  private[graft] def canonical(edges: DataFrame): DataFrame =
+    GraphOps.undirected(edges).select(col("a").as("src"), col("b").as("dst"))
 
   /** SQL prefix defining the same edge table for the DuckDB oracle.
     * Iterative oracles chain CTEs that are each referenced more than once —
@@ -121,99 +138,63 @@ object DocGraph {
       |outdeg AS MATERIALIZED (SELECT src AS vid, count(*) AS c FROM edges GROUP BY src),
       |nv AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS n FROM verts)""".stripMargin
 
+  /** A fixed-k result score `r` as an integer, `floor(r*1e7 + 0.5 + 1e-6)`:
+    * the engine and the oracle compute r identically to ≲1e-11 absolute at
+    * this scale, and the 1e-6 nudge moves the discretization boundary away
+    * from the exact .5 points that plain `round` hits when ranks are short
+    * decimal fractions — making the integer comparison robust cross-engine. */
+  private def e7(r: Column): Column =
+    floor(r * lit(1.0e7) + lit(0.500001)).cast("long")
+
   /**
-   * Exactly k PageRank supersteps (same arithmetic as PageRank.run). Output
-   * is the rank scaled to an integer, `floor(r*1e7 + 0.5 + 1e-6)`: the two
-   * engines compute r identically to ≲1e-11 absolute at this scale, and the
-   * 1e-6 nudge moves the discretization boundary away from the exact .5
-   * points that plain `round` hits when ranks are short decimal fractions —
-   * making the integer comparison robust cross-engine.
+   * Exactly k PageRank supersteps (same arithmetic as PageRank.run), output
+   * as [[e7]] integers. Below the broadcast crossover the edges are laid by
+   * DST: the per-superstep groupBy(dst) then reuses the cached layout and
+   * the superstep has no exchange, while the rank side ships as a broadcast
+   * hash relation. |docs| bounds |V| without a job.
    */
-  def prIter(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
-    // below the broadcast crossover, lay the edges by DST and broadcast the
-    // O(|V|) sides: the superstep then has zero exchanges (the groupBy(dst)
-    // reuses the cached layout); beyond it, src layout + co-partitioned SHJ.
-    // The crossover compares |V| (= nDocs, rank rows are one per vertex)
-    // against the row threshold — PageRank.run's exact rule, not the 4×-
-    // conservative edge estimate (r6 review fix).
-    val bmr = 500000L
-    if (nDocs(spark, sfDir) <= bmr)
-      prIterLaid(spark, laidDirectedDst(spark, sfDir), k, broadcastPins = true)
-    else
-      prIterLaid(spark, laidDirected(spark, sfDir), k, broadcastPins = false)
+  def prIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
+    prIterLaid(
+      if (nDocs(spark, sfDir) <= Superstep.BroadcastMaxRows) laidDirectedDst(spark, sfDir)
+      else laidDirected(spark, sfDir), k)
+
+  /** [[prIter]] over a laid directed edge table. The dangling term is
+    * in-plan ([[massFlow]]), so the broadcast regime runs the k supersteps
+    * as one job. */
+  private[graft] def prIterLaid(laid: Laid, k: Int, d: Double = 0.85,
+                                broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
+    val g = Superstep(laid, broadcastMaxRows)
+    val n = g.nV.toDouble
+    massFlow(g, GraphOps.outDegrees(g.edges), k, s"pr${k}e7", lit(1.0 / n),
+      col("r") / col("deg"),
+      (tm, s) => lit(1.0 - d) / lit(n) + (lit(d) * greatest(lit(0.0), lit(1.0) - tm)) / lit(n)
+        + lit(d) * s)
   }
 
   /**
-   * Fixed-k PageRank as a ZERO-actions-per-superstep lazy localCheckpoint
-   * chain (bfsIter's discipline) — r6 optimization of the former
-   * PageRank.run delegation, which paid one driver action per superstep to
-   * fetch the dangling-mass scalar (plus per-superstep query planning):
-   * measured 10.4–11.8 s → 7.5–8.5 s for k=40 at sf0.1/local[32], e7
-   * output bit-identical (DeferredPrProbe, 0 mismatches).
-   *
-   * The dangling term moves IN-PLAN: a one-row aggregate of the previous
-   * state (Σ rank over non-dangling — the same formulation PageRank.run
-   * uses) attached by a broadcast HASH join on a degenerate non-foldable
-   * key (`attr*0`), never a BroadcastNestedLoopJoin (PlanSpec's ban) and
-   * never a cartesian. Arithmetic order mirrors PageRank.run's driver
-   * computation term by term, so the ≲1e-11 summation-order drift the e7
-   * floor absorbs is unchanged in kind. PageRank.run remains the
-   * convergence/metrics/checkpoint engine (headline bench, entry(),
-   * goldens, resume); this is the fixed-k oracle path only.
+   * Fixed-k PageRank-family loop over state (vid, r, deg): every vertex with
+   * a degree sends `contrib` (over r, deg and the edge's src/dst) along each
+   * out-edge, and the new score is `next(tm, s)` of the received sum s and
+   * the mass tm the previous state transmitted (Σ r over vertices with a
+   * degree; 1 − tm is the dangling mass). tm is a one-row in-plan aggregate
+   * attached by `GraphOps.attachScalar`, so a superstep needs no driver
+   * action. Arithmetic order mirrors the oracle term by term, so only the
+   * e7-absorbed summation order differs.
    */
-  private[graft] def prIterLaid(spark: SparkSession, laid: (DataFrame, Long, Int),
-                                k: Int, d: Double = 0.85,
-                                broadcastPins: Boolean = false): DataFrame = {
-    val (e, _, parts) = laid
-    // pin the O(|V|) sides to match the caller's layout choice: broadcast
-    // (dst-laid edges, zero-exchange superstep) below the crossover,
-    // co-partitioned shuffle-hash (src-laid edges) beyond it
-    def pin(df: DataFrame): DataFrame =
-      if (broadcastPins) broadcast(df) else df.hint("shuffle_hash")
-    val outdeg = GraphOps.outDegrees(e).repartition(parts, col("vid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = GraphOps.vertices(e).repartition(parts, col("vid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = verts.count()
-    require(n > 0, "empty graph")
-    val inter = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var r = verts.join(outdeg, Seq("vid"), "left")
-      .select(col("vid"), lit(1.0 / n).as("rank"), col("outDeg"))
-      .localCheckpoint(false)
-    inter += r
-    for (_ <- 1 to k) {
-      // transmitted mass of the current state, as a 1-row side table
-      // attached by GraphOps.attachScalar (broadcast HASH join on a
-      // degenerate non-foldable key — the audited BNLJ-free idiom)
-      val tm = r.filter(col("outDeg").isNotNull)
-        .agg(sum(col("rank")).as("tm"))
-        .select(coalesce(col("tm"), lit(0.0)).as("tm"))
-      val rankDeg = r.filter(col("outDeg").isNotNull)
-        .select(col("vid"), (col("rank") / col("outDeg")).as("w"))
-      val sums = e.join(pin(rankDeg), e("src") === rankDeg("vid"))
-        .groupBy(e("dst").as("dvid")).agg(sum(col("w")).as("s"))
-      val dang = greatest(lit(0.0), lit(1.0) - col("tm"))
-      val base = lit(1.0 - d) / lit(n.toDouble) + (lit(d) * dang) / lit(n.toDouble)
-      val newRank = base + lit(d) * coalesce(col("s"), lit(0.0))
-      val joined = r.join(pin(sums), r("vid") === sums("dvid"), "left")
-      val next = GraphOps.attachScalar(joined, r("vid"), tm, col("tm"))
-        .select(r("vid"), newRank.as("rank"), r("outDeg"))
-      // broadcast regime: fully lazy chain (zero actions per superstep).
-      // Shuffle regime (big graphs): EAGER per-superstep checkpoint — the
-      // scalar broadcast build otherwise becomes the job that materializes
-      // the whole previous superstep inside spark.sql.broadcastTimeout
-      // (300 s), a failure mode the per-superstep work of a 100 TB graph
-      // could genuinely hit; there the one driver action per superstep is
-      // noise against the superstep's own shuffle (r6 review fix).
-      r = next.localCheckpoint(!broadcastPins)
-      inter += r
+  private def massFlow(g: Superstep, deg: DataFrame, k: Int, name: String, init: Column,
+                       contrib: Column, next: (Column, Column) => Column): DataFrame = {
+    val e = g.edges
+    val st0 = g.vertices.join(deg, Seq("vid"), "left")
+      .select(col("vid"), init.as("r"), col(deg.columns(1)).as("deg"))
+    g.fixedK(st0, k, scalar = true, out = _.select(col("vid"), e7(col("r")).as(name))) { (st, _) =>
+      val live = st.filter(col("deg").isNotNull)
+      val tm = live.agg(sum(col("r")).as("tm")).select(coalesce(col("tm"), lit(0.0)).as("tm"))
+      val sums = e.join(g.pin(live), e("src") === live("vid"))
+        .groupBy(e("dst").as("dvid")).agg(sum(contrib).as("s"))
+      GraphOps.attachScalar(st.join(g.pin(sums), st("vid") === sums("dvid"), "left"),
+          st("vid"), tm, col("tm"))
+        .select(st("vid"), next(col("tm"), coalesce(col("s"), lit(0.0))).as("r"), st("deg"))
     }
-    val out = r.select(col("vid"),
-      floor(col("rank") * lit(1.0e7) + lit(0.500001)).cast("long").as(s"pr${k}e7"))
-      .localCheckpoint(true)
-    inter.foreach(GraphOps.freeCheckpoint)
-    e.unpersist(false); outdeg.unpersist(false); verts.unpersist(false)
-    out
   }
 
   /** Oracle SQL for exactly k PageRank supersteps (k small; CTE per superstep). */
@@ -237,96 +218,28 @@ object DocGraph {
     sb.toString
   }
 
-  // (the former scalarSum driver helper is gone — every fixed-k driver's
-  // normalization/dangling scalar moved IN-PLAN via GraphOps.attachScalar,
-  // r6; see prIterLaid for the idiom and its eager/lazy regime)
-
   /**
    * Exactly k personalized-PageRank supersteps (random walk with restart to
    * the seed set `vid % 100 == 0`): r₀ = uniform over seeds;
    * rᵢ₊₁(v) = (1−d)·p(v) + d·(Σ_{u→v} rᵢ(u)/out(u) + danglingᵢ·p(v)), with
    * dangling mass restarted at the seeds (Σ r stays exactly 1). Same
-   * integer pinning and cross-engine arithmetic-order discipline as
-   * [[prIter]] (the 1e7 floor absorbs the ≲1e-11 partial-sum-order drift —
-   * including the dangling term's: like PageRank.run, dangling mass is
-   * derived as 1 − Σ_{non-dangling} rᵢ from the PREVIOUS superstep's closing
-   * aggregate, which equals the oracle's 1 − Σ sums up to summation order).
+   * integer pinning and arithmetic-order discipline as [[prIter]]. A graph
+   * without seeds has all-zero scores.
    */
   def pprIter(spark: SparkSession, sfDir: String, k: Int,
               d: Double = 0.85): DataFrame =
-    pprIterLaid(spark, laidDirected(spark, sfDir), k, d)
+    pprIterLaid(laidDirected(spark, sfDir), k, d)
 
-  /**
-   * [[pprIter]] core on an explicit edge table, ONE Spark job per superstep
-   * (VERDICT r4 #2 — the former shape ran an eager checkpoint + scalar-sum
-   * + eager checkpoint, 3 driver actions each round): ranks carry the static
-   * nullable out-degree, the superstep's closing aggregate computes the next
-   * round's transmitted mass while materializing the lazily-checkpointed new
-   * state, exactly PageRank.run's pattern. JobCountSpec pins the count.
-   */
-  private[graft] def pprIterEdges(spark: SparkSession, edges0: DataFrame, k: Int,
-                                  d: Double = 0.85,
-                                  broadcastMaxRows: Long = 500000L): DataFrame =
-    pprIterLaid(spark, GraphOps.layoutForIteration(
-      edges0.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst")),
-      confParts(spark)), k, d, broadcastMaxRows)
-
-  private def pprIterLaid(spark: SparkSession, laid: (DataFrame, Long, Int), k: Int,
-                          d: Double = 0.85,
-                          broadcastMaxRows: Long = 500000L): DataFrame = {
-    val (e, nE, parts) = laid
-    val outdeg = GraphOps.outDegrees(e).repartition(parts, col("vid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = GraphOps.vertices(e).repartition(parts, col("vid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nS = verts.filter(col("vid") % 100 === 0).count().toDouble
-    require(nS > 0, "no seed vertices")
-    // r6 crossover pin sized from the laid |E| (see matchIterLaid)
-    def pin(df: DataFrame): DataFrame =
-      if (nE <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
-
-    // r6: ZERO driver actions per superstep (prIterLaid's deferral) — the
-    // dangling term moves IN-PLAN as a one-row transmitted-mass aggregate of
-    // the previous state, attached by a broadcast HASH join on a degenerate
-    // non-foldable key; arithmetic order mirrors the former driver scalar
-    // term by term, so only the e7-absorbed summation-order drift changes.
-    val inter = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var r = verts.join(outdeg, Seq("vid"), "left")
-      .select(col("vid"),
-        when(col("vid") % 100 === 0, lit(1.0 / nS)).otherwise(lit(0.0)).as("r"),
-        col("outDeg"))
-      .localCheckpoint(false)
-    inter += r
-
-    // broadcast regime: fully lazy; shuffle regime: eager per-superstep
-    // state so the scalar broadcast build never carries a whole superstep
-    // inside the broadcast timeout (see prIterLaid, r6 review fix)
-    val eagerState = nE > broadcastMaxRows
-    for (_ <- 1 to k) {
-      val tm = r.filter(col("outDeg").isNotNull)
-        .agg(sum(col("r")).as("tm"))
-        .select(coalesce(col("tm"), lit(0.0)).as("tm"))
-      val rankDeg = r.filter(col("outDeg").isNotNull)
-        .select(col("vid"), (col("r") / col("outDeg")).as("w"))
-      val sums = e.join(pin(rankDeg), e("src") === rankDeg("vid"))
-        .groupBy(e("dst").as("dvid")).agg(sum(col("w")).as("s"))
-      val dmTerm = (lit(d) * (lit(1.0) - col("tm"))) / lit(nS)
-      val joined = r.join(pin(sums), r("vid") === sums("dvid"), "left")
-      val next = GraphOps.attachScalar(joined, r("vid"), tm, col("tm"))
-        .select(r("vid"),
-          (when(r("vid") % 100 === 0,
-            lit((1.0 - d) / nS) + dmTerm).otherwise(lit(0.0))
-            + lit(d) * coalesce(col("s"), lit(0.0))).as("r"),
-          r("outDeg"))
-      r = next.localCheckpoint(eagerState)
-      inter += r
-    }
-    val out = r.select(col("vid"),
-      floor(col("r") * lit(1.0e7) + lit(0.500001)).cast("long").as(s"ppr${k}e7"))
-      .localCheckpoint(true)
-    inter.foreach(GraphOps.freeCheckpoint)
-    e.unpersist(false); outdeg.unpersist(false); verts.unpersist(false)
-    out
+  private[graft] def pprIterLaid(laid: Laid, k: Int, d: Double = 0.85,
+                                 broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
+    val g = Superstep(laid, broadcastMaxRows)
+    val seed = col("vid") % 100 === 0
+    val nS = g.vertices.filter(seed).count().toDouble
+    massFlow(g, GraphOps.outDegrees(g.edges), k, s"ppr${k}e7",
+      when(seed, lit(1.0 / nS)).otherwise(lit(0.0)),
+      col("r") / col("deg"),
+      (tm, s) => when(seed, lit((1.0 - d) / nS) + (lit(d) * (lit(1.0) - tm)) / lit(nS))
+        .otherwise(lit(0.0)) + lit(d) * s)
   }
 
   /** Oracle SQL for exactly k personalized-PageRank supersteps. `d` must
@@ -369,116 +282,11 @@ object DocGraph {
    * same discipline as [[prIter]]/[[pprIter]].
    */
   def hitsIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
-    hitsIterCore(spark, linkAnalysisLaid(spark, laidDirected(spark, sfDir)), k)
+    hitsIterLaid(laidDirected(spark, sfDir), k)
 
-  /**
-   * Shared HITS/SALSA layout: co-partitioned edges plus degree-PRE-JOINED,
-   * persisted vertex tables — a degree join inside the iteration loop
-   * would re-run per half-step, and its unpinned BroadcastExchange submits
-   * an extra async job each time (the per-superstep action creep the r4
-   * rewrite removed). Callers unpersist all three.
-   */
-  private def linkAnalysisLayout(spark: SparkSession, edges0: DataFrame)
-      : (DataFrame, DataFrame, DataFrame, Long) =
-    linkAnalysisLaid(spark, GraphOps.layoutForIteration(
-      edges0.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst")),
-      confParts(spark)))
-
-  private def linkAnalysisLaid(spark: SparkSession, laid: (DataFrame, Long, Int))
-      : (DataFrame, DataFrame, DataFrame, Long) = {
-    val (e, _, parts) = laid
-    val vertsOut = GraphOps.vertices(e)
-      .join(GraphOps.outDegrees(e), Seq("vid"), "left")
-      .repartition(parts, col("vid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val vertsIn = GraphOps.vertices(e)
-      .join(GraphOps.inDegrees(e), Seq("vid"), "left")
-      .repartition(parts, col("vid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (e, vertsOut, vertsIn, vertsOut.count())
-  }
-
-  /**
-   * [[hitsIter]] core on an explicit edge table, ZERO driver actions per
-   * half-step (r6; the r4 shape ran one job per half-step to fetch the
-   * normalizer). The identity is unchanged — the normalizer each half-step
-   * needs is derivable from the PREVIOUS state:
-   * Σ_{(u→v)} h(u) = Σ_u h(u)·out(u) and Σ_{(u→v)} a(v) = Σ_v a(v)·in(v) —
-   * so `h` rows carry the static nullable out-degree and `a` rows the
-   * in-degree; r6 moves that one-row aggregate IN-PLAN (broadcast hash join
-   * on a degenerate non-foldable key, prIterLaid's deferral), making the
-   * whole k-iteration run a lazy checkpoint chain with one materializing
-   * action. Summation order differs from the oracle's Σ-of-groups by
-   * ≲1e-15 relative; the e7 floor pins it (same discipline as prIter).
-   */
-  private[graft] def hitsIterEdges(spark: SparkSession, edges0: DataFrame, k: Int,
-                                   broadcastMaxRows: Long = 500000L): DataFrame =
-    hitsIterCore(spark, linkAnalysisLayout(spark, edges0), k, broadcastMaxRows)
-
-  private def hitsIterCore(spark: SparkSession,
-                           layout: (DataFrame, DataFrame, DataFrame, Long), k: Int,
-                           broadcastMaxRows: Long = 500000L): DataFrame = {
-    val (e, vertsOut, vertsIn, nV) = layout
-    def pin(df: DataFrame): DataFrame =
-      if (nV <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
-    // ifEmpty = 1.0 below: an edgeless graph has an empty frontier (every
-    // degree null ⇒ the weighted sum has no non-null term); dividing the
-    // all-zero raw scores by 1 keeps them zero instead of NaN — identical to
-    // the former Σ-over-empty-frontier-rows semantics (degree is non-null on
-    // exactly the vertices a frontier row could reach).
-    def weighted(df: DataFrame, score: String, deg: String): DataFrame =
-      df.filter(col(deg).isNotNull).select((col(score) * col(deg)).as("ws"))
-
-    // r6: ZERO driver actions per half-step — each half-step's L1
-    // normalizer (Σ score·degree of the previous state) becomes an in-plan
-    // one-row aggregate attached by a broadcast hash join on a degenerate
-    // non-foldable key (prIterLaid's deferral); `coalesce(Σ, 1.0)` keeps
-    // the former ifEmpty semantics. Division order is unchanged — only the
-    // e7-absorbed summation order of the normalizer itself moves.
-    def normOf(df: DataFrame, score: String, deg: String): DataFrame =
-      weighted(df, score, deg).agg(sum(col("ws")).as("nrm"))
-        .select(coalesce(col("nrm"), lit(1.0)).as("nrm"))
-    // eager state beyond the crossover — see prIterLaid (r6 review fix)
-    val eagerState = nV > broadcastMaxRows
-    val inter = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var h = vertsOut
-      .select(col("vid"), lit(1.0).as("h"), col("outDeg"))
-      .localCheckpoint(false)
-    inter += h
-    var a = h.select(col("vid"), col("h").as("a")) // overwritten in iteration 1
-    for (_ <- 1 to k) {
-      val aNorm = normOf(h, "h", "outDeg")
-      val ar = e.join(pin(h.select(col("vid"), col("h"))), e("src") === col("vid"))
-        .groupBy(e("dst").as("dvid")).agg(sum(col("h")).as("s"))
-      val nextA = GraphOps.attachScalar(
-          vertsIn.join(pin(ar), col("vid") === ar("dvid"), "left"),
-          col("vid"), aNorm, col("nrm"))
-        .select(col("vid"), (coalesce(col("s"), lit(0.0)) / col("nrm")).as("a"),
-          col("inDeg"))
-      val matA = nextA.localCheckpoint(eagerState)
-      inter += matA
-      val hNorm = normOf(matA, "a", "inDeg")
-      val hr = e.join(pin(matA.select(col("vid"), col("a"))), e("dst") === col("vid"))
-        .groupBy(e("src").as("svid")).agg(sum(col("a")).as("s"))
-      val nextH = GraphOps.attachScalar(
-          vertsOut.join(pin(hr), col("vid") === hr("svid"), "left"),
-          col("vid"), hNorm, col("nrm"))
-        .select(col("vid"), (coalesce(col("s"), lit(0.0)) / col("nrm")).as("h"),
-          col("outDeg"))
-      val matH = nextH.localCheckpoint(eagerState)
-      inter += matH
-      h = matH
-      a = matA
-    }
-    val out = a.join(h, Seq("vid"))
-      .select(col("vid"),
-        floor(col("a") * lit(1.0e7) + lit(0.500001)).cast("long").as(s"auth${k}e7"),
-        floor(col("h") * lit(1.0e7) + lit(0.500001)).cast("long").as(s"hub${k}e7"))
-      .localCheckpoint(true)
-    inter.foreach(GraphOps.freeCheckpoint)
-    e.unpersist(false); vertsOut.unpersist(false); vertsIn.unpersist(false)
-    out
-  }
+  private[graft] def hitsIterLaid(laid: Laid, k: Int,
+                                  broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame =
+    linkAnalysis(laid, k, broadcastMaxRows, salsa = false, "auth", "hub")
 
   /**
    * Exactly k SALSA iterations (Lempel & Moran, "The stochastic approach
@@ -486,60 +294,53 @@ object DocGraph {
    * with each contribution divided by the SENDER's degree —
    * a(v) = Σ_{u→v} h(u)/outdeg(u), h(u) = Σ_{u→v} a(v)/indeg(v). The
    * per-edge division makes each half-step a stochastic matrix multiply,
-   * so L1 mass is conserved over the non-dangling set and NO normalizer
-   * aggregate is needed: unlike [[hitsIterEdges]] the loop runs ZERO
-   * driver actions per round — a pure lazy-checkpoint chain materialized
-   * by the consumer (bfsIter's discipline). e7 floor pins FP summation
-   * order like every double-valued driver here.
+   * so L1 mass is conserved over the non-dangling set and no normalizer is
+   * needed. e7 floor pins FP summation order like every double-valued
+   * driver here.
    */
   def salsaIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
-    salsaIterCore(spark, linkAnalysisLaid(spark, laidDirected(spark, sfDir)), k)
+    salsaIterLaid(laidDirected(spark, sfDir), k)
 
-  private[graft] def salsaIterEdges(spark: SparkSession, edges0: DataFrame, k: Int,
-                                    broadcastMaxRows: Long = 500000L): DataFrame =
-    salsaIterCore(spark, linkAnalysisLayout(spark, edges0), k, broadcastMaxRows)
+  private[graft] def salsaIterLaid(laid: Laid, k: Int,
+                                   broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame =
+    linkAnalysis(laid, k, broadcastMaxRows, salsa = true, "salsa_a", "salsa_h")
 
-  private def salsaIterCore(spark: SparkSession,
-                            layout: (DataFrame, DataFrame, DataFrame, Long), k: Int,
-                            broadcastMaxRows: Long = 500000L): DataFrame = {
-    require(k >= 1, s"k=$k")
-    val (e, vertsOut, vertsIn, nV) = layout
-    def pin(df: DataFrame): DataFrame =
-      if (nV <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
-    val inter = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var h = vertsOut.select(col("vid"), lit(1.0).as("h"), col("outDeg"))
-      .localCheckpoint(false)
-    inter += h
-    var a: DataFrame = null
-    for (_ <- 1 to k) {
-      val ca = e.join(
-          pin(h.filter(col("outDeg").isNotNull)
-            .select(col("vid"), (col("h") / col("outDeg")).as("c"))),
-          e("src") === col("vid"))
-        .groupBy(e("dst").as("dvid")).agg(sum(col("c")).as("s"))
-      a = vertsIn.join(pin(ca), col("vid") === col("dvid"), "left")
-        .select(col("vid"), coalesce(col("s"), lit(0.0)).as("a"), col("inDeg"))
-        .localCheckpoint(false)
-      inter += a
-      val ch = e.join(
-          pin(a.filter(col("inDeg").isNotNull)
-            .select(col("vid"), (col("a") / col("inDeg")).as("c"))),
-          e("dst") === col("vid"))
-        .groupBy(e("src").as("svid")).agg(sum(col("c")).as("s"))
-      h = vertsOut.join(pin(ch), col("vid") === col("svid"), "left")
-        .select(col("vid"), coalesce(col("s"), lit(0.0)).as("h"), col("outDeg"))
-        .localCheckpoint(false)
-      inter += h
+  /**
+   * HITS and SALSA as 2k half-steps over one state (vid, h, a, outDeg,
+   * inDeg), both scores starting at 1: an odd half-step sets the
+   * authorities from the hubs along the edges, an even one the hubs from
+   * the authorities against them. SALSA divides each message by the
+   * sender's degree. HITS divides each half-step by its L1 normalizer, which
+   * is derivable from the previous state — Σ_{(u→v)} h(u) = Σ_u h(u)·out(u)
+   * and Σ_{(u→v)} a(v) = Σ_v a(v)·in(v) — and is attached in-plan; 1 on an
+   * edgeless graph keeps the all-zero scores zero instead of NaN.
+   */
+  private def linkAnalysis(laid: Laid, k: Int, broadcastMaxRows: Long, salsa: Boolean,
+                           aName: String, hName: String): DataFrame = {
+    val g = Superstep(laid, broadcastMaxRows)
+    val e = g.edges
+    val init = g.vertices.join(GraphOps.outDegrees(e), Seq("vid"), "left")
+      .join(GraphOps.inDegrees(e), Seq("vid"), "left")
+      .select(col("vid"), lit(1.0).as("h"), lit(1.0).as("a"), col("outDeg"), col("inDeg"))
+    val out = (st: DataFrame) =>
+      st.select(col("vid"), e7(col("a")).as(s"$aName${k}e7"), e7(col("h")).as(s"$hName${k}e7"))
+    g.fixedK(init, 2 * k, scalar = !salsa, out = out) { (st, i) =>
+      val (from, deg, to, at, nb) =
+        if (i % 2 == 1) ("h", "outDeg", "a", e("src"), e("dst"))
+        else ("a", "inDeg", "h", e("dst"), e("src"))
+      val live = st.filter(col(deg).isNotNull)
+      val msg = if (salsa) col(from) / col(deg) else col(from)
+      val sums = e.join(g.pin(live.select(col("vid"), msg.as("c"))), at === col("vid"))
+        .groupBy(nb.as("nb")).agg(sum(col("c")).as("s"))
+      val joined = st.join(g.pin(sums), st("vid") === sums("nb"), "left")
+      val got = coalesce(col("s"), lit(0.0))
+      if (salsa) joined.withColumn(to, got)
+      else {
+        val nrm = live.agg(sum(col(from) * col(deg)).as("nrm"))
+          .select(coalesce(col("nrm"), lit(1.0)).as("nrm"))
+        GraphOps.attachScalar(joined, st("vid"), nrm, col("nrm")).withColumn(to, got / col("nrm"))
+      }
     }
-    val out = a.select(col("vid"), col("a"))
-      .join(h.select(col("vid"), col("h")), Seq("vid"))
-      .select(col("vid"),
-        floor(col("a") * lit(1.0e7) + lit(0.500001)).cast("long").as(s"salsa_a${k}e7"),
-        floor(col("h") * lit(1.0e7) + lit(0.500001)).cast("long").as(s"salsa_h${k}e7"))
-      .localCheckpoint(true)
-    inter.foreach(GraphOps.freeCheckpoint)
-    e.unpersist(false); vertsOut.unpersist(false); vertsIn.unpersist(false)
-    out
   }
 
   /** Oracle SQL for exactly k SALSA iterations (see [[salsaIter]]). */
@@ -601,60 +402,29 @@ object DocGraph {
    * report -1 (a NULL-free sentinel for the driver's hash compare).
    */
   def bfsIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
-    bfsIterLaid(spark, laidDirected(spark, sfDir), k)
+    bfsIterLaid(laidDirected(spark, sfDir), k)
 
-  /**
-   * [[bfsIter]] core on an explicit edge table. BFS needs NO per-superstep
-   * driver scalar (unlike PageRank/PPR/HITS), so the per-superstep
-   * checkpoint is LAZY: `localCheckpoint(false)` truncates the logical plan
-   * immediately (the self-referencing union would otherwise double it each
-   * round — 2^k analysis cost), while execution defers to the caller's ONE
-   * materializing action, which computes and caches the whole k-superstep
-   * chain as a single multi-stage job. Zero driver actions per extra
-   * superstep (JobCountSpec pins the delta at the frontier-agnostic
-   * fixed-k cost); the edge table is laid out and cached once so the single
-   * job reads the scan once, not k times.
-   */
-  private[graft] def bfsIterEdges(spark: SparkSession, edges0: DataFrame, k: Int,
-                                  broadcastMaxRows: Long = 500000L): DataFrame =
-    bfsIterLaid(spark, GraphOps.layoutForIteration(
-      edges0.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst")),
-      confParts(spark)), k, broadcastMaxRows)
+  private[graft] def bfsIterLaid(laid: Laid, k: Int,
+                                 broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame =
+    relax(laid, k, broadcastMaxRows, lit(1L), s"dist$k")
 
-  private def bfsIterLaid(spark: SparkSession, laid: (DataFrame, Long, Int), k: Int,
-      broadcastMaxRows: Long = 500000L): DataFrame = {
-    val (e, nE, parts) = laid
-    val verts = GraphOps.vertices(e).repartition(parts, col("vid"))
-    // the dist side is always the FULL vertex set (not a shrinking frontier):
-    // broadcasting it per superstep is the scale anti-pattern, so beyond the
-    // crossover it stays shuffle-hash-pinned against the src-partitioned
-    // cached edges; below the crossover (laid |E| is a real size stat the
-    // former blanket pin lacked) the broadcast is cheap and removes the
-    // per-superstep state exchange (r6, see matchIterLaid)
-    def pin(df: DataFrame): DataFrame =
-      if (nE <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
-    val inter = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var dist = verts.select(col("vid"),
+  /** k min-plus relaxation supersteps from the vid%100 seeds along directed
+    * edges weighted `w` (an expression over src and dst); unreached
+    * vertices report -1. */
+  private def relax(laid: Laid, k: Int, broadcastMaxRows: Long, w: Column,
+                    name: String): DataFrame = {
+    val g = Superstep(laid, broadcastMaxRows)
+    val e = g.edges
+    val init = g.vertices.select(col("vid"),
       when(col("vid") % 100 === 0, lit(0L)).otherwise(lit(null).cast("long")).as("d"))
-      .localCheckpoint(false)
-    inter += dist
-    for (_ <- 1 to k) {
-      val msgs = e.join(pin(dist), e("src") === dist("vid"))
-        .filter(col("d").isNotNull)
-        .select(e("dst").as("vid"), (col("d") + 1L).as("d"))
-      dist = msgs.unionByName(dist.select(col("vid"), col("d")))
-        .groupBy("vid").agg(min(col("d")).as("d"))
-        .localCheckpoint(false)
-      inter += dist
+    g.fixedK(init, k, out = _.select(col("vid"), coalesce(col("d"), lit(-1L)).as(name))) {
+      (dist, _) =>
+        e.join(g.pin(dist), e("src") === dist("vid"))
+          .filter(col("d").isNotNull)
+          .select(e("dst").as("vid"), (col("d") + w).as("d"))
+          .unionByName(dist)
+          .groupBy("vid").agg(min(col("d")).as("d"))
     }
-    // the ONE materializing action for the whole chain; then free the k
-    // intermediate checkpoint block sets and the edge cache — the result is
-    // independent of them after the eager checkpoint
-    val out = dist.select(col("vid"), coalesce(col("d"), lit(-1L)).as(s"dist$k"))
-      .localCheckpoint(true)
-    inter.foreach(GraphOps.freeCheckpoint)
-    e.unpersist(false)
-    out
   }
 
   /** Oracle SQL for exactly k multi-source BFS supersteps (see [[bfsIter]]). */
@@ -685,50 +455,13 @@ object DocGraph {
    * The min-plus semiring generalizes [[bfsIter]]'s hop count (w ≡ 1);
    * after k supersteps dist(v) is exact over all ≤k-edge paths. Exact
    * integers; unreached vertices report -1.
-   *
-   * Same scale shape as BFS: no per-superstep driver scalar, lazy
-   * localCheckpoint chain truncates the self-union's plan growth, ONE
-   * materializing action for the whole chain, edge table laid out and
-   * cached once (JobCountSpec pins zero extra driver actions per
-   * superstep).
    */
   def ssspIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
-    ssspIterLaid(spark, laidDirected(spark, sfDir), k)
+    ssspIterLaid(laidDirected(spark, sfDir), k)
 
-  private[graft] def ssspIterEdges(spark: SparkSession, edges0: DataFrame, k: Int,
-                                   broadcastMaxRows: Long = 500000L): DataFrame =
-    ssspIterLaid(spark, GraphOps.layoutForIteration(
-      edges0.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst")),
-      confParts(spark)), k, broadcastMaxRows)
-
-  private def ssspIterLaid(spark: SparkSession, laid: (DataFrame, Long, Int), k: Int,
-      broadcastMaxRows: Long = 500000L): DataFrame = {
-    val (e, nE, parts) = laid
-    val verts = GraphOps.vertices(e).repartition(parts, col("vid"))
-    // r6 crossover pin sized from the laid |E| (see matchIterLaid)
-    def pin(df: DataFrame): DataFrame =
-      if (nE <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
-    val inter = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var dist = verts.select(col("vid"),
-      when(col("vid") % 100 === 0, lit(0L)).otherwise(lit(null).cast("long")).as("d"))
-      .localCheckpoint(false)
-    inter += dist
-    for (_ <- 1 to k) {
-      val msgs = e.join(pin(dist), e("src") === dist("vid"))
-        .filter(col("d").isNotNull)
-        .select(e("dst").as("vid"),
-          (col("d") + (e("src") + e("dst")) % 5L + 1L).as("d"))
-      dist = msgs.unionByName(dist.select(col("vid"), col("d")))
-        .groupBy("vid").agg(min(col("d")).as("d"))
-        .localCheckpoint(false)
-      inter += dist
-    }
-    val out = dist.select(col("vid"), coalesce(col("d"), lit(-1L)).as(s"sdist$k"))
-      .localCheckpoint(true)
-    inter.foreach(GraphOps.freeCheckpoint)
-    e.unpersist(false)
-    out
-  }
+  private[graft] def ssspIterLaid(laid: Laid, k: Int,
+                                  broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame =
+    relax(laid, k, broadcastMaxRows, (col("src") + col("dst")) % 5L + 1L, s"sdist$k")
 
   /** Oracle SQL for exactly k weighted Bellman-Ford supersteps (see [[ssspIter]]). */
   def ssspIterSql(k: Int): String = {
@@ -757,8 +490,7 @@ object DocGraph {
    * katz_k(v)·8^k = Σ_{i=1..k} walks_i(v) · 8^{k-i}, where walks_i(v) is
    * the number of directed length-i walks ending at v. Computed by the
    * recurrence acc_i = 8·acc_{i-1} + w_i with w_i(v) = Σ_{u→v} w_{i-1}(u),
-   * w_0 ≡ 1 — one edges⋈state join + aggregate per superstep, zero driver
-   * actions (lazy chain like [[bfsIter]]).
+   * w_0 ≡ 1 — one edges⋈state join + aggregate per superstep.
    *
    * Overflow envelope: walks_i ≤ (max in-degree)^i, so at k = 3 a vertex
    * fed by three consecutive 10⁶-degree hubs reaches ~10¹⁸ — the BIGINT
@@ -767,40 +499,22 @@ object DocGraph {
    * [[graft.operators.Neighborhood.harmonic]] vs hyperBall).
    */
   def katzIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
-    katzIterLaid(spark, laidDirected(spark, sfDir), k)
+    katzIterLaid(laidDirected(spark, sfDir), k)
 
-  private[graft] def katzIterEdges(spark: SparkSession, edges0: DataFrame, k: Int,
-                                   broadcastMaxRows: Long = 500000L): DataFrame =
-    katzIterLaid(spark, GraphOps.layoutForIteration(
-      edges0.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst")),
-      confParts(spark)), k, broadcastMaxRows)
-
-  private def katzIterLaid(spark: SparkSession, laid: (DataFrame, Long, Int), k: Int,
-      broadcastMaxRows: Long = 500000L): DataFrame = {
-    val (e, nE, parts) = laid
-    val verts = GraphOps.vertices(e).repartition(parts, col("vid"))
-    // r6 crossover pin sized from the laid |E| (see matchIterLaid)
-    def pin(df: DataFrame): DataFrame =
-      if (nE <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
-    val inter = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var st = verts.select(col("vid"), lit(1L).as("w"), lit(0L).as("acc"))
-      .localCheckpoint(false)
-    inter += st
-    for (_ <- 1 to k) {
-      val msgs = e.join(pin(st), e("src") === st("vid"))
+  private[graft] def katzIterLaid(laid: Laid, k: Int,
+                                  broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
+    val g = Superstep(laid, broadcastMaxRows)
+    val e = g.edges
+    g.fixedK(g.vertices.select(col("vid"), lit(1L).as("w"), lit(0L).as("acc")), k,
+        out = _.select(col("vid"), col("acc").as(s"katz${k}s"))) { (st, _) =>
+      val msgs = e.join(g.pin(st), e("src") === st("vid"))
         .select(e("dst").as("vid"), col("w"))
         .groupBy("vid").agg(sum(col("w")).as("wn"))
-      st = st.join(pin(msgs), Seq("vid"), "left")
+      st.join(g.pin(msgs), Seq("vid"), "left")
         .select(col("vid"),
           coalesce(col("wn"), lit(0L)).as("w"),
           (col("acc") * 8L + coalesce(col("wn"), lit(0L))).as("acc"))
-        .localCheckpoint(false)
-      inter += st
     }
-    val out = st.select(col("vid"), col("acc").as(s"katz${k}s")).localCheckpoint(true)
-    inter.foreach(GraphOps.freeCheckpoint)
-    e.unpersist(false)
-    out
   }
 
   /** Oracle SQL for k truncated-Katz supersteps (see [[katzIter]]). */
@@ -828,8 +542,26 @@ object DocGraph {
     * bijection on [0, P) — priorities are UNIQUE for vid < P (doc-graph vids
     * are doc ids < |docs|, far inside), and min() needs no tie-break. */
   private val MisPrime = 1000000007L
-  private def misPri(v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private def misPri(v: Column): Column =
     (v * lit(2654435761L) + lit(17L)) % lit(MisPrime)
+
+  /** Luby state over `g`'s symmetric edges: (vid, priority, c = 0 active). */
+  private def lubyInit(g: Superstep): DataFrame =
+    g.vertices.select(col("vid"), misPri(col("vid")).as("pri"), lit(0L).as("c"))
+
+  /** One Luby round's winners (vid, w = 1): the active vertices (c = 0)
+    * whose priority beats every active neighbour's. */
+  private def lubyWinners(g: Superstep, st: DataFrame): DataFrame = {
+    val e = g.edges
+    val act = st.filter(col("c") === 0L)
+    // sym edges: the src side carries the neighbour's priority to dst
+    val nm = e.join(g.pin(act), e("src") === act("vid"))
+      .select(e("dst").as("vid"), col("pri"))
+      .groupBy("vid").agg(min(col("pri")).as("nm"))
+    act.join(g.pin(nm), Seq("vid"), "left")
+      .filter(col("pri") < coalesce(col("nm"), lit(Long.MaxValue)))
+      .select(col("vid"), lit(1L).as("w"))
+  }
 
   /**
    * Exactly k rounds of Luby's maximal-independent-set algorithm (Luby,
@@ -842,63 +574,31 @@ object DocGraph {
    * round — O(log n) rounds to empty whp).
    *
    * Output: (vid, mis_st) with 1 = in MIS, 2 = removed (dominated by a MIS
-   * neighbor), 0 = still active after k rounds. Same lazy-checkpoint chain
-   * as [[bfsIterEdges]]: zero driver actions per round, ONE materializing
-   * action for the whole chain.
+   * neighbor), 0 = still active after k rounds.
    *
    * 100 TB shape: each round is two src-keyed hash joins against the cached
    * symmetric edge table plus a groupBy min — the PageRank superstep's
    * shuffle profile, with the message volume shrinking as vertices settle.
    */
   def misIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
-    misIterLaid(spark, laidSym(spark, sfDir), k)
+    misIterLaid(laidSym(spark, sfDir), k)
 
-  private[graft] def misIterEdges(spark: SparkSession, edges0: DataFrame, k: Int,
-                                  broadcastMaxRows: Long = 500000L): DataFrame =
-    misIterLaid(spark, GraphOps.layoutForIteration(GraphOps.symmetrized(
-      edges0.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))),
-      confParts(spark)), k, broadcastMaxRows)
-
-  private def misIterLaid(spark: SparkSession, laid: (DataFrame, Long, Int), k: Int,
-      broadcastMaxRows: Long = 500000L): DataFrame = {
-    val (e, nE, parts) = laid
-    val verts = GraphOps.vertices(e).repartition(parts, col("vid"))
-    // r6 crossover pin sized from the laid |E| (see matchIterLaid)
-    def pin(df: DataFrame): DataFrame =
-      if (nE <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
-    val inter = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var st = verts.select(col("vid"), misPri(col("vid")).as("pri"),
-      lit(0L).as("st")).localCheckpoint(false)
-    inter += st
-    for (_ <- 1 to k) {
-      val act = st.filter(col("st") === 0L)
-      // min active-neighbor priority per vertex (sym edges: src side carries
-      // the neighbor's priority to dst)
-      val nm = e.join(pin(act), e("src") === act("vid"))
-        .select(e("dst").as("vid"), col("pri"))
-        .groupBy("vid").agg(min(col("pri")).as("nm"))
-      val win = act.join(pin(nm), Seq("vid"), "left")
-        .filter(col("pri") < coalesce(col("nm"), lit(Long.MaxValue)))
-        .select(col("vid"))
-      val rm = e.join(pin(win), e("src") === win("vid"))
-        .select(e("dst").as("vid")).distinct()
-      // O(|V|)-state joins stay shuffle-hash-pinned: broadcasting vertex
-      // state per round is the scale anti-pattern (same rationale as BFS)
-      st = st
-        .join(pin(win.withColumn("w", lit(1L))), Seq("vid"), "left")
-        .join(pin(rm.withColumn("r", lit(1L))), Seq("vid"), "left")
+  private[graft] def misIterLaid(laid: Laid, k: Int,
+                                 broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
+    val g = Superstep(laid, broadcastMaxRows)
+    val e = g.edges
+    g.fixedK(lubyInit(g), k, out = _.select(col("vid"), col("c").as("mis_st"))) { (st, _) =>
+      val win = lubyWinners(g, st)
+      val rm = e.join(g.pin(win), e("src") === win("vid"))
+        .select(e("dst").as("vid")).distinct().withColumn("r", lit(1L))
+      st.join(g.pin(win), Seq("vid"), "left")
+        .join(g.pin(rm), Seq("vid"), "left")
         .select(col("vid"), col("pri"),
-          when(col("st") =!= 0L, col("st"))
+          when(col("c") =!= 0L, col("c"))
             .when(col("w").isNotNull, lit(1L))
             .when(col("r").isNotNull, lit(2L))
-            .otherwise(lit(0L)).as("st"))
-        .localCheckpoint(false)
-      inter += st
+            .otherwise(lit(0L)).as("c"))
     }
-    val out = st.select(col("vid"), col("st").as("mis_st")).localCheckpoint(true)
-    inter.foreach(GraphOps.freeCheckpoint)
-    e.unpersist(false)
-    out
   }
 
   /** Oracle SQL for exactly k Luby MIS rounds (see [[misIter]]). */
@@ -942,49 +642,21 @@ object DocGraph {
    * shuffle + one state join per round, volume shrinking as vertices color.
    *
    * Output: (vid, color) with color ∈ [1, k], or 0 = still uncolored after
-   * k rounds. Same lazy-checkpoint chain as [[misIterEdges]]: zero driver
-   * actions per round, ONE materializing action for the whole chain.
+   * k rounds.
    */
   def colorIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
-    colorIterLaid(spark, laidSym(spark, sfDir), k)
+    colorIterLaid(laidSym(spark, sfDir), k)
 
-  private[graft] def colorIterEdges(spark: SparkSession, edges0: DataFrame, k: Int,
-                                    broadcastMaxRows: Long = 500000L): DataFrame =
-    colorIterLaid(spark, GraphOps.layoutForIteration(GraphOps.symmetrized(
-      edges0.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))),
-      confParts(spark)), k, broadcastMaxRows)
-
-  private def colorIterLaid(spark: SparkSession, laid: (DataFrame, Long, Int), k: Int,
-      broadcastMaxRows: Long = 500000L): DataFrame = {
-    val (e, nE, parts) = laid
-    val verts = GraphOps.vertices(e).repartition(parts, col("vid"))
-    // r6 crossover pin sized from the laid |E| (see matchIterLaid)
-    def pin(df: DataFrame): DataFrame =
-      if (nE <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
-    val inter = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var st = verts.select(col("vid"), misPri(col("vid")).as("pri"),
-      lit(0L).as("color")).localCheckpoint(false)
-    inter += st
-    for (i <- 1 to k) {
-      val act = st.filter(col("color") === 0L)
-      val nm = e.join(pin(act), e("src") === act("vid"))
-        .select(e("dst").as("vid"), col("pri"))
-        .groupBy("vid").agg(min(col("pri")).as("nm"))
-      val win = act.join(pin(nm), Seq("vid"), "left")
-        .filter(col("pri") < coalesce(col("nm"), lit(Long.MaxValue)))
-        .select(col("vid"), lit(1L).as("w"))
-      st = st.join(pin(win), Seq("vid"), "left")
+  private[graft] def colorIterLaid(laid: Laid, k: Int,
+                                   broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
+    val g = Superstep(laid, broadcastMaxRows)
+    g.fixedK(lubyInit(g), k, out = _.select(col("vid"), col("c").as("color"))) { (st, i) =>
+      st.join(g.pin(lubyWinners(g, st)), Seq("vid"), "left")
         .select(col("vid"), col("pri"),
-          when(col("color") =!= 0L, col("color"))
+          when(col("c") =!= 0L, col("c"))
             .when(col("w").isNotNull, lit(i.toLong))
-            .otherwise(lit(0L)).as("color"))
-        .localCheckpoint(false)
-      inter += st
+            .otherwise(lit(0L)).as("c"))
     }
-    val out = st.select(col("vid"), col("color")).localCheckpoint(true)
-    inter.foreach(GraphOps.freeCheckpoint)
-    e.unpersist(false)
-    out
   }
 
   /** Oracle SQL for exactly k Luby-coloring rounds (see [[colorIter]]). */
@@ -1017,7 +689,7 @@ object DocGraph {
     * (hp, a, b) — unique because (a, b) is. Engine compares it as a struct
     * min (Spark structs order lexicographically); the oracle replays the
     * same order via row_number() OVER (ORDER BY hp, a, b). */
-  private def edgePri(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+  private def edgePri(a: Column, b: Column) =
     (misPri(a) + (b * lit(40503L) + lit(29L)) % lit(MisPrime)) % lit(MisPrime)
 
   /**
@@ -1032,70 +704,42 @@ object DocGraph {
    * and at fixpoint the matching is maximal. Deterministic, exact-integer.
    *
    * Output: (vid, mate) = matched partner vid, or −1 if unmatched after k
-   * rounds. Same lazy-checkpoint chain as [[misIterEdges]]: zero driver
-   * actions per round, ONE materializing action for the whole chain.
+   * rounds.
    *
    * 100 TB shape: per round, two semi-joins restrict the cached canonical
    * edge set to active×active, one union+groupBy computes the per-vertex
    * incident minimum (message volume = 2·|active edges|, shrinking), two
    * equi-joins select winners. No step is super-linear in |E|; state is
-   * O(|V|) and stays shuffle-hash-pinned like every iterative driver here.
+   * O(|V|).
    */
   def matchIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
-    matchIterLaid(spark, laidUnd(spark, sfDir), k)
+    matchIterLaid(laidUnd(spark, sfDir), k)
 
-  private[graft] def matchIterEdges(spark: SparkSession, edges0: DataFrame, k: Int,
-                                    broadcastMaxRows: Long = 500000L): DataFrame = {
-    val und0 = GraphOps.undirected(
-      edges0.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst")))
-    // layoutForIteration wants (src, dst); partition on the a-side key
-    matchIterLaid(spark, GraphOps.layoutForIteration(
-      und0.select(col("a").as("src"), col("b").as("dst")), confParts(spark)), k,
-      broadcastMaxRows)
-  }
-
-  private def matchIterLaid(spark: SparkSession, laid: (DataFrame, Long, Int), k: Int,
-                            broadcastMaxRows: Long = 500000L): DataFrame = {
-    val (eu, nE, parts) = laid
-    val und = eu.select(col("src").as("a"), col("dst").as("b"))
-    val verts = GraphOps.vertices(eu).repartition(parts, col("vid"))
-    // r6 crossover pin (the house broadcast-or-SHJ rule, sized from the laid
-    // |E|): below the crossover the O(|V|)-state sides broadcast — the former
-    // blanket shuffle_hash pin re-shuffled them per round (the measured
-    // anti-pattern that once cost q_lp 3x); beyond it (state too big to
-    // ship) the co-partitioned SHJ path is unchanged and the pin is inert.
-    def pin(df: DataFrame): DataFrame =
-      if (nE <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
-    val inter = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var st = verts.select(col("vid"), lit(null).cast("long").as("mate"))
-      .localCheckpoint(false)
-    inter += st
-    for (_ <- 1 to k) {
+  /** [[matchIter]] over canonical pairs laid as (src, dst) = (a, b), a < b. */
+  private[graft] def matchIterLaid(laid: Laid, k: Int,
+                                   broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
+    val g = Superstep(laid, broadcastMaxRows)
+    val und = g.edges.select(col("src").as("a"), col("dst").as("b"))
+    g.fixedK(g.vertices.select(col("vid"), lit(null).cast("long").as("mate")), k,
+        out = _.select(col("vid"), coalesce(col("mate"), lit(-1L)).as(s"mate$k"))) { (st, _) =>
       val act = st.filter(col("mate").isNull).select(col("vid"))
       val ae = und
-        .join(pin(act.select(col("vid").as("a"))), Seq("a"), "left_semi")
-        .join(pin(act.select(col("vid").as("b"))), Seq("b"), "left_semi")
+        .join(g.pin(act.select(col("vid").as("a"))), Seq("a"), "left_semi")
+        .join(g.pin(act.select(col("vid").as("b"))), Seq("b"), "left_semi")
         .withColumn("pr", struct(edgePri(col("a"), col("b")).as("hp"),
           col("a").as("pa"), col("b").as("pb")))
       val vm = ae.select(col("a").as("vid"), col("pr"))
         .unionByName(ae.select(col("b").as("vid"), col("pr")))
         .groupBy("vid").agg(min(col("pr")).as("mp"))
       val win = ae
-        .join(pin(vm.select(col("vid").as("a"), col("mp").as("mpa"))), Seq("a"))
-        .join(pin(vm.select(col("vid").as("b"), col("mp").as("mpb"))), Seq("b"))
+        .join(g.pin(vm.select(col("vid").as("a"), col("mp").as("mpa"))), Seq("a"))
+        .join(g.pin(vm.select(col("vid").as("b"), col("mp").as("mpb"))), Seq("b"))
         .filter(col("pr") === col("mpa") && col("pr") === col("mpb"))
       val newm = win.select(col("a").as("vid"), col("b").as("m2"))
         .unionByName(win.select(col("b").as("vid"), col("a").as("m2")))
-      st = st.join(pin(newm), Seq("vid"), "left")
+      st.join(g.pin(newm), Seq("vid"), "left")
         .select(col("vid"), coalesce(col("mate"), col("m2")).as("mate"))
-        .localCheckpoint(false)
-      inter += st
     }
-    val out = st.select(col("vid"), coalesce(col("mate"), lit(-1L)).as(s"mate$k"))
-      .localCheckpoint(true)
-    inter.foreach(GraphOps.freeCheckpoint)
-    eu.unpersist(false)
-    out
   }
 
   /** Oracle SQL for exactly k greedy maximal-matching rounds (see [[matchIter]]). */
@@ -1139,8 +783,7 @@ object DocGraph {
    * both and a hub vertex's rows spread across |L| keys. State volume is
    * O(|V|·|L|) worst case — the landmark-count knob is the scale envelope,
    * stated here rather than discovered: |L| = |V|/97 keeps the sketch a
-   * constant factor of the vertex table. Same lazy-checkpoint chain as BFS
-   * (zero driver actions per superstep, ONE materializing action).
+   * constant factor of the vertex table.
    *
    * Output per vertex (exact integers, −1/0 sentinels — no NULLs in the
    * hash): n_lm = landmarks reached within k hops, sum_d = Σ distances to
@@ -1149,44 +792,29 @@ object DocGraph {
    * distance vid→landmark.
    */
   def landmarkIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
-    landmarkIterLaid(spark, laidReversed(spark, sfDir), k)
+    landmarkIterLaid(laidReversed(spark, sfDir), k)
 
-  private[graft] def landmarkIterEdges(spark: SparkSession, edges0: DataFrame, k: Int,
-                                       broadcastMaxRows: Long = 500000L): DataFrame =
-    landmarkIterLaid(spark, GraphOps.layoutForIteration(
-      edges0.select(col("dst").cast("long").as("src"), col("src").cast("long").as("dst")),
-      confParts(spark)), k, broadcastMaxRows)
-
-  private def landmarkIterLaid(spark: SparkSession, laid: (DataFrame, Long, Int), k: Int,
-      broadcastMaxRows: Long = 500000L): DataFrame = {
-    val (e, nE, parts) = laid
-    val verts = GraphOps.vertices(e).repartition(parts, col("vid"))
-    // r6 crossover pin sized from the laid |E| (see matchIterLaid)
-    def pin(df: DataFrame): DataFrame =
-      if (nE <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
-    val inter = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var dist = verts.filter(col("vid") % 97 === 0)
+  /** [[landmarkIter]] over REVERSED edges laid for iteration. */
+  private[graft] def landmarkIterLaid(laid: Laid, k: Int,
+                                      broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
+    val g = Superstep(laid, broadcastMaxRows)
+    val e = g.edges
+    val init = g.vertices.filter(col("vid") % 97 === 0)
       .select(col("vid"), col("vid").as("seed"), lit(0L).as("d"))
-      .localCheckpoint(false)
-    inter += dist
-    for (_ <- 1 to k) {
-      val msgs = e.join(pin(dist), e("src") === dist("vid"))
-        .select(e("dst").as("vid"), dist("seed"), (col("d") + 1L).as("d"))
-      dist = msgs.unionByName(dist.select(col("vid"), col("seed"), col("d")))
-        .groupBy("vid", "seed").agg(min(col("d")).as("d"))
-        .localCheckpoint(false)
-      inter += dist
+    def sketch(dist: DataFrame): DataFrame = {
+      val sk = dist.groupBy("vid").agg(count(lit(1)).as("n_lm"),
+        sum(col("d")).as("sum_d"), min(col("d")).as("min_d"))
+      g.vertices.join(sk, Seq("vid"), "left")
+        .select(col("vid"), coalesce(col("n_lm"), lit(0L)).as("n_lm"),
+          coalesce(col("sum_d"), lit(-1L)).as("sum_d"),
+          coalesce(col("min_d"), lit(-1L)).as("min_d"))
     }
-    val sk = dist.groupBy("vid").agg(count(lit(1)).as("n_lm"),
-      sum(col("d")).as("sum_d"), min(col("d")).as("min_d"))
-    val out = verts.join(sk, Seq("vid"), "left")
-      .select(col("vid"), coalesce(col("n_lm"), lit(0L)).as("n_lm"),
-        coalesce(col("sum_d"), lit(-1L)).as("sum_d"),
-        coalesce(col("min_d"), lit(-1L)).as("min_d"))
-      .localCheckpoint(true)
-    inter.foreach(GraphOps.freeCheckpoint)
-    e.unpersist(false)
-    out
+    g.fixedK(init, k, out = sketch) { (dist, _) =>
+      e.join(g.pin(dist), e("src") === dist("vid"))
+        .select(e("dst").as("vid"), dist("seed"), (col("d") + 1L).as("d"))
+        .unionByName(dist)
+        .groupBy("vid", "seed").agg(min(col("d")).as("d"))
+    }
   }
 
   /** Oracle SQL for exactly k landmark-sketch supersteps (see [[landmarkIter]]).
@@ -1220,52 +848,25 @@ object DocGraph {
    * rounds this is the exact K-core; the fixed round count keeps an exact
    * chained-CTE oracle (same fixed-k discipline as [[prIter]]). Output:
    * (vid, deg) for v ∈ S_rounds, deg being its degree within S_{rounds-1}
-   * (the value the final selection used) — exact integers.
+   * (the value the final selection used) — exact integers. A round is two
+   * semi-joins against the cached symmetric edges plus one degree aggregate.
    */
   def kcoreIter(spark: SparkSession, sfDir: String, kCore: Int, rounds: Int): DataFrame =
-    kcoreIterLaid(spark, laidSym(spark, sfDir), kCore, rounds)
+    kcoreIterLaid(laidSym(spark, sfDir), kCore, rounds)
 
-  /** [[kcoreIter]] core on an explicit edge table. Like BFS, peeling needs
-    * no per-round driver scalar, so rounds chain LAZY checkpoints (plan
-    * truncated each round, 2^r analysis blowup avoided) and ONE closing
-    * action materializes the chain; per-round cost is two semi-joins against
-    * the src-partitioned cached symmetric edges + one degree aggregate. */
-  private[graft] def kcoreIterEdges(spark: SparkSession, edges0: DataFrame,
-                                    kCore: Int, rounds: Int,
-                                    broadcastMaxRows: Long = 500000L): DataFrame =
-    kcoreIterLaid(spark, GraphOps.layoutForIteration(
-      GraphOps.symmetrized(edges0.select(
-        col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))),
-      confParts(spark)), kCore, rounds, broadcastMaxRows)
-
-  private def kcoreIterLaid(spark: SparkSession, laid: (DataFrame, Long, Int),
-                            kCore: Int, rounds: Int,
-                            broadcastMaxRows: Long = 500000L): DataFrame = {
+  private[graft] def kcoreIterLaid(laid: Laid, kCore: Int, rounds: Int,
+                                   broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
     require(rounds >= 1, "need at least one peel round")
-    val (sym, nE, parts) = laid
-    // r6 crossover pin sized from the laid |E| (see matchIterLaid)
-    def pin(df: DataFrame): DataFrame =
-      if (nE <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
-    val inter = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var surv = GraphOps.vertices(sym).repartition(parts, col("vid"))
-      .localCheckpoint(false)
-    inter += surv
-    var deg: DataFrame = null
-    for (_ <- 1 to rounds) {
-      val alive = sym
-        .join(pin(surv), sym("src") === surv("vid"), "left_semi")
-        .join(pin(surv.withColumnRenamed("vid", "v2")),
-          col("dst") === col("v2"), "left_semi")
-      deg = alive.groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= kCore)
-        .localCheckpoint(false)
-      inter += deg
-      surv = deg.select("vid")
+    val g = Superstep(laid, broadcastMaxRows)
+    val sym = g.edges
+    g.fixedK(g.vertices.select(col("vid"), lit(null).cast("long").as("deg")), rounds) {
+      (st, _) =>
+        val surv = st.select(col("vid"))
+        sym.join(g.pin(surv), sym("src") === surv("vid"), "left_semi")
+          .join(g.pin(surv.withColumnRenamed("vid", "v2")), col("dst") === col("v2"), "left_semi")
+          .groupBy(col("src").as("vid")).agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= kCore)
     }
-    val out = deg.localCheckpoint(true) // the one materializing action
-    inter.foreach(GraphOps.freeCheckpoint)
-    sym.unpersist(false)
-    out
   }
 
   /** Oracle SQL for exactly `rounds` K-core peel rounds (see [[kcoreIter]]). */
@@ -1290,71 +891,22 @@ object DocGraph {
    * r(u)·w(u,v)/S(u), S(u) = Σ_x w(u,x) the out-strength. Dangling mass and
    * damping exactly as [[prIter]]; per-edge arithmetic is written
    * (r·w)/S in BOTH engines so even the floating-point op order matches;
-   * the e7 floor pins the output. One job per superstep (PageRank.run's
-   * closing-aggregate pattern — Σ transmitted = Σ r over non-dangling holds
-   * because Σ_v w(u,v)/S(u) = 1 exactly as in the unweighted case).
+   * the e7 floor pins the output. Σ transmitted = Σ r over non-dangling
+   * holds because Σ_v w(u,v)/S(u) = 1 exactly as in the unweighted case.
    */
   def wprIter(spark: SparkSession, sfDir: String, k: Int,
               d: Double = 0.85): DataFrame =
-    wprIterLaid(spark, laidDirected(spark, sfDir), k, d)
+    wprIterLaid(laidDirected(spark, sfDir), k, d)
 
-  private[graft] def wprIterEdges(spark: SparkSession, edges0: DataFrame, k: Int,
-                                  d: Double = 0.85,
-                                  broadcastMaxRows: Long = 500000L): DataFrame =
-    wprIterLaid(spark, GraphOps.layoutForIteration(
-      edges0.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst")),
-      confParts(spark)), k, d, broadcastMaxRows)
-
-  private def wprIterLaid(spark: SparkSession, laid: (DataFrame, Long, Int), k: Int,
-                          d: Double = 0.85,
-                          broadcastMaxRows: Long = 500000L): DataFrame = {
-    val (e0, _, parts) = laid
-    val e = e0.withColumn("w", (col("src") + col("dst")) % 5L + 1L)
-    val outS = e.groupBy(col("src").as("vid")).agg(sum(col("w")).as("outS"))
-      .repartition(parts, col("vid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val verts = GraphOps.vertices(e0).repartition(parts, col("vid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nV = verts.count()
-    require(nV > 0, "empty graph")
-    def pin(df: DataFrame): DataFrame =
-      if (nV <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
-
-    // r6: ZERO driver actions per superstep — in-plan transmitted-mass
-    // scalar, prIterLaid's deferral (see pprIterLaid for the shape)
-    val inter = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var r = verts.join(outS, Seq("vid"), "left")
-      .select(col("vid"), lit(1.0 / nV).as("r"), col("outS"))
-      .localCheckpoint(false)
-    inter += r
-
-    // eager state beyond the crossover — see prIterLaid (r6 review fix)
-    val eagerState = nV > broadcastMaxRows
-    for (_ <- 1 to k) {
-      val tm = r.filter(col("outS").isNotNull)
-        .agg(sum(col("r")).as("tm"))
-        .select(coalesce(col("tm"), lit(0.0)).as("tm"))
-      val state = r.filter(col("outS").isNotNull)
-        .select(col("vid"), col("r"), col("outS"))
-      val sums = e.join(pin(state), e("src") === state("vid"))
-        .groupBy(e("dst").as("dvid"))
-        .agg(sum(col("r") * col("w") / col("outS")).as("s"))
-      val dmTerm = (lit(d) * (lit(1.0) - col("tm"))) / lit(nV.toDouble)
-      val joined = r.join(pin(sums), r("vid") === sums("dvid"), "left")
-      val next = GraphOps.attachScalar(joined, r("vid"), tm, col("tm"))
-        .select(r("vid"),
-          (lit((1.0 - d) / nV) + dmTerm
-            + lit(d) * coalesce(col("s"), lit(0.0))).as("r"),
-          r("outS"))
-      r = next.localCheckpoint(eagerState)
-      inter += r
-    }
-    val out = r.select(col("vid"),
-      floor(col("r") * lit(1.0e7) + lit(0.500001)).cast("long").as(s"wpr${k}e7"))
-      .localCheckpoint(true)
-    inter.foreach(GraphOps.freeCheckpoint)
-    e0.unpersist(false); outS.unpersist(false); verts.unpersist(false)
-    out
+  private[graft] def wprIterLaid(laid: Laid, k: Int, d: Double = 0.85,
+                                 broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
+    val g = Superstep(laid, broadcastMaxRows)
+    val n = g.nV.toDouble
+    val w = (col("src") + col("dst")) % 5L + 1L
+    massFlow(g, g.edges.groupBy(col("src").as("vid")).agg(sum(w).as("outS")), k,
+      s"wpr${k}e7", lit(1.0 / n),
+      col("r") * w / col("deg"),
+      (tm, s) => lit((1.0 - d) / n) + (lit(d) * (lit(1.0) - tm)) / lit(n) + lit(d) * s)
   }
 
   /** Oracle SQL for exactly k weighted-PageRank supersteps (see [[wprIter]]). */
@@ -1382,19 +934,16 @@ object DocGraph {
     sb.toString
   }
 
-  /** Exactly k HashMin connected-component supersteps (exact integer labels).
-    * r6: reads the one-exchange cached laid symmetric table — the former
-    * inline `symmetrized(edges(…))` subtree appeared k+1 times in the
-    * single-execution plan and paid its own dedup exchanges. */
-  def ccIter(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
-    val (sym, _, _) = laidSym(spark, sfDir)
-    var labels = GraphOps.vertices(sym).select(col("vid"), col("vid").as("label"))
-    for (_ <- 1 to k) {
-      val msgs = sym.join(labels, sym("src") === labels("vid"))
-        .select(sym("dst").as("vid"), labels("label"))
-      labels = msgs.union(labels).groupBy("vid").agg(min(col("label")).as("label"))
-    }
-    labels
+  /** Exactly k HashMin connected-component supersteps (exact integer
+    * labels): [[ConnectedComponents]]'s superstep over the laid symmetric
+    * table. */
+  def ccIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
+    ccIterLaid(laidSym(spark, sfDir), k)
+
+  private[graft] def ccIterLaid(laid: Laid, k: Int): DataFrame = {
+    val g = Superstep(laid)
+    g.fixedK(g.vertices.select(col("vid"), col("vid").as("label")), k)(
+      (st, _) => ConnectedComponents.hashMin(g)(st))
   }
 
   def ccIterSql(k: Int): String = {
@@ -1411,26 +960,15 @@ object DocGraph {
     sb.toString
   }
 
-  /** Engine formula of the PageRank base case is shared with PageRank.run; engine
-    * arithmetic and the oracle SQL agree to <1e-15 per value, pinned by round(,7). */
+  /** Exactly k synchronous label-propagation supersteps:
+    * [[LabelPropagation]]'s superstep over the laid symmetric table. */
+  def lpIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
+    lpIterLaid(laidSym(spark, sfDir), k)
 
-  /** Exactly k synchronous label-propagation supersteps (LabelPropagation
-    * semantics: most frequent neighbor label, ties → smallest label).
-    * r6: laid symmetric table, same rationale as [[ccIter]]. */
-  def lpIter(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
-    val (sym, _, _) = laidSym(spark, sfDir)
-    var labels = GraphOps.vertices(sym).select(col("vid"), col("vid").as("label"))
-    for (_ <- 1 to k) {
-      val nbr = sym.join(labels, sym("src") === labels("vid"))
-        .select(sym("dst").as("vid"), labels("label"))
-      val freq = nbr.groupBy("vid", "label").agg(count(lit(1)).as("cnt"))
-      val winner = freq.groupBy("vid")
-        .agg(max_by(col("label"),
-          struct(col("cnt"), bitwise_not(col("label")).as("nl"))).as("newLabel"))
-      labels = labels.join(winner, Seq("vid"), "left")
-        .select(col("vid"), coalesce(col("newLabel"), col("label")).as("label"))
-    }
-    labels
+  private[graft] def lpIterLaid(laid: Laid, k: Int): DataFrame = {
+    val g = Superstep(laid)
+    g.fixedK(g.vertices.select(col("vid"), col("vid").as("label")), k)(
+      (st, _) => LabelPropagation.vote(g)(st))
   }
 
   def lpIterSql(k: Int): String = {

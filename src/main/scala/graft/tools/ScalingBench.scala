@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-import graft.graph.{CsrPageRank, PageRank, PageRankConfig}
+import graft.graph.{PageRank, PageRankConfig}
 import graft.sources.PageSynth
 
 /**
@@ -56,8 +56,8 @@ object ScalingBench {
 
     val strategy = sys.env.getOrElse("SPARK_GRAFT_JOIN", "auto")
     val repeats  = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
-    // engine: "sql" = Catalyst superstep (default), "csr" = §4.4 packed-CSR,
-    // "cpu" = shuffle-free compute-bound control leg (see cpuLeg)
+    // engine: "sql" = Catalyst superstep (default), "cpu" = shuffle-free
+    // compute-bound control leg (see cpuLeg)
     val engine   = sys.env.getOrElse("SPARK_GRAFT_ENGINE", "sql")
     if (engine == "cpu") { cpuLeg(spark, cores, nPages, repeats); spark.stop(); return }
     val cfg = PageRankConfig(eps = 0.0, maxIter = iters, ckptEvery = 0,
@@ -65,11 +65,8 @@ object ScalingBench {
     val edges  = PageSynth.edgeList(spark, nPages, numPartitions = cores)
     val nEdges = edges.count()
 
-    def onePass(maxIter: Int): Seq[graft.graph.IterMetrics] = engine match {
-      case "csr" => CsrPageRank.run(spark, edges.toDF(),
-        eps = 0.0, maxIter = maxIter, numPartitions = cores).metrics
-      case _ => PageRank.run(spark, edges.toDF(), cfg.copy(maxIter = maxIter)).metrics
-    }
+    def onePass(maxIter: Int): Seq[graft.graph.IterMetrics] =
+      PageRank.run(spark, edges.toDF(), cfg.copy(maxIter = maxIter)).metrics
     onePass(2) // warm-up
 
     def loadavg(): Double =

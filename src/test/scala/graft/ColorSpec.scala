@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.graph.GraphOps
 import graft.operators.DocGraph
 
 /**
@@ -46,7 +47,7 @@ class ColorSpec extends SparkSpec {
 
   private def engine(k: Int): Map[Long, Long] = {
     val e = rawEdges.toDF("src", "dst")
-    DocGraph.colorIterEdges(spark, e, k)
+    DocGraph.colorIterLaid(DocGraph.lay(spark, e, GraphOps.symmetrized), k)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 

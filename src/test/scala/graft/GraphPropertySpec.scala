@@ -3,6 +3,8 @@ package graft
 import scala.collection.mutable
 import scala.util.Random
 
+import org.apache.spark.sql.DataFrame
+
 import graft.graph._
 
 /**
@@ -119,6 +121,40 @@ class GraphPropertySpec extends SparkSpec {
     assert(pr.ranks.columns.toSeq == Seq("vid", "rank") && pr.ranks.count() == 0)
     assert(ConnectedComponents.run(spark, e).count() == 0)
     assert(LabelPropagation.run(spark, e).count() == 0)
+
+    // every superstep-kernel driver, over the empty table, a self-loop-only
+    // table and a duplicate-edge table: a defined result (no exception, one
+    // null-free row per vertex at most), empty on empty input
+    import operators.DocGraph
+    def dir(x: DataFrame) = DocGraph.lay(spark, x)
+    def sym(x: DataFrame) = DocGraph.lay(spark, x, GraphOps.symmetrized)
+    val drivers: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "pr" -> (x => DocGraph.prIterLaid(dir(x), 3)),
+      "ppr" -> (x => DocGraph.pprIterLaid(dir(x), 3)),
+      "wpr" -> (x => DocGraph.wprIterLaid(dir(x), 3)),
+      "hits" -> (x => DocGraph.hitsIterLaid(dir(x), 2)),
+      "salsa" -> (x => DocGraph.salsaIterLaid(dir(x), 2)),
+      "bfs" -> (x => DocGraph.bfsIterLaid(dir(x), 3)),
+      "sssp" -> (x => DocGraph.ssspIterLaid(dir(x), 3)),
+      "katz" -> (x => DocGraph.katzIterLaid(dir(x), 3)),
+      "mis" -> (x => DocGraph.misIterLaid(sym(x), 3)),
+      "color" -> (x => DocGraph.colorIterLaid(sym(x), 3)),
+      "match" -> (x => DocGraph.matchIterLaid(DocGraph.lay(spark, x, DocGraph.canonical), 3)),
+      "landmark" -> (x => DocGraph.landmarkIterLaid(DocGraph.lay(spark, x, DocGraph.reversed), 3)),
+      "kcore" -> (x => DocGraph.kcoreIterLaid(sym(x), 1, 3)),
+      "cc" -> (x => DocGraph.ccIterLaid(sym(x), 3)),
+      "lp" -> (x => DocGraph.lpIterLaid(sym(x), 3)))
+    val selfLoops = Seq((0L, 0L), (1L, 1L), (100L, 100L)).toDF("src", "dst")
+    val dups = Seq((0L, 1L), (0L, 1L), (1L, 2L), (1L, 2L), (2L, 0L), (3L, 1L)).toDF("src", "dst")
+    for ((name, run) <- drivers) {
+      assert(run(e).count() == 0, s"$name on the empty table")
+      for ((input, g) <- Seq("self-loops" -> selfLoops, "duplicates" -> dups)) {
+        val rows = run(g).collect()
+        val vids = rows.map(_.getLong(0))
+        assert(vids.distinct.length == vids.length && vids.length <= 4, s"$name on $input: ${rows.toSeq}")
+        assert(!rows.exists(_.anyNull), s"$name on $input: ${rows.toSeq}")
+      }
+    }
   }
 
   test("alternating CC converges in O(log n) rounds on a high-diameter chain") {
@@ -171,7 +207,7 @@ class GraphPropertySpec extends SparkSpec {
     // 3→2→1→0→5; only vid 0 is a landmark (0 % 97 == 0). Forward distance
     // vid→0 is the chain position; 5 cannot reach 0 (edges point away).
     val edges = Seq((3L, 2L), (2L, 1L), (1L, 0L), (0L, 5L)).toDF("src", "dst")
-    val got = operators.DocGraph.landmarkIterEdges(spark, edges, 4)
+    val got = operators.DocGraph.landmarkIterLaid(operators.DocGraph.lay(spark, edges, operators.DocGraph.reversed), 4)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got == Map(
       0L -> ((1L, 0L, 0L)), 1L -> ((1L, 1L, 1L)), 2L -> ((1L, 2L, 2L)),

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.graph.GraphOps
 import graft.operators.DocGraph
 
 /**
@@ -49,7 +50,7 @@ class MisSpec extends SparkSpec {
 
   private def engine(k: Int): Map[Long, Long] = {
     val e = rawEdges.toDF("src", "dst")
-    DocGraph.misIterEdges(spark, e, k)
+    DocGraph.misIterLaid(DocGraph.lay(spark, e, GraphOps.symmetrized), k)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 

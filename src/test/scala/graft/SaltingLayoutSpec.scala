@@ -76,19 +76,6 @@ class SaltingLayoutSpec extends SparkSpec {
     assert(got == Set(Edge(0, 1), Edge(1, 2), Edge(2, 0)))
   }
 
-  test("CSR-style layout: range partitioning preserves edge multiset, sorted runs") {
-    val edges = PageSynth.edgeList(spark, 500).toDF()
-    val laid  = GraphOps.csrLayout(edges, 4)
-    assert(laid.count() == edges.count())
-    // within every partition the src column is non-decreasing (adjacency runs)
-    val violations = laid.select("src").mapPartitions { it =>
-      var prev = Long.MinValue; var bad = 0
-      it.foreach { r => val v = r.getLong(0); if (v < prev) bad += 1; prev = v }
-      Iterator.single(bad)
-    }.collect().sum
-    assert(violations == 0)
-  }
-
   test("rollup/cube aggregate smoke over iteration-metrics-shaped data") {
     val m = Seq((0, "a", 10L), (0, "b", 20L), (1, "a", 30L))
       .toDF("iter", "part", "edges")
