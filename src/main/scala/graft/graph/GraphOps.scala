@@ -83,23 +83,6 @@ object GraphOps {
   }
 
   /**
-   * Iteration-ready edge cache: hash-partitioned on `src` so every superstep
-   * join `edges.src == ranks.vid` reuses this partitioning and only the
-   * (much smaller) rank side shuffles. Persisted MEMORY_AND_DISK — at 100 TB
-   * the edge table stays put across all ~O(100) supersteps, which is the
-   * single biggest shuffle saving in the engine.
-   */
-  def partitionForIteration(edges: DataFrame, numPartitions: Int,
-                            csrSort: Boolean = true): DataFrame = {
-    val parted = edges.repartition(numPartitions, col("src"))
-    // CSR-style layout (BASELINE.json:6): adjacency runs are contiguous within
-    // each hash partition — the in-partition analogue of CSR row grouping —
-    // so each superstep's probe side streams per-source runs, not random rows.
-    val laid = if (csrSort) parted.sortWithinPartitions("src") else parted
-    laid.persist(StorageLevel.MEMORY_AND_DISK)
-  }
-
-  /**
    * Right-sized iteration partition count: ~`edgesPerPart` edges per task,
    * clamped to [1, confParts]. A superstep stage always schedules one task
    * per partition, so a 20k-edge graph on 32 partitions pays 32 near-empty
@@ -117,31 +100,39 @@ object GraphOps {
       edgeCount / edgesPerPart)).toInt
 
   /**
-   * Two-phase iteration layout: partition at the configured width, count (the
-   * count also materializes the cache), then — only when the graph turns out
-   * to be far smaller than the configured width warrants — re-layout at the
-   * right-sized width from the cache. Big graphs take exactly the old path
-   * (one shuffle, one count); tiny graphs pay one extra tiny shuffle once to
-   * save it on every superstep. Returns (cached edges, |E|, parts).
-   * `minParts` floors the right-sized width (capped at `confParts`); a
-   * positive `numPartitions` is taken exactly instead.
+   * Iteration-ready edge cache: hash-partitioned on `src`, so every superstep
+   * join `edges.src == state.vid` reuses the layout and only the state side
+   * shuffles; sorted within partitions, so a superstep's probe side streams
+   * per-source runs; persisted MEMORY_AND_DISK for all supersteps. The
+   * layout is made at the configured width and counted, then — only when the
+   * graph turns out far smaller than that width warrants — re-made at the
+   * right-sized width from the cache (one extra tiny shuffle, saved on every
+   * superstep). Returns (cached edges, |E|, parts). `minParts` floors the
+   * right-sized width (capped at `confParts`); a positive `numPartitions` is
+   * taken exactly instead.
    */
   def layoutForIteration(edges: DataFrame, confParts: Int, minParts: Int = 1,
                          numPartitions: Int = 0): (DataFrame, Long, Int) = {
     val width = if (numPartitions > 0) numPartitions else confParts
-    val e0  = partitionForIteration(edges, width)
+    val e0  = lay(edges, width, "src")
     val cnt = e0.count()
     val p   =
       if (numPartitions > 0) width
       else math.max(math.min(minParts, confParts), rightSizedParts(cnt, confParts))
-    if (p == width) (e0, cnt, width)
-    else {
-      val e1 = partitionForIteration(e0, p)
-      e1.count()
-      e0.unpersist(false)
-      (e1, cnt, p)
-    }
+    if (p == width) (e0, cnt, width) else (relay(e0, p, "src"), cnt, p)
   }
+
+  /** A laid edge table re-laid by `key` at `parts` partitions, sorted within
+    * them and materialized from the cached `laid`, which is then released. */
+  def relay(laid: DataFrame, parts: Int, key: String): DataFrame = {
+    val e = lay(laid, parts, key)
+    e.count()
+    laid.unpersist(false)
+    e
+  }
+
+  private def lay(df: DataFrame, parts: Int, key: String): DataFrame =
+    df.repartition(parts, col(key)).sortWithinPartitions(key).persist(StorageLevel.MEMORY_AND_DISK)
 
   /**
    * ONE-exchange dedup + layout for a raw (possibly duplicate-bearing) edge

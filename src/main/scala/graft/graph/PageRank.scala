@@ -3,7 +3,6 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Per-partition lineage stat for one superstep (rows that landed in each
@@ -42,13 +41,11 @@ final case class PageRankConfig(
     saltBuckets: Int = 8,
     /** durable checkpoint every k supersteps (resume point); lineage is truncated every superstep regardless. */
     ckptEvery: Int = 5,
-    /**
-     * Superstep join strategy (BASELINE.json:6 "broadcast-or-shuffle hash
-     * join"): "auto" broadcasts the rank side while |V| ≤ broadcastMaxRows
-     * and uses a co-partitioned shuffle-hash join beyond that; never SMJ —
-     * sort-merge would re-sort the O(|E|) cached edge side every superstep.
-     */
-    joinStrategy: String = "auto",
+    /** the superstep join's crossover (BASELINE.json:6 "broadcast-or-shuffle
+      * hash join", [[Superstep.pinFor]]): the rank side is broadcast while
+      * |V| ≤ broadcastMaxRows, a co-partitioned shuffle-hash join beyond;
+      * never SMJ, which would re-sort the O(|E|) cached edge side every
+      * superstep. 0 forces the shuffle regime, Long.MaxValue the broadcast. */
     broadcastMaxRows: Long = Superstep.BroadcastMaxRows)
 
 /**
@@ -69,8 +66,8 @@ final case class PageRankConfig(
  *    update join read; AQE can coalesce neither an explicit-count exchange
  *    nor the partial-sum shuffle joined against it, so the state stays
  *    `parts` wide. The update join's output keeps that layout, and the
- *    state's checkpoint records it ([[CheckpointShim]]; a plain
- *    `localCheckpoint` under AQE records none), so from the second
+ *    state's checkpoint records it ([[CheckpointShim]]; Spark's own local
+ *    checkpoint under AQE records none), so from the second
  *    superstep on the planner drops the repartition: the state is never
  *    shuffled again;
  *  - dangling mass needs no extra pass: each non-dangling vertex transmits
@@ -85,10 +82,10 @@ final case class PageRankConfig(
  *  - hub sources (out-degree > threshold) are salted: their rank row is
  *    replicated S ways and edges join on (vid, salt) — on top of AQE's
  *    skew-join splits (both layers mandated by BASELINE.json:6);
- *  - lineage is truncated every superstep (localCheckpoint) and every
- *    `ckptEvery` supersteps the materialized state is written through the
- *    pluggable [[Checkpointer]], so a run resumes mid-iteration; the run
- *    itself continues from memory.
+ *  - the loop is the kernel's [[Superstep.converge]], one superstep per
+ *    driver action; every `ckptEvery` supersteps the materialized state is
+ *    written through the pluggable [[Checkpointer]], so a run resumes
+ *    mid-iteration; the run itself continues from memory.
  *
  * Spark jobs per superstep (JobCountSpec). With AQE off, 1: one job runs
  * every stage. With AQE on, each query stage is its own job, so 2: the
@@ -132,13 +129,9 @@ object PageRank {
       edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
 
     // --- static per-run state, partitioned for the iteration and cached ---
-    // explicit numPartitions is honored exactly (the scaling bench pins it);
-    // otherwise the width is right-sized from the materialized edge count so
-    // tiny graphs don't pay confParts near-empty tasks per superstep stage.
-    // The floor is 2: a one-partition exchange plans as SinglePartition,
-    // which the co-partitioned superstep joins do not accept — they then
-    // re-shuffle the state (and in the shuffle regime the edges) every
-    // superstep
+    // the right-sized width's floor is 2: a one-partition exchange plans as
+    // SinglePartition, which the co-partitioned superstep joins do not accept
+    // — they re-shuffle the state (and the shuffle regime's edges) each time
     val (eSrc, edgeCount, parts) = GraphOps.layoutForIteration(typedEdges,
       spark.conf.get("spark.sql.shuffle.partitions", "32").toInt, minParts = 2,
       numPartitions = cfg.numPartitions)
@@ -177,20 +170,8 @@ object PageRank {
     val hubCount = byPart.map(_.getLong(3)).sum
     var partStats = partStatsOf(byPart, parts)
 
-    if (n == 0) {
-      verts.unpersist(false)
-      eSrc.unpersist(false)
-      val schema = StructType(Seq(StructField("vid", LongType), StructField("rank", DoubleType)))
-      return PageRankResult(spark.createDataFrame(java.util.List.of[Row](), schema),
-        Seq.empty, 0, 0L, hubThreshold)
-    }
-
     val hubs = verts.filter(col("outDeg") > hubThreshold).select("vid")
     val d = cfg.damping
-    val strategy = cfg.joinStrategy match {
-      case "auto" => if (n <= cfg.broadcastMaxRows) "broadcast" else "shuffle_hash"
-      case s      => s
-    }
 
     // r6 (guide §2.4 — remove shuffles outright): in the BROADCAST regime
     // the superstep join does not need src clustering (the rank side ships
@@ -201,102 +182,73 @@ object PageRank {
     // superstep runs with NO shuffle at all: broadcast build + map-side
     // chain. One extra edge shuffle up front buys maxIter shuffle-free
     // supersteps. The shuffle regime keeps the src layout (its join streams
-    // the cached edge side); raising the broadcast crossover past 500k rows
-    // was probed at the 2M-vertex headline and REJECTED: the per-superstep
-    // driver-side broadcast build (collect + hash relation of |V| rows)
-    // costs more than the contribution shuffle it replaces (13.1 s vs 11.3 s
-    // sum-of-supersteps, HeadlineProbe).
-    val e =
-      if (strategy == "broadcast") {
-        val laid = eSrc.repartition(parts, col("dst")).sortWithinPartitions("dst")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        laid.count() // materialize from the cached src layout, then drop it
-        eSrc.unpersist(false)
-        laid
-      } else eSrc
+    // the cached edge side); why the crossover stays at 500k rows:
+    // Superstep.BroadcastMaxRows, OPTIMIZATION_r06.md.
+    val e = if (n <= cfg.broadcastMaxRows) GraphOps.relay(eSrc, parts, "dst") else eSrc
+    val g = new Superstep((e, edgeCount, parts), cfg.broadcastMaxRows, Some(verts -> n))
 
-    // --- resume or cold start: the rank state (vid, rank, outDeg) and the
-    // mass its non-dangling vertices transmit ---
-    val transmits = when(col("outDeg").isNotNull, col("rank"))
-    val (startIter, ranks0, metrics0, transmitted0) = ckpt.latest() match {
+    // --- resume or cold start: the rank state (vid, rank, outDeg) and, in
+    // fixed point, the L1 of the superstep before it (none yet on a cold
+    // start: Long.MaxValue reads as 8, above any L1) and the mass its
+    // non-dangling vertices transmit. A finished run resumes finished ---
+    val transmits = fixed(when(col("outDeg").isNotNull, col("rank")))
+    val (startIter, init, seed, metrics0) = ckpt.latest() match {
       case Some((it, saved, ms)) =>
-        val (state, Seq(t)) = Superstep.materialize(
-          verts.join(saved, Seq("vid")).select(col("vid"), col("rank"), col("outDeg")),
-          Seq("vid", "rank", "outDeg"), fixed(transmits))
-        (it + 1, state, ms.toVector, t / Scale)
+        val (state, Seq(t)) =
+          Superstep.materialize(verts.join(saved, Seq("vid")), Seq("vid", "rank", "outDeg"), transmits)
+        (it + 1, state, Seq(ms.lastOption.fold(Long.MaxValue)(m => math.rint(m.l1 * Scale).toLong), t),
+          ms.toVector)
       case None =>
         (0, verts.select(col("vid"), lit(1.0 / n).as("rank"), col("outDeg")),
-          Vector.empty[IterMetrics], transmitting.toDouble / n)
+          Seq(Long.MaxValue, math.rint(transmitting.toDouble / n * Scale).toLong),
+          Vector.empty[IterMetrics])
     }
 
-    var ranks       = ranks0
-    var metrics     = metrics0
-    var iter        = startIter
-    var l1          = Double.MaxValue
-    var transmitted = transmitted0
-
-    while (l1 >= cfg.eps && iter < cfg.maxIter) {
-      val t0 = System.nanoTime()
-      val dangling = math.max(0.0, 1.0 - transmitted)
+    // the span of a superstep's wallMs starts where its step is built
+    var t0       = 0L
+    var dangling = 0.0
+    var metrics  = metrics0
+    val ranks = g.converge(init, seed, Seq(fixed(abs(col("rank") - col("prev"))), transmits),
+        stride = 1, cfg.maxIter, startIter) { (st, sums) =>
+      t0 = System.nanoTime()
+      dangling = math.max(0.0, 1.0 - sums(1) / Scale)
       val base = (1.0 - d) / n + d * dangling / n
 
       // the state's layout; a no-op once the state is a checkpoint that
       // already has it. Dangling vertices (outDeg null) own no edges, so the
       // inner contribution join drops them without a filter
-      val cur = ranks.repartition(parts, col("vid"))
+      val cur = st.repartition(parts, col("vid"))
       val rankDeg = cur.select(col("vid"), (col("rank") / col("outDeg")).as("w"))
 
       // per-destination partial sums (J1 + A1), hub-salted when needed (J4);
       // branch-wise aggregation + co-partitioned merge (r6) so the broadcast
       // regime's dst layout carries the whole superstep shuffle-free
-      val sums = Salting.contribSums(e, rankDeg, hubs, hubCount, cfg.saltBuckets, strategy)
+      val contribs = Salting.contribSums(g.edges, rankDeg, hubs, hubCount, cfg.saltBuckets, g.pin)
 
       // both sides hash-partitioned on the key — pin SHJ so neither is sorted
       val newRank = Superstep.scalar(base) + lit(d) * coalesce(col("s"), lit(0.0))
-      val next = cur.join(sums.hint("shuffle_hash"), cur("vid") === sums("dst"), "left")
+      cur.join(Superstep.shuffleHash(contribs), cur("vid") === contribs("dst"), "left")
         .select(cur("vid"), newRank.as("rank"), cur("outDeg"), cur("rank").as("prev"))
-      val (mat, Seq(delta, t)) = Superstep.materialize(next, Seq("vid", "rank", "outDeg"),
-        fixed(abs(col("rank") - col("prev"))), fixed(transmits))
-      l1 = delta / Scale
-      transmitted = t / Scale
+    }(_.head / Scale < cfg.eps, (iter, sums, mat) => {
       // in the shuffle regime with `parts` other than spark.sql.shuffle.
       // partitions, the planner lays the update join out at the latter width
       // (and exchanges the state twice); count the state's real partitions once
-      val width = mat.queryExecution.logical match {
-        case lr: LogicalRDD => lr.rdd.getNumPartitions
-        case _              => partStats.size
-      }
+      val width = mat.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.getNumPartitions
       if (width != partStats.size)
         partStats = partStatsOf(verts.groupBy(pid(width)).count().collect(), width)
-
       val wallMs = (System.nanoTime() - t0) / 1000000
-      metrics = metrics :+ IterMetrics(iter, l1, dangling, edgeCount, wallMs, partStats)
+      metrics = metrics :+ IterMetrics(iter, sums.head / Scale, dangling, edgeCount, wallMs, partStats)
 
       // durable step: write the state that is already materialized
       if (cfg.ckptEvery > 0 && (iter + 1) % cfg.ckptEvery == 0)
         ckpt.save(iter, mat.select("vid", "rank"), metrics)
+    }).select("vid", "rank")
 
-      // free the PREVIOUS superstep's checkpoint blocks now that the new
-      // state is materialized — the ContextCleaner is too lazy for a tight
-      // loop. At iter 0 the state is a plan over the cached vertex table,
-      // whose lineage holds the caller's input: nothing of ours to free.
-      if (iter > 0) GraphOps.freeCheckpoint(ranks)
-      ranks = mat
-      iter += 1
-    }
-    // a cold start that ran no superstep still returns ranks independent of
-    // the caches released below
-    val finalRanks = (if (iter == 0) ranks.localCheckpoint(true) else ranks).select("vid", "rank")
+    // the final state is durably recorded once (exact resume point = done)
+    val iterations = startIter + metrics.size - metrics0.size
+    if (metrics.size > metrics0.size && !(cfg.ckptEvery > 0 && iterations % cfg.ckptEvery == 0))
+      ckpt.save(iterations - 1, ranks, metrics)
 
-    // final state is always durably recorded (exact resume point = done)
-    if (metrics.nonEmpty && !(cfg.ckptEvery > 0 && iter % cfg.ckptEvery == 0))
-      ckpt.save(iter - 1, finalRanks, metrics)
-
-    // release per-run caches (edge layout, vertex table) — the result ranks
-    // are checkpoint-backed and independent of them
-    e.unpersist(false)
-    verts.unpersist(false)
-
-    PageRankResult(finalRanks, metrics, iter, hubCount, hubThreshold)
+    PageRankResult(ranks, metrics, iterations, hubCount, hubThreshold)
   }
 }

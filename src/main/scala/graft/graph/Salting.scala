@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -25,33 +25,21 @@ import org.apache.spark.sql.functions._
 object Salting {
 
   /**
-   * `edges ⋈ rankDeg on src = vid` → per-edge contribution rows `(dst, w)`.
-   * `rankDeg` columns: (vid, w) where w = rank/outDeg. `hubs` columns: (vid)
-   * — the hub vertex set; `hubCount` is its (caller-materialized) size so the
-   * zero-hub fast path costs nothing.
+   * Per-destination contribution SUMS `(dst, s)` of `edges ⋈ rankDeg on
+   * src = vid`. `rankDeg` columns: (vid, w) where w = rank/outDeg. `hubs`
+   * columns: (vid) — the hub vertex set; `hubCount` is its
+   * (caller-materialized) size so the zero-hub fast path costs nothing.
+   * `pin` is the superstep kernel's physical join for the rank side
+   * ([[Superstep.pin]]: broadcast for small rank tables, shuffle-hash
+   * co-partitioned with the cached edge layout otherwise; never SMJ, which
+   * would re-sort the O(|E|) edge side every superstep).
    *
-   * `strategy` pins the physical join ("broadcast-or-shuffle hash join",
-   * BASELINE.json:6): "broadcast" for small rank tables (one hash relation,
-   * zero rank shuffle), "shuffle_hash" otherwise (co-partitioned with the
-   * cached edge layout — streams edges, never sorts them). The default SMJ
-   * would re-sort the full O(|E|) edge side every superstep.
-   */
-  private def applyStrategy(df: DataFrame, strategy: String): DataFrame =
-    strategy match {
-      case "broadcast"    => broadcast(df)
-      case "shuffle_hash" => df.hint("shuffle_hash")
-      case _              => df
-    }
-
-  /**
-   * Per-destination contribution SUMS `(dst, s)` — [[contribJoin]] plus the
-   * closing aggregation, with the hub and non-hub branches PRE-aggregated
-   * separately and merged by union + re-aggregate (r6, guide §2.3
-   * "aggregate before you shuffle"): the former union-of-raw-contributions
-   * shuffled O(|E|) rows; here each branch reduces to ≤|V| per-destination
-   * partials first — on a dst-partitioned edge layout (the broadcast
-   * regime's) both partial aggregations run exchange-free, and only the
-   * merged partials cross the wire. The merge deliberately uses UNION, not
+   * The hub and non-hub branches are PRE-aggregated separately and merged
+   * by union + re-aggregate (r6, guide §2.3 "aggregate before you
+   * shuffle"): each branch reduces to ≤|V| per-destination partials, not
+   * O(|E|) raw contributions, before the wire — on a dst-partitioned edge
+   * layout (the broadcast regime's) both partial aggregations run
+   * exchange-free. The merge deliberately uses UNION, not
    * a join of the two aggregated branches: plan-stat estimation SUMS a
    * union's sizeInBytes but MULTIPLIES a join's, and a per-superstep join
    * of two subtrees that both reference the previous superstep's
@@ -63,62 +51,26 @@ object Salting {
    * inside every caller's pinned tolerance (goldens 1e-9, e7/round-7
    * oracles).
    */
-  def contribSums(edges: DataFrame, rankDeg0: DataFrame,
+  def contribSums(edges: DataFrame, rankDeg: DataFrame,
                   hubs: DataFrame, hubCount: Long, saltBuckets: Int,
-                  strategy: String = "auto"): DataFrame = {
-    if (hubCount == 0 || saltBuckets <= 1) {
-      val rankDeg = applyStrategy(rankDeg0, strategy)
-      edges.join(rankDeg, edges("src") === rankDeg("vid"))
-        .select(edges("dst"), rankDeg("w"))
-        .groupBy("dst").agg(sum(col("w")).as("s"))
-    } else {
+                  pin: DataFrame => DataFrame): DataFrame = {
+    def sums(e: DataFrame, r: DataFrame, on: Column): DataFrame =
+      e.join(r, on).select(e("dst"), r("w")).groupBy("dst").agg(sum(col("w")).as("s"))
+    val ranks = pin(rankDeg)
+    if (hubCount == 0 || saltBuckets <= 1) sums(edges, ranks, edges("src") === ranks("vid"))
+    else {
       val h = broadcast(hubs.select(col("vid").as("hub")))
       val hubEdges = edges.join(h, edges("src") === h("hub"), "left_semi")
         .withColumn("salt", pmod(xxhash64(col("dst")), lit(saltBuckets)).cast("int"))
       val restEdges = edges.join(h, edges("src") === h("hub"), "left_anti")
-      val hubRanks = broadcast(
-        rankDeg0.join(h, rankDeg0("vid") === h("hub"), "left_semi")
-          .withColumn("salt", explode(sequence(lit(0), lit(saltBuckets - 1)))))
-      val hubSums = hubEdges.join(hubRanks,
-          hubEdges("src") === hubRanks("vid") && hubEdges("salt") === hubRanks("salt"))
-        .select(hubEdges("dst"), hubRanks("w"))
-        .groupBy("dst").agg(sum(col("w")).as("s"))
-      val rankDeg = applyStrategy(rankDeg0, strategy)
-      val restSums = restEdges.join(rankDeg, restEdges("src") === rankDeg("vid"))
-        .select(restEdges("dst"), rankDeg("w"))
-        .groupBy("dst").agg(sum(col("w")).as("s"))
-      restSums.unionByName(hubSums)
-        .groupBy("dst").agg(sum(col("s")).as("s"))
-    }
-  }
-
-  def contribJoin(edges: DataFrame, rankDeg0: DataFrame,
-                  hubs: DataFrame, hubCount: Long, saltBuckets: Int,
-                  strategy: String = "auto"): DataFrame = {
-    if (hubCount == 0 || saltBuckets <= 1) {
-      val rankDeg = applyStrategy(rankDeg0, strategy)
-      edges.join(rankDeg, edges("src") === rankDeg("vid"))
-        .select(edges("dst"), rankDeg("w"))
-    } else {
-      val h = broadcast(hubs.select(col("vid").as("hub")))
-      val hubEdges = edges.join(h, edges("src") === h("hub"), "left_semi")
-        .withColumn("salt", pmod(xxhash64(col("dst")), lit(saltBuckets)).cast("int"))
-      val restEdges = edges.join(h, edges("src") === h("hub"), "left_anti")
-
       // hub rank rows are few relative to |V| — broadcast the replicated side
       val hubRanks = broadcast(
-        rankDeg0.join(h, rankDeg0("vid") === h("hub"), "left_semi")
+        rankDeg.join(h, rankDeg("vid") === h("hub"), "left_semi")
           .withColumn("salt", explode(sequence(lit(0), lit(saltBuckets - 1)))))
-
-      val hubContrib = hubEdges.join(hubRanks,
-          hubEdges("src") === hubRanks("vid") && hubEdges("salt") === hubRanks("salt"))
-        .select(hubEdges("dst"), hubRanks("w"))
-
-      val rankDeg = applyStrategy(rankDeg0, strategy)
-      val restContrib = restEdges.join(rankDeg, restEdges("src") === rankDeg("vid"))
-        .select(restEdges("dst"), rankDeg("w"))
-
-      restContrib.unionByName(hubContrib)
+      sums(restEdges, ranks, restEdges("src") === ranks("vid"))
+        .unionByName(sums(hubEdges, hubRanks,
+          hubEdges("src") === hubRanks("vid") && hubEdges("salt") === hubRanks("salt")))
+        .groupBy("dst").agg(sum(col("s")).as("s"))
     }
   }
 }

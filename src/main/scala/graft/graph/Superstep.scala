@@ -3,16 +3,18 @@ package graft.graph
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointShim
 
 /**
  * The superstep loop of a vertex program over a laid edge table
- * (`GraphOps.layoutForIteration` / `layoutDedupForIteration`). Connected
- * components, label propagation and the fixed-k doc-graph drivers supply an
- * initial state and one superstep; the kernel owns the rest:
+ * (`GraphOps.layoutForIteration` / `layoutDedupForIteration`). PageRank,
+ * connected components, label propagation and the fixed-k doc-graph drivers
+ * supply an initial state and one superstep; the kernel owns the rest:
  *
- *  - the vertex table `(vid)`, hash-laid at the edges' width;
+ *  - the vertex table: `(vid)`, hash-laid at the edges' width, or one the
+ *    caller built with its |V| (PageRank's `(vid, outDeg)`);
  *  - the join pin, the engine's one broadcast-or-shuffle-hash crossover
  *    ([[pinFor]]). It is sized by |V|, because the state side of a superstep
  *    join holds a row per vertex: broadcast while |V| ≤ `broadcastMaxRows`,
@@ -25,24 +27,29 @@ import org.apache.spark.sql.graft.CheckpointShim
  *    A step that attaches an in-plan scalar (`GraphOps.attachScalar`)
  *    checkpoints eagerly beyond the crossover, so the scalar's broadcast
  *    build never carries a whole superstep inside
- *    `spark.sql.broadcastTimeout`;
- *  - freeing: the intermediate checkpoints and the laid edges are released
- *    before the result returns. Only the result's own checkpoint stays, and
- *    the caller frees it;
+ *    `spark.sql.broadcastTimeout`. A converging run ([[converge]])
+ *    checkpoints eagerly once per action and observes its stop test's sums
+ *    in that same pass;
+ *  - freeing: the intermediate checkpoints, the laid edges and a
+ *    caller-built vertex table are released before the result returns. Only
+ *    the result's own checkpoint stays, and the caller frees it;
  *  - an empty graph: no superstep runs, and the result is the (empty)
  *    output of the initial state.
  *
  * The state's columns are the initial state's; columns a step adds, such as
  * the previous value a change test reads, are dropped after the step.
  */
-final class Superstep private (laid: Superstep.Laid, broadcastMaxRows: Long) {
+final class Superstep private[graph] (laid: Superstep.Laid, broadcastMaxRows: Long,
+                                      table: Option[(DataFrame, Long)]) {
   val (edges: DataFrame, numEdges: Long, parts: Int) = laid
 
-  /** every vertex id, laid out by `vid` at `parts` */
-  val vertices: DataFrame = GraphOps.vertices(edges).repartition(parts, col("vid"))
+  /** every vertex id, laid out by `vid` at `parts`; or `table`, a
+    * caller-built vertex table with its |V|, released with the laid edges */
+  val vertices: DataFrame =
+    table.fold(GraphOps.vertices(edges).repartition(parts, col("vid")))(_._1)
 
   /** |V|, counted on first use */
-  lazy val nV: Long = vertices.count()
+  lazy val nV: Long = table.fold(vertices.count())(_._2)
 
   private val broadcasts = 2 * numEdges <= broadcastMaxRows || nV <= broadcastMaxRows
 
@@ -67,38 +74,62 @@ final class Superstep private (laid: Superstep.Laid, broadcastMaxRows: Long) {
   /**
    * Supersteps from `init` until one changes no row, at most `maxIter`.
    * `changed` is evaluated on a step's output, before its extra columns are
-   * dropped. Supersteps run in pairs, one driver action per pair: the first
-   * chains lazily, and the pass that eagerly checkpoints the second counts
-   * its changed rows, an exact sum observed in the same pass (no closing
-   * aggregate). A superstep whose input is a fixpoint is the identity, so
-   * stopping on the second step's zero count stops at the same state as a
-   * test after every step, at the cost of at most one redundant superstep.
-   * `maxIter` is kept exactly: the last pair shrinks to one step.
+   * dropped. Supersteps run in pairs, one driver action per pair
+   * ([[converge]] with stride 2 over the change count). A superstep whose
+   * input is a fixpoint is the identity, so stopping on the second step's
+   * zero count stops at the same state as a test after every step, at the
+   * cost of at most one redundant superstep.
    */
   def untilStable(init: DataFrame, maxIter: Int, changed: Column)
-                 (step: DataFrame => DataFrame): DataFrame = {
+                 (step: DataFrame => DataFrame): DataFrame =
+    converge(init.localCheckpoint(false), Seq(1L), Seq(when(changed, 1L).otherwise(0L)),
+      stride = 2, maxIter)((st, _) => step(st))(_.head == 0)
+
+  /**
+   * Supersteps from `init` until `stop` holds, at most `maxIter` counting
+   * the `from` that ran before (a resumed run; the last action shrinks to
+   * keep it exactly). Each driver action runs `stride` supersteps: the first
+   * `stride - 1` chain lazily, and the pass that eagerly checkpoints the last
+   * observes the exact sums of the long `terms` over its rows, before the
+   * step's extra columns are dropped ([[Superstep.materialize]]).
+   * `step(state, sums)` gets the previous action's sums (`seed` before the
+   * first), which `stop` tests before every action; `each(iter, sums,
+   * state)` runs after every action, `iter` its last superstep (0-based).
+   * Each state is freed once the next is materialized; the last is returned.
+   */
+  def converge(init: DataFrame, seed: Seq[Long], terms: Seq[Column],
+               stride: Int, maxIter: Int, from: Int = 0)
+              (step: (DataFrame, Seq[Long]) => DataFrame)
+              (stop: Seq[Long] => Boolean,
+               each: (Int, Seq[Long], DataFrame) => Unit = (_, _, _) => ()): DataFrame = {
     val keep = init.columns.toSeq
-    var state = init.localCheckpoint(false)
-    var moved = if (numEdges == 0) 0L else 1L
-    var iter  = 0
-    while (moved > 0 && iter < maxIter) {
-      val mid =
-        if (maxIter - iter < 2) state
-        else step(state).select(keep.map(col): _*).localCheckpoint(false)
-      val (mat, Seq(c)) = Superstep.materialize(step(mid), keep, when(changed, 1L).otherwise(0L))
-      GraphOps.freeCheckpoint(state)
-      if (mid ne state) { GraphOps.freeCheckpoint(mid); iter += 1 }
-      state = mat
-      moved = c
-      iter += 1
+    var state = init
+    var sums  = seed
+    var iter  = from
+    while (numEdges > 0 && iter < maxIter && !stop(sums)) {
+      val chain = ArrayBuffer(state)
+      for (_ <- 1 until math.min(stride, maxIter - iter))
+        chain += step(chain.last, sums).select(keep.map(col): _*).localCheckpoint(false)
+      val (next, s) = Superstep.materialize(step(chain.last, sums), keep, terms: _*)
+      iter += chain.size
+      each(iter - 1, s, next)
+      chain.foreach(free)
+      state = next
+      sums = s
     }
-    if (iter > 0) release(state, Nil)
-    else release(CheckpointShim.localCheckpoint(state), Seq(state))
+    if (state ne init) release(state, Nil)
+    else release(CheckpointShim.localCheckpoint(init), Seq(init))
   }
 
+  /** Frees `state` if it is a checkpoint. A state that is a plan (a cold
+    * start over a cached table) reads the caller's input, not ours to free. */
+  private def free(state: DataFrame): Unit =
+    if (state.queryExecution.logical.isInstanceOf[LogicalRDD]) GraphOps.freeCheckpoint(state)
+
   private def release(result: DataFrame, chain: Iterable[DataFrame]): DataFrame = {
-    chain.foreach(GraphOps.freeCheckpoint)
+    chain.foreach(free)
     edges.unpersist(false)
+    table.foreach(_._1.unpersist(false))
     result
   }
 }
@@ -115,7 +146,7 @@ object Superstep {
   val BroadcastMaxRows = 500000L
 
   def apply(laid: Laid, broadcastMaxRows: Long = BroadcastMaxRows): Superstep =
-    new Superstep(laid, broadcastMaxRows)
+    new Superstep(laid, broadcastMaxRows, None)
 
   /** The join pin for a vertex-keyed side of `nV` rows: broadcast up to
     * `broadcastMaxRows`, a shuffle-hash join beyond. */
@@ -123,7 +154,11 @@ object Superstep {
     pinWhen(nV <= broadcastMaxRows)
 
   private def pinWhen(broadcasts: Boolean): DataFrame => DataFrame =
-    if (broadcasts) broadcast(_) else _.hint("shuffle_hash")
+    if (broadcasts) broadcast(_) else shuffleHash
+
+  /** The shuffle-hash pin, also for a join whose sides are both already
+    * hash-partitioned on its key, so that neither is sorted. */
+  val shuffleHash: DataFrame => DataFrame = _.hint("shuffle_hash")
 
   /** Eagerly checkpoint `df` projected to `keep`, keeping its hash
     * partitioning ([[CheckpointShim]]), and return the exact sums of the

@@ -54,14 +54,12 @@ object ScalingBench {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val strategy = sys.env.getOrElse("SPARK_GRAFT_JOIN", "auto")
     val repeats  = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
     // engine: "sql" = Catalyst superstep (default), "cpu" = shuffle-free
     // compute-bound control leg (see cpuLeg)
     val engine   = sys.env.getOrElse("SPARK_GRAFT_ENGINE", "sql")
     if (engine == "cpu") { cpuLeg(spark, cores, nPages, repeats); spark.stop(); return }
-    val cfg = PageRankConfig(eps = 0.0, maxIter = iters, ckptEvery = 0,
-      numPartitions = cores, joinStrategy = strategy)
+    val cfg = PageRankConfig(eps = 0.0, maxIter = iters, ckptEvery = 0, numPartitions = cores)
     val edges  = PageSynth.edgeList(spark, nPages, numPartitions = cores)
     val nEdges = edges.count()
 

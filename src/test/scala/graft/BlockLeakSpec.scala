@@ -69,6 +69,21 @@ class BlockLeakSpec extends SparkSpec {
     }
   }
 
+  test("PageRank leaves only its result's checkpoint: both regimes, salted, resumed") {
+    val e = graft.sources.PageSynth.edgeList(spark, 300).toDF()
+    def pr(cfg: PageRankConfig, ck: PageRank.Checkpointer = PageRank.NoopCheckpointer): DataFrame =
+      PageRank.run(spark, e, cfg, ck).ranks
+    for (bmr <- Seq(Superstep.BroadcastMaxRows, 0L))
+      leavesOnlyItsResult(s"PageRank bmr=$bmr")(pr(PageRankConfig(maxIter = 5, ckptEvery = 0, broadcastMaxRows = bmr)))
+    leavesOnlyItsResult("PageRank salted")(
+      pr(PageRankConfig(maxIter = 5, ckptEvery = 0, hubDegreeThreshold = 3, saltBuckets = 4)))
+    val store = new graft.ckpt.IcebergLikeStore(spark,
+      java.nio.file.Files.createTempDirectory("graft-leak-pr").toString)
+    GraphOps.freeCheckpoint(pr(PageRankConfig(maxIter = 4, ckptEvery = 3), store.rankCheckpointer()))
+    leavesOnlyItsResult("PageRank resumed")(
+      pr(PageRankConfig(maxIter = 8, ckptEvery = 3), store.rankCheckpointer()))
+  }
+
   test("Dedup.simhashPairs and Dedup.contamination free their block table and shingle cache") {
     val docs = spark.read.parquet(s"$sf/documents.parquet").select(col("doc_id"), col("text"))
     leavesOnlyItsResult("simhashPairs")(Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3))

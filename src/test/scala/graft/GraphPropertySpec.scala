@@ -144,8 +144,10 @@ class GraphPropertySpec extends SparkSpec {
       "kcore" -> (x => DocGraph.kcoreIterLaid(sym(x), 1, 3)),
       "cc" -> (x => DocGraph.ccIterLaid(sym(x), 3)),
       "lp" -> (x => DocGraph.lpIterLaid(sym(x), 3)))
-    val selfLoops = Seq((0L, 0L), (1L, 1L), (100L, 100L)).toDF("src", "dst")
-    val dups = Seq((0L, 1L), (0L, 1L), (1L, 2L), (1L, 2L), (2L, 0L), (3L, 1L)).toDF("src", "dst")
+    val selfLoopRows = Seq((0L, 0L), (1L, 1L), (100L, 100L))
+    val dupRows = Seq((0L, 1L), (0L, 1L), (1L, 2L), (1L, 2L), (2L, 0L), (3L, 1L))
+    val selfLoops = selfLoopRows.toDF("src", "dst")
+    val dups = dupRows.toDF("src", "dst")
     for ((name, run) <- drivers) {
       assert(run(e).count() == 0, s"$name on the empty table")
       for ((input, g) <- Seq("self-loops" -> selfLoops, "duplicates" -> dups)) {
@@ -154,6 +156,22 @@ class GraphPropertySpec extends SparkSpec {
         assert(vids.distinct.length == vids.length && vids.length <= 4, s"$name on $input: ${rows.toSeq}")
         assert(!rows.exists(_.anyNull), s"$name on $input: ${rows.toSeq}")
       }
+    }
+
+    // PageRank, unsalted and with every source of out-degree > 1 salted, over
+    // the same tables and a one-hub star: ranks sum to 1 and match the
+    // sequential reference
+    val star = (1L to 20L).map(i => (0L, i))
+    for ((input, g) <- Seq("self-loops" -> selfLoopRows, "duplicates" -> dupRows, "star" -> star);
+         threshold <- Seq(Long.MaxValue, 1L)) {
+      val res = PageRank.run(spark, g.toDF("src", "dst"), PageRankConfig(eps = 1e-10,
+        hubDegreeThreshold = threshold, saltBuckets = 4, ckptEvery = 0))
+      assert(threshold == Long.MaxValue || input == "self-loops" || res.hubCount > 0, s"$input salted no hub")
+      val got = res.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val want = refPageRank(g)
+      assert(math.abs(got.values.sum - 1.0) < 1e-9, s"$input threshold=$threshold: Σpr = ${got.values.sum}")
+      assert(got.keySet == want.keySet, s"$input threshold=$threshold")
+      want.foreach { case (v, p) => assert(math.abs(got(v) - p) < 1e-6, s"$input threshold=$threshold vid=$v") }
     }
   }
 

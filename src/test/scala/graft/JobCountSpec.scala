@@ -21,7 +21,7 @@ import graft.operators.DocGraph
  *
  * Counting protocol: AQE is OFF in a dedicated child session (AQE splits one
  * action into one job per materialized query stage, making counts
- * plan-shape-dependent) and broadcasts are disabled via joinStrategy /
+ * plan-shape-dependent) and broadcasts are disabled via
  * broadcastMaxRows = 0 (each BroadcastExchange submits its own async collect
  * job). Under those pins, jobs == driver actions exactly. PageRank is also
  * pinned in the suite's default AQE-on session, where every materialized
@@ -64,7 +64,7 @@ class JobCountSpec extends SparkSpec {
   test("PageRank: exactly one job per extra superstep") {
     val e = pathEdges(noAqe)
     def cfg(k: Int) = PageRankConfig(eps = 0.0, maxIter = k, ckptEvery = 0,
-      joinStrategy = "shuffle_hash")
+      broadcastMaxRows = 0L)
     val j3 = jobsDuring { PageRank.run(noAqe, e, cfg(3)) }
     val j6 = jobsDuring { PageRank.run(noAqe, e, cfg(6)) }
     assert(j6 - j3 == 3, s"expected 1 job/superstep, got j3=$j3 j6=$j6")
@@ -78,7 +78,7 @@ class JobCountSpec extends SparkSpec {
     // keeps the hash partitioning it was produced with.
     val e = nullablePathEdges(spark)
     def cfg(k: Int) = PageRankConfig(eps = 0.0, maxIter = k, ckptEvery = 0,
-      numPartitions = 4, joinStrategy = "shuffle_hash")
+      numPartitions = 4, broadcastMaxRows = 0L)
     var r6: PageRankResult = null
     val j3 = jobsDuring { PageRank.run(spark, e, cfg(3)) }
     val j6 = jobsDuring { r6 = PageRank.run(spark, e, cfg(6)) }
@@ -99,7 +99,7 @@ class JobCountSpec extends SparkSpec {
   test("warm PageRank.run compiles no code: the per-superstep scalar is not a literal") {
     val e = pathEdges(spark)
     def cfg(k: Int) = PageRankConfig(eps = 0.0, maxIter = k, ckptEvery = 0,
-      numPartitions = 4, joinStrategy = "shuffle_hash")
+      numPartitions = 4, broadcastMaxRows = 0L)
     PageRank.run(spark, e, cfg(3)) // warm: compiles this plan shape once
     val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     val before = compiles.getCount
@@ -207,7 +207,7 @@ class JobCountSpec extends SparkSpec {
   }
 
   /** Like noAqe but with broadcast joins also pinned off — for operators
-    * that take no joinStrategy knob (each BroadcastExchange would submit its
+    * that take no broadcastMaxRows knob (each BroadcastExchange would submit its
     * own async collect job and poison the count). */
   private lazy val noAqeNoBc: SparkSession = {
     val s = spark.newSession()

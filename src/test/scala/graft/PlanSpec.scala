@@ -24,21 +24,18 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
 
   test("superstep contribution join avoids SortMergeJoin in both regimes") {
-    val edges = GraphOps.partitionForIteration(
-      PageSynth.edgeList(spark, 2000).toDF(), 4)
-    edges.count()
-    val outDeg = GraphOps.outDegrees(edges)
+    val (edges, _, _) = GraphOps.layoutForIteration(
+      PageSynth.edgeList(spark, 2000).toDF(), 4, numPartitions = 4)
     val verts  = GraphOps.vertices(edges)
     val n      = verts.count()
     val rankDeg = verts.select(col("vid"), lit(1.0 / n).as("w"))
     val empty   = spark.range(0).select(col("id").as("vid"))
 
-    for (strategy <- Seq("broadcast", "shuffle_hash")) {
-      val sums = Salting.contribJoin(edges, rankDeg, empty, 0L, 8, strategy)
-        .groupBy("dst").agg(sum(col("w")).as("s"))
+    for ((regime, bmr) <- Seq("broadcast" -> Long.MaxValue, "shuffle_hash" -> 0L)) {
+      val sums = Salting.contribSums(edges, rankDeg, empty, 0L, 8, Superstep.pinFor(n, bmr))
       sums.collect() // run through AQE so the final plan is the real one
       val plan = executed(sums)
-      assert(!plan.contains("SortMergeJoin"), s"$strategy plan has SMJ:\n$plan")
+      assert(!plan.contains("SortMergeJoin"), s"$regime plan has SMJ:\n$plan")
     }
     edges.unpersist()
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.graph._
 import graft.sources.PageSynth
 
-/** J4 salting invariance, S5 edge-list ingest, W5 CSR layout, A9 rollup smoke. */
+/** J4 salting invariance, S5 edge-list ingest, A9 rollup smoke. */
 class SaltingLayoutSpec extends SparkSpec {
   import spark.implicits._
 
@@ -21,10 +21,9 @@ class SaltingLayoutSpec extends SparkSpec {
 
     val noHubs = Seq.empty[Long].toDF("vid")
     val hub7   = Seq(7L).toDF("vid")
-    val plain  = Salting.contribJoin(edges, rankDeg, noHubs, 0L, 8)
-      .groupBy("dst").agg(sum("w").as("s"))
-    val salted = Salting.contribJoin(edges, rankDeg, hub7, 1L, 8)
-      .groupBy("dst").agg(sum("w").as("s"))
+    val pin    = Superstep.pinFor(rankDeg.count(), Superstep.BroadcastMaxRows)
+    val plain  = Salting.contribSums(edges, rankDeg, noHubs, 0L, 8, pin)
+    val salted = Salting.contribSums(edges, rankDeg, hub7, 1L, 8, pin)
 
     val p = plain.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val q = salted.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
+
 import graft.ckpt.IcebergLikeStore
 import graft.graph._
 import graft.sources.PageSynth
@@ -162,7 +164,29 @@ class StoreResumeSpec extends SparkSpec {
     val nVerts = full.ranks.count()
     assert(resumedSnap.metrics.forall(m => m.partStats.map(_.rows).sum == nVerts))
     assert(resumedSnap.files.nonEmpty && resumedSnap.files.forall(_.bytes > 0))
+
+    // resuming a finished run, stopped at maxIter (above) or on eps, runs no
+    // further superstep and commits no second snapshot of the same superstep
+    def resumeFinished(e: DataFrame, c: PageRankConfig, st: IcebergLikeStore,
+                       done: PageRankResult): Unit = {
+      val again = PageRank.run(spark, e, c, st.rankCheckpointer("ranks"))
+      assert(again.iterations == done.iterations, s"again=${again.iterations} done=${done.iterations}")
+      val want = done.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val got  = again.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(want.keySet == got.keySet)
+      want.foreach { case (k, v) => assert(math.abs(got(k) - v) < 1e-12, s"vid=$k") }
+      val iters = st.history("ranks").map(_.iter)
+      assert(iters.distinct == iters, s"snapshots by superstep: $iters")
+    }
+    resumeFinished(edges, cfg, store, full)
     edges.unpersist()
+
+    val e7    = PageSynth.edgeList(spark, 300L, 7L).toDF()
+    val conv  = PageRankConfig(eps = 1e-6, numPartitions = 4, ckptEvery = 4)
+    val store7 = new IcebergLikeStore(spark, Files.createTempDirectory("graft-resume-eps").toString)
+    val done  = PageRank.run(spark, e7, conv, store7.rankCheckpointer("ranks"))
+    assert(done.iterations < conv.maxIter, "the run must stop on eps")
+    resumeFinished(e7, conv, store7, done)
   }
 
   test("pages live in the store: extraction reads the committed snapshot") {
