@@ -308,8 +308,7 @@ object SparkEntry {
     "q_truss3_iter2" -> ((s, d) =>
       // laidUnd IS the canonical undirected pair set — one exchange, cached
       // across the peel rounds' repeated references (r6)
-      Truss.peelUnd(DocGraph.laidUnd(s, d)._1
-        .select(col("src").as("a"), col("dst").as("b")), k = 3, rounds = 2)),
+      Truss.peelUnd(DocGraph.laidUnd(s, d), k = 3, rounds = 2)),
 
     // exact ≤2-hop out-ball size per vertex — the neighborhood function
     // N(2) behind effective-diameter measurements; exact form is the
@@ -317,15 +316,15 @@ object SparkEntry {
     "q_nhop2" -> ((s, d) => {
       // cached laid table: each expansion round references the edge set, and
       // an unpersisted derivation would re-run explode+distinct per round (r6)
-      val e = DocGraph.laidDirected(s, d)._1
-      operators.Neighborhood.exactBall(GraphOps.vertices(e), e, 2)
+      val laid = DocGraph.laidDirected(s, d)
+      operators.Neighborhood.exactBall(GraphOps.vertices(laid._1), laid, 2)
     }),
 
     // exact truncated harmonic centrality at radius 2, ×6-integer-scaled
     // (6 for distance 1, 3 for distance 2 — LCM keeps it pure BIGINT)
     "q_harmonic2" -> ((s, d) => {
-      val e = DocGraph.laidDirected(s, d)._1 // cached across peel layers (r6)
-      operators.Neighborhood.harmonic(GraphOps.vertices(e), e, 2, 6L)
+      val laid = DocGraph.laidDirected(s, d) // cached across peel layers (r6)
+      operators.Neighborhood.harmonic(GraphOps.vertices(laid._1), laid, 2, 6L)
     }),
 
     // HyperBall vs exact gate: mean relative error of the m=64-register
@@ -335,15 +334,20 @@ object SparkEntry {
     // regime); the 10% gate has 5× margin so FP summation order can't flip
     // it. Exact anchors (n_vertices, sum_ball) keep the row non-vacuous.
     "q_nhop2_hb_gate" -> ((s, d) => {
-      val e = DocGraph.laidDirected(s, d)._1 // cached across both paths' rounds (r6)
-      val v = GraphOps.vertices(e)
-      val exact = operators.Neighborhood.exactBall(v, e, 2)
-      val est = operators.Neighborhood.hyperBall(v, e, 2)
-      exact.join(est, "vid").agg(
+      // each path on its own laid table; HyperBall's counters flow along the
+      // reversed edges, keyed like its state. The vertex universe reads the
+      // reversed table, which stays cached until HyperBall returns.
+      val rev = DocGraph.laidReversed(s, d)
+      val v = GraphOps.vertices(rev._1)
+      val exact = operators.Neighborhood.exactBall(v, DocGraph.laidDirected(s, d), 2)
+      val est = operators.Neighborhood.hyperBall(v, rev, 2)
+      val out = exact.join(est, "vid").agg(
         count(lit(1)).as("n_vertices"),
         sum(col("ball")).as("sum_ball"),
         ((sum(abs(col("est") - col("ball")) / col("ball")) / count(lit(1)))
-          < lit(0.10)).as("err_ok"))
+          < lit(0.10)).as("err_ok")).localCheckpoint(true)
+      Seq(exact, est).foreach(GraphOps.freeCheckpoint)
+      out
     }),
 
     // landmark distance sketch (per-landmark BFS state, key (vid, seed)) —
@@ -474,9 +478,8 @@ object SparkEntry {
     // reachability ground truth, not from the engine's iteration schedule
     "q_scc" -> ((s, d) => {
       val (laid, _, _) = DocGraph.laidDirected(s, d)
-      val out = StronglyConnectedComponents.run(s, laid,
-        verbose = sys.env.contains("GRAFT_SCC_VERBOSE"), assumeDistinct = true)
-      laid.unpersist(false) // out is a union of eager checkpoints
+      val out = StronglyConnectedComponents.run(s, laid, assumeDistinct = true)
+      laid.unpersist(false) // out is eagerly checkpointed
       out
     }),
     // topological layers of the SCC condensation (web-bowtie depth): layer =

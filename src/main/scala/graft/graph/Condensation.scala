@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
  * 100 TB shape: SCC is the dominant cost (see
  * [[StronglyConnectedComponents]]); condensing is two membership equi-joins
  * + a distinct whose output is |condensation| ≪ |E| for web graphs (one
- * giant SCC absorbs the core). The layering loop then runs on the SMALL
- * condensed DAG: zero driver actions per superstep (lazy checkpoint chain,
- * one materializing action), same discipline as every iterative driver here.
+ * giant SCC absorbs the core). The layering then runs on the SMALL
+ * condensed DAG as a [[Superstep.fixedK]] over its laid edges: zero driver
+ * actions per superstep, one materializing action.
  */
 object Condensation {
 
@@ -38,37 +38,27 @@ object Condensation {
   }
 
   /** Per-vertex topological layer after exactly k max-plus supersteps over
-    * the condensation of `edges`: (vid, scc_id, layer_k). */
+    * the condensation of `edges`: (vid, scc_id, layer_k), one eager
+    * checkpoint. The layering state holds the components on a condensation
+    * edge; every other component has no predecessor and stays at layer 0. */
   def topoLayers(spark: SparkSession, edges: DataFrame, k: Int,
                  assumeDistinct: Boolean = false,
                  broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
-    val scc = StronglyConnectedComponents.run(spark, edges,
-      assumeDistinct = assumeDistinct).localCheckpoint(true)
-    val ce  = condense(edges, scc).localCheckpoint(true)
-    // the kernel's crossover, sized by |V| (a cheap scan of the eager scc
-    // checkpoint), which bounds the layering state's one row per
-    // condensation component
-    val pin = Superstep.pinFor(scc.count(), broadcastMaxRows)
-    val inter = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var st = scc.select(col("scc_id").as("c")).distinct()
-      .select(col("c"), lit(0L).as("l"))
-      .localCheckpoint(false)
-    inter += st
-    for (_ <- 1 to k) {
-      val msgs = ce.join(pin(st), ce("cs") === st("c"))
-        .select(ce("cd").as("c"), (col("l") + 1L).as("l"))
-      st = msgs.unionByName(st.select(col("c"), col("l")))
-        .groupBy("c").agg(max(col("l")).as("l"))
-        .localCheckpoint(false)
-      inter += st
+    val scc = StronglyConnectedComponents.run(spark, edges, assumeDistinct = assumeDistinct)
+    val g = Superstep(GraphOps.layoutForIteration(
+      condense(edges, scc).select(col("cs").as("src"), col("cd").as("dst")),
+      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt), broadcastMaxRows)
+    val ce = g.edges
+    val layers = g.fixedK(g.vertices.select(col("vid"), lit(0L).as("l")), k,
+      out = st => scc.join(g.pin(st.select(col("vid").as("scc_id"), col("l"))), Seq("scc_id"), "left")
+        .select(col("vid"), col("scc_id"), coalesce(col("l"), lit(0L)).as(s"layer$k"))) { (st, _) =>
+      ce.join(g.pin(st), ce("src") === st("vid"))
+        .select(ce("dst").as("vid"), (col("l") + 1L).as("l"))
+        .unionByName(st)
+        .groupBy("vid").agg(max(col("l")).as("l"))
     }
-    val out = scc.join(pin(st), scc("scc_id") === st("c"))
-      .select(col("vid"), col("scc_id"), col("l").as(s"layer$k"))
-      .localCheckpoint(true)
-    inter.foreach(GraphOps.freeCheckpoint)
     GraphOps.freeCheckpoint(scc)
-    GraphOps.freeCheckpoint(ce)
-    out
+    layers
   }
 
   /** Oracle SQL for [[topoLayers]]: recursive-closure SCC ground truth

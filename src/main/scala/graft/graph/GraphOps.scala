@@ -154,15 +154,12 @@ object GraphOps {
    * The estimate only picks the partition count — correctness never depends
    * on it, and the returned count is the exact materialized |E|.
    *
-   * Lifetime: the caller owns the cached table. A [[Superstep]] driver
-   * (CC, LP and the fixed-k doc-graph drivers) unpersists it before
-   * returning its eagerly checkpointed result, as do WL refinement and the
-   * SCC, condensation, alternating-CC and neighbourhood-function queries.
-   * Callers that return a LAZY plan over it (truss peel, the exact-ball and
-   * harmonic neighbourhood queries) cannot, and leave it to session cache
-   * hygiene: the bench clears the cache between queries, while a Verify
-   * sweep keeps these small tables for its lifetime, bounded by their count
-   * × the laid edge size.
+   * Lifetime: the caller owns the cached table. Every iterative driver that
+   * takes one — the [[Superstep]] drivers (CC, LP, SCC's label phases,
+   * condensation layering, truss, the neighbourhood balls and the fixed-k
+   * doc-graph drivers), WL refinement, alternating CC and the
+   * neighbourhood-function curve — unpersists it before returning its
+   * eagerly checkpointed result.
    */
   def layoutDedupForIteration(rawEdges: DataFrame, confParts: Int,
                               estEdges: Long,

@@ -10,8 +10,11 @@ import org.apache.spark.sql.graft.CheckpointShim
 /**
  * The superstep loop of a vertex program over a laid edge table
  * (`GraphOps.layoutForIteration` / `layoutDedupForIteration`). PageRank,
- * connected components, label propagation and the fixed-k doc-graph drivers
- * supply an initial state and one superstep; the kernel owns the rest:
+ * connected components, label propagation, the two label phases of strongly
+ * connected components, condensation layering, k-truss peeling, the exact
+ * and HyperBall neighbourhood balls, harmonic centrality and the fixed-k
+ * doc-graph drivers supply an initial state and one superstep; the kernel
+ * owns the rest:
  *
  *  - the vertex table: `(vid)`, hash-laid at the edges' width, or one the
  *    caller built with its |V| (PageRank's `(vid, outDeg)`);
@@ -51,9 +54,10 @@ final class Superstep private[graph] (laid: Superstep.Laid, broadcastMaxRows: Lo
   /** |V|, counted on first use */
   lazy val nV: Long = table.fold(vertices.count())(_._2)
 
-  private val broadcasts = 2 * numEdges <= broadcastMaxRows || nV <= broadcastMaxRows
+  // lazy: a driver whose joins are unpinned never counts |V|
+  private lazy val broadcasts = 2 * numEdges <= broadcastMaxRows || nV <= broadcastMaxRows
 
-  val pin: DataFrame => DataFrame = Superstep.pinWhen(broadcasts)
+  lazy val pin: DataFrame => DataFrame = Superstep.pinWhen(broadcasts)
 
   /** Exactly `k` supersteps from `init`; `step(state, i)` computes the i-th
     * (1-based). `scalar` marks a step that attaches an in-plan scalar. The

@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /**
  * k-truss peeling (Cohen 2008, "Trusses: cohesive subgraphs for social
@@ -23,28 +22,29 @@ import org.apache.spark.storage.StorageLevel
  *
  * 100 TB shape: per round, two wedge joins + one explode of 3·|triangles|
  * rows + one co-partitioned left join — all equi-joins on vertex/edge keys,
- * no pair blowup beyond the wedge bound. The lazy-checkpoint chain keeps
- * the loop at zero driver actions per round (bfsIter's discipline).
+ * no pair blowup beyond the wedge bound. The rounds are a
+ * [[Superstep.fixedK]] whose state is the edge set itself: zero driver
+ * actions per round, one materializing action.
  */
 object Truss {
 
   /** `rounds` support-peel rounds toward the k-truss over the canonical
     * undirected edge set of `edges`; returns surviving (a, b), a < b. */
   def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame =
-    peelUnd(GraphOps.undirected(edges), k, rounds)
+    peelUnd(GraphOps.layoutForIteration(
+      GraphOps.undirected(edges).select(col("a").as("src"), col("b").as("dst")),
+      edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt), k, rounds)
 
-  /** [[peel]] over an ALREADY-canonical undirected pair set (a, b), a < b,
-    * deduplicated — e.g. DocGraph.laidUnd's cached one-exchange layout. */
-  private[graft] def peelUnd(und0: DataFrame, k: Int, rounds: Int): DataFrame = {
+  /** [[peel]] over an ALREADY-canonical undirected pair set laid out as
+    * (src, dst), src < dst, deduplicated — e.g. DocGraph.laidUnd's cached
+    * one-exchange layout, which is unpersisted on return. */
+  private[graft] def peelUnd(laidUnd: Superstep.Laid, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"k-truss needs k ≥ 3, got $k")
     require(rounds >= 1)
-    var und = und0
-    for (_ <- 1 to rounds) {
-      // the rounds chain LAZILY (zero driver actions), so a persist here
-      // would be cancelled by its unpersist before anything materializes
-      // (the former persist/unpersist pair was exactly that no-op); sharing
-      // of the oriented set across its three references is Catalyst's
-      // ReusedExchange over the identical aggregate/join subtrees
+    val g = Superstep(laidUnd)
+    g.fixedK(g.edges.select(col("src").as("a"), col("dst").as("b")), rounds) { (und, _) =>
+      // sharing of the oriented set across its three references is
+      // Catalyst's ReusedExchange over the identical aggregate/join subtrees
       val eo = Triangles.oriented(und.select(col("a").as("src"), col("b").as("dst")))
       val e1 = eo.select(col("u").as("x"), col("v").as("y"))
       val e2 = eo.select(col("u").as("y2"), col("v").as("z"))
@@ -62,12 +62,9 @@ object Truss {
           .as("p"))
         .select(col("p.a").as("a"), col("p.b").as("b"))
         .groupBy("a", "b").agg(count(lit(1)).as("sup"))
-      und = und.join(sup, Seq("a", "b"), "left")
+      und.join(sup, Seq("a", "b"), "left")
         .filter(coalesce(col("sup"), lit(0L)) >= lit((k - 2).toLong))
-        .select(col("a"), col("b"))
-        .localCheckpoint(false)
     }
-    und
   }
 
   /** DuckDB replay of the same peel over a CTE prefix that defines `und`

@@ -64,7 +64,8 @@ object WlRefine {
       val next = sig.join(ranked, Seq("c", "cnt", "s", "mn", "mx"))
         .select(col("vid"), col("rn").as("c"))
         .localCheckpoint(true)
-      GraphOps.freeCheckpoint(st)
+      // `ranked` reads globalRank's eager checkpoint, no longer needed
+      Seq(st, ranked).foreach(GraphOps.freeCheckpoint)
       st = next
     }
     val out = st.select(col("vid"), col("c").as(s"wlc$k")).localCheckpoint(true)

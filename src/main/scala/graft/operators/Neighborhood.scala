@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.HllExprs
+import graft.graph.{GraphOps, Superstep}
 
 /**
  * Neighborhood function over a directed link graph: the size of every
@@ -28,27 +29,30 @@ import graft.functions.HllExprs
  *    sees at most (#map partitions × |V|) counters. This is the 100 TB
  *    path: constant per-edge cost per superstep, no pair materialization.
  *
- * Both iterate with the house lazy-checkpoint chain (plan truncated per
- * round, ONE materializing action at the consumer — bfsIter's discipline).
+ * Both are [[Superstep.fixedK]] runs over a laid edge table: zero driver
+ * actions per round, one materializing action, the laid table released
+ * before the eager result returns. `verts` is the caller's vertex universe.
  */
 object Neighborhood {
 
   /** (vid, ball) — exact |B_k(vid)| including the vertex itself.
-    * `verts` is the vertex universe (vid), `edges` the directed (src, dst). */
-  def exactBall(verts: DataFrame, edges: DataFrame, k: Int): DataFrame = {
+    * `verts` is the vertex universe (vid), `laid` the directed (src, dst). */
+  def exactBall(verts: DataFrame, laid: Superstep.Laid, k: Int): DataFrame = {
     require(k >= 0 && k <= 4, s"exact ball materializes Σ|B_k| pairs — k=$k refused")
-    // fresh projection per round with disjoint names — a reach⋈edges
-    // self-join over shared column names is the AMBIGUOUS_REFERENCE trap
-    // (same discipline as RandomWalk's per-step edge renames)
-    val e = edges.select(col("src").as("e_src"), col("dst").as("e_dst"))
-    var reach = verts.select(col("vid").as("src"), col("vid").as("dst"))
-    for (_ <- 1 to k) {
-      val step = reach.join(e, col("dst") === col("e_src"))
-        .select(col("src"), col("e_dst").as("dst"))
-      reach = reach.union(step).distinct().localCheckpoint(false)
+    val g = Superstep(laid)
+    val e = renamed(g.edges)
+    g.fixedK(verts.select(col("vid").as("src"), col("vid").as("dst")), k,
+      out = _.groupBy(col("src").as("vid")).agg(count(lit(1)).as("ball"))) { (reach, _) =>
+      reach.union(reach.join(e, col("dst") === col("e_src"))
+        .select(col("src"), col("e_dst").as("dst"))).distinct()
     }
-    reach.groupBy(col("src").as("vid")).agg(count(lit(1)).as("ball"))
   }
+
+  /** fresh projection with disjoint names — a reach⋈edges self-join over
+    * shared column names is the AMBIGUOUS_REFERENCE trap (same discipline
+    * as RandomWalk's per-step edge renames) */
+  private def renamed(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("e_src"), col("dst").as("e_dst"))
 
   /**
    * (vid, harmonic_x{scale}) — exact TRUNCATED harmonic centrality at
@@ -65,30 +69,26 @@ object Neighborhood {
    * verification path; at web scale the ball curve comes from
    * [[hyperBall]] and harmonic from its per-radius deltas.
    */
-  def harmonic(verts: DataFrame, edges: DataFrame, k: Int, scale: Long): DataFrame = {
+  def harmonic(verts: DataFrame, laid: Superstep.Laid, k: Int, scale: Long): DataFrame = {
     require(k >= 1 && k <= 4, s"exact harmonic materializes Σ|B_k| pairs — k=$k refused")
     require((1 to k).forall(d => scale % d == 0),
       s"scale=$scale must be divisible by every distance ≤ $k")
     // no input dedup needed: each step's .distinct() collapses duplicate
-    // edges, and the anti-join against reach (seeded with identity pairs)
-    // drops self-loop and shorter-distance pairs — same trust as exactBall
-    val e = edges.select(col("src").as("e_src"), col("dst").as("e_dst"))
-    var reach    = verts.select(col("vid").as("src"), col("vid").as("dst"))
-    var frontier = reach
-    val layers = scala.collection.mutable.ArrayBuffer[(DataFrame, Int)]()
-    for (d <- 1 to k) {
-      val step = frontier.join(e, col("dst") === col("e_src"))
+    // edges, and the anti-join against the reached pairs (seeded with
+    // identity pairs) drops self-loop and shorter-distance pairs — same
+    // trust as exactBall. The state is every reached pair with its distance.
+    val g = Superstep(laid)
+    val e = renamed(g.edges)
+    val score = s"harmonic_x$scale"
+    g.fixedK(verts.select(col("vid").as("src"), col("vid").as("dst"), lit(0).as("d")), k,
+      out = reach => verts.join(reach.filter(col("d") > 0)
+          .groupBy(col("dst").as("vid")).agg(sum(expr(s"$scale div d")).as("h")), Seq("vid"), "left")
+        .select(col("vid"), coalesce(col("h"), lit(0L)).as(score))) { (reach, i) =>
+      val frontier = reach.filter(col("d") === i - 1).join(e, col("dst") === col("e_src"))
         .select(col("src"), col("e_dst").as("dst")).distinct()
-      frontier = step.join(reach, Seq("src", "dst"), "left_anti").localCheckpoint(false)
-      reach = reach.union(frontier).localCheckpoint(false)
-      layers += (frontier -> d)
+        .join(reach, Seq("src", "dst"), "left_anti")
+      reach.unionByName(frontier.withColumn("d", lit(i)))
     }
-    val col0 = s"harmonic_x$scale"
-    val h = layers.map { case (f, d) =>
-      f.groupBy(col("dst").as("vid")).agg((count(lit(1)) * lit(scale / d)).as("h"))
-    }.reduce(_ unionByName _).groupBy("vid").agg(sum(col("h")).as("h"))
-    verts.join(h, Seq("vid"), "left")
-      .select(col("vid"), coalesce(col("h"), lit(0L)).as(col0))
   }
 
   /**
@@ -108,7 +108,7 @@ object Neighborhood {
               tol: Double): DataFrame = {
     require(kExact >= 1 && kExact <= 4, s"exact anchors materialize Σ|B_t| pairs — kExact=$kExact refused")
     require(k >= kExact, s"k=$k must cover kExact=$kExact")
-    val e = edges.select(col("src").as("e_src"), col("dst").as("e_dst"))
+    val e = renamed(edges)
     val inter = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var reach = verts.select(col("vid").as("src"), col("vid").as("dst"))
     val nfEx = scala.collection.mutable.ArrayBuffer[DataFrame]()
@@ -149,22 +149,21 @@ object Neighborhood {
         (col("est_sum") > 0.0).as("gate_ok"))
     }
     val out = (gated ++ estOnly).reduce(_ unionByName _).localCheckpoint(true)
-    inter.foreach(graft.graph.GraphOps.freeCheckpoint)
+    (inter ++ nfEx ++ estSums).foreach(GraphOps.freeCheckpoint)
     out
   }
 
-  /** (vid, est) — HyperBall estimate of |B_k(vid)| as a double. */
-  def hyperBall(verts: DataFrame, edges: DataFrame, k: Int): DataFrame = {
-    val e = edges.select(col("src").as("e_src"), col("dst").as("e_dst"))
-    var b = verts.select(col("vid"), HllExprs.hllInit(col("vid")).as("reg"))
-      .localCheckpoint(false)
-    for (_ <- 1 to k) {
-      val in = e.join(b, col("e_dst") === col("vid"))
-        .select(col("e_src").as("vid"), col("reg"))
-      b = in.unionByName(b)
+  /** (vid, est) — HyperBall estimate of |B_k(vid)| as a double. `laidRev`
+    * holds the graph's edges reversed (dst→src): counters flow along them,
+    * a join on the laid key. */
+  def hyperBall(verts: DataFrame, laidRev: Superstep.Laid, k: Int): DataFrame = {
+    val g = Superstep(laidRev)
+    val e = g.edges
+    g.fixedK(verts.select(col("vid"), HllExprs.hllInit(col("vid")).as("reg")), k,
+      out = _.select(col("vid"), HllExprs.hllEstimate(col("reg")).as("est"))) { (b, _) =>
+      e.join(b, e("src") === b("vid")).select(e("dst").as("vid"), b("reg"))
+        .unionByName(b)
         .groupBy("vid").agg(HllExprs.hllUnionAgg(col("reg")).as("reg"))
-        .localCheckpoint(false)
     }
-    b.select(col("vid"), HllExprs.hllEstimate(col("reg")).as("est"))
   }
 }

@@ -61,6 +61,13 @@ class BlockLeakSpec extends SparkSpec {
     for ((name, run) <- drivers) leavesOnlyItsResult(name)(run())
   }
 
+  test("the SCC, condensation, WL, truss and neighbourhood queries leave only their result's checkpoint") {
+    val dir = sf
+    for (q <- Seq("q_scc", "q_topo_iter6", "q_wl_iter3", "q_truss3_iter2", "q_nhop2",
+                  "q_harmonic2", "q_nhop2_hb_gate", "q_nf_hb"))
+      leavesOnlyItsResult(q)(SparkEntry.queries(q)(spark, dir))
+  }
+
   test("CC and LP leave only their result's checkpoint, in the shuffle regime too") {
     val e = (0L until 30L).map(i => (i, i + 1)).toDF("src", "dst")
     for (bmr <- Seq(Superstep.BroadcastMaxRows, 0L)) {

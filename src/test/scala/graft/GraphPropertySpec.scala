@@ -158,6 +158,47 @@ class GraphPropertySpec extends SparkSpec {
       }
     }
 
+    // SCC (against refScc), condensation layering, truss peeling, the exact
+    // and HyperBall balls and harmonic centrality over the same tables plus
+    // the empty one; expectations by hand for the 4-vertex duplicate table
+    // (cycle 0→1→2→0 entered from 3)
+    import operators.Neighborhood
+    def ids(df: DataFrame): Map[Long, Seq[Any]] =
+      df.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    def balls(x: DataFrame) = ids(Neighborhood.exactBall(GraphOps.vertices(x), dir(x), 2))
+    def harmonic(x: DataFrame) = ids(Neighborhood.harmonic(GraphOps.vertices(x), dir(x), 2, 2L))
+    def estimates(x: DataFrame) =
+      ids(Neighborhood.hyperBall(GraphOps.vertices(x), DocGraph.lay(spark, x, DocGraph.reversed), 2))
+    def truss(x: DataFrame) = Truss.peel(x, 3, 2).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val selfIds = selfLoopRows.map(_._1)
+    for ((input, rows) <- Seq("empty" -> Seq.empty[(Long, Long)], "self-loops" -> selfLoopRows,
+                              "duplicates" -> dupRows)) {
+      val g = rows.toDF("src", "dst")
+      val scc = StronglyConnectedComponents.run(spark, g)
+      assert(scc.columns.toSeq == Seq("vid", "scc_id"), s"SCC on $input")
+      assert(scc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == refScc(rows), s"SCC on $input")
+      val topo = Condensation.topoLayers(spark, g, 3)
+      assert(topo.columns.toSeq == Seq("vid", "scc_id", "layer3"), s"topoLayers on $input")
+      val (layers, ball, harm, tri) = input match {
+        case "empty" => (Map.empty[Long, Seq[Any]], Map.empty[Long, Seq[Any]], Map.empty[Long, Seq[Any]], Set.empty[(Long, Long)])
+        case "self-loops" => (selfIds.map(v => v -> Seq(v, 0L)).toMap, selfIds.map(_ -> Seq(1L)).toMap,
+          selfIds.map(_ -> Seq(0L)).toMap, Set.empty[(Long, Long)])
+        case _ => (Map(0L -> Seq(0L, 1L), 1L -> Seq(0L, 1L), 2L -> Seq(0L, 1L), 3L -> Seq(3L, 0L)),
+          (0L to 3L).map(_ -> Seq(3L)).toMap, Map(0L -> Seq(3L), 1L -> Seq(5L), 2L -> Seq(4L), 3L -> Seq(0L)),
+          Set((0L, 1L), (0L, 2L), (1L, 2L)))
+      }
+      assert(ids(topo) == layers, s"topoLayers on $input")
+      assert(truss(g) == tri, s"truss on $input")
+      assert(balls(g) == ball, s"exactBall on $input")
+      assert(harmonic(g) == harm, s"harmonic on $input")
+      val est = estimates(g)
+      assert(est.keySet == ball.keySet, s"hyperBall on $input")
+      est.foreach { case (v, Seq(e: Double)) =>
+        val b = ball(v).head.asInstanceOf[Long]
+        assert(math.abs(e - b) <= 0.5 * b, s"hyperBall on $input: vid $v est $e, ball $b")
+      }
+    }
+
     // PageRank, unsalted and with every source of out-degree > 1 salted, over
     // the same tables and a one-hub star: ranks sum to 1 and match the
     // sequential reference

@@ -228,8 +228,8 @@ class JobCountSpec extends SparkSpec {
   test("HyperBall: zero extra jobs per superstep (lazy chain, one materializing action)") {
     val e = pathEdges(noAqeNoBc)
     val v = GraphOps.vertices(e)
-    val j1 = jobsDuring { operators.Neighborhood.hyperBall(v, e, 1).count() }
-    val j3 = jobsDuring { operators.Neighborhood.hyperBall(v, e, 3).count() }
+    val j1 = jobsDuring { operators.Neighborhood.hyperBall(v, DocGraph.lay(noAqeNoBc, e, DocGraph.reversed), 1).count() }
+    val j3 = jobsDuring { operators.Neighborhood.hyperBall(v, DocGraph.lay(noAqeNoBc, e, DocGraph.reversed), 3).count() }
     assert(j3 - j1 == 0, s"expected a superstep-independent job count, got j1=$j1 j3=$j3")
   }
 
