@@ -170,10 +170,8 @@ object SparkEntry {
       .localCheckpoint(true)
     val dirPairs = pairs.select(col("a").as("src"), col("b").as("dst"))
     val cc = ConnectedComponents.runLaid(
-      GraphOps.layoutDedupForIteration(
-        dirPairs.unionByName(pairs.select(col("b").as("src"), col("a").as("dst"))),
-        s.conf.get("spark.sql.shuffle.partitions", "32").toInt,
-        estEdges = 2L * pairs.count()))
+      Superstep.lay(dirPairs.unionByName(pairs.select(col("b").as("src"), col("a").as("dst"))),
+        estimate = Some(2L * pairs.count())))
     // cc's labels are materialized and the laid pair table is unpersisted by
     // runLaid, so the pair checkpoint has no live reader left — free it
     // (eager-checkpoint blocks survive clearCache; Verify never clears)

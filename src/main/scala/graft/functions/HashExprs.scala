@@ -20,9 +20,9 @@ import org.apache.spark.sql.graft.ColumnShim
  * per-element interpretation cost into a JIT-hot inner loop.
  *
  * Eval is a single tight loop per row (CodegenFallback). Measured
- * (tools/CodegenProbe, 2M rows × ~22 shingles): the fallback boundary DOES
- * exclude the projection from WholeStageCodegen, but per-row cost is the
- * signature arithmetic itself (simhash ≈ 12.5 µs/row vs a 0.15 µs/row pure
+ * (BENCH/BASELINE.md §"doGenCode for HashExprs", 2M rows × ~22 shingles):
+ * the fallback boundary DOES exclude the projection from WholeStageCodegen,
+ * but per-row cost is the signature arithmetic itself (simhash ≈ 12.5 µs/row vs a 0.15 µs/row pure
  * codegen hash floor), and every production use feeds a Generate
  * (posexplode banding) that bounds the fusion region anyway — so doGenCode
  * would win back only the eval-call boundary, well under 1% here. Deferred

@@ -45,9 +45,8 @@ object Condensation {
                  assumeDistinct: Boolean = false,
                  broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
     val scc = StronglyConnectedComponents.run(spark, edges, assumeDistinct = assumeDistinct)
-    val g = Superstep(GraphOps.layoutForIteration(
-      condense(edges, scc).select(col("cs").as("src"), col("cd").as("dst")),
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt), broadcastMaxRows)
+    val g = Superstep(Superstep.lay(
+      condense(edges, scc).select(col("cs").as("src"), col("cd").as("dst"))), broadcastMaxRows)
     val ce = g.edges
     val layers = g.fixedK(g.vertices.select(col("vid"), lit(0L).as("l")), k,
       out = st => scc.join(g.pin(st.select(col("vid").as("scc_id"), col("l"))), Seq("scc_id"), "left")

@@ -21,12 +21,9 @@ import org.apache.spark.sql.functions._
  */
 object ConnectedComponents {
 
-  def run(spark: SparkSession, edges: DataFrame,
-          numPartitions: Int = 0, maxIter: Int = 100,
+  def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 100,
           broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame =
-    runLaid(GraphOps.layoutForIteration(GraphOps.symmetrized(edges),
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt,
-      numPartitions = numPartitions), maxIter, broadcastMaxRows)
+    runLaid(Superstep.lay(GraphOps.symmetrized(edges)), maxIter, broadcastMaxRows)
 
   /** [[run]] over a laid symmetric edge table (e.g. DocGraph.laidSym's
     * one-exchange layout), which is unpersisted on return. */
@@ -66,8 +63,8 @@ object ConnectedComponents {
                                pin: DataFrame => DataFrame, parts: Int): DataFrame = {
     // width control is per-plan (explicit repartition on the shuffle keys —
     // the following groupBy/join/distinct reuse that partitioning, so no
-    // second exchange appears), NOT a session-conf override: mutating
-    // spark.sql.shuffle.partitions for the loop's duration silently clamped
+    // second exchange appears), NOT a session-conf override: mutating the
+    // session's shuffle width for the loop's duration silently clamped
     // any concurrent query on the same session (ADVICE r4)
     val sym = e.select(col("src").as("u"), col("dst").as("v"))
       .union(e.select(col("dst").as("u"), col("src").as("v")))
@@ -136,8 +133,7 @@ object ConnectedComponents {
     // groupBy/join/distinct reuse. At scale the clamp is inert and the
     // configured width is kept.
     val eCnt = e.count()
-    val parts = GraphOps.rightSizedParts(eCnt * 2,
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    val parts = Superstep.width(spark, eCnt * 2)
     try {
       var iter  = 0
       var fixed = false

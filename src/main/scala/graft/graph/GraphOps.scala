@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graft.CheckpointShim
 
 import graft.functions.Html
 
@@ -83,96 +83,6 @@ object GraphOps {
   }
 
   /**
-   * Right-sized iteration partition count: ~`edgesPerPart` edges per task,
-   * clamped to [1, confParts]. A superstep stage always schedules one task
-   * per partition, so a 20k-edge graph on 32 partitions pays 32 near-empty
-   * tasks × ~40 supersteps of pure scheduling overhead (measured: 3.6 s vs
-   * 0.6 s per superstep at sf0.1). The former floor of 4 paid 4 near-empty
-   * tasks per stage on sub-200k-edge graphs for no parallelism gain —
-   * dropping it to 1 measured another ~1 s off a 40-superstep fixed-k run
-   * at sf0.1 (r6 DeferredPrProbe). At scale the clamp is inert — any graph
-   * past `confParts × edgesPerPart` edges (1.6M at 32 parts) keeps the
-   * configured width.
-   */
-  def rightSizedParts(edgeCount: Long, confParts: Int,
-                      edgesPerPart: Long = 50000L): Int =
-    math.max(1L, math.min(confParts.toLong,
-      edgeCount / edgesPerPart)).toInt
-
-  /**
-   * Iteration-ready edge cache: hash-partitioned on `src`, so every superstep
-   * join `edges.src == state.vid` reuses the layout and only the state side
-   * shuffles; sorted within partitions, so a superstep's probe side streams
-   * per-source runs; persisted MEMORY_AND_DISK for all supersteps. The
-   * layout is made at the configured width and counted, then — only when the
-   * graph turns out far smaller than that width warrants — re-made at the
-   * right-sized width from the cache (one extra tiny shuffle, saved on every
-   * superstep). Returns (cached edges, |E|, parts). `minParts` floors the
-   * right-sized width (capped at `confParts`); a positive `numPartitions` is
-   * taken exactly instead.
-   */
-  def layoutForIteration(edges: DataFrame, confParts: Int, minParts: Int = 1,
-                         numPartitions: Int = 0): (DataFrame, Long, Int) = {
-    val width = if (numPartitions > 0) numPartitions else confParts
-    val e0  = lay(edges, width, "src")
-    val cnt = e0.count()
-    val p   =
-      if (numPartitions > 0) width
-      else math.max(math.min(minParts, confParts), rightSizedParts(cnt, confParts))
-    if (p == width) (e0, cnt, width) else (relay(e0, p, "src"), cnt, p)
-  }
-
-  /** A laid edge table re-laid by `key` at `parts` partitions, sorted within
-    * them and materialized from the cached `laid`, which is then released. */
-  def relay(laid: DataFrame, parts: Int, key: String): DataFrame = {
-    val e = lay(laid, parts, key)
-    e.count()
-    laid.unpersist(false)
-    e
-  }
-
-  private def lay(df: DataFrame, parts: Int, key: String): DataFrame =
-    df.repartition(parts, col(key)).sortWithinPartitions(key).persist(StorageLevel.MEMORY_AND_DISK)
-
-  /**
-   * ONE-exchange dedup + layout for a raw (possibly duplicate-bearing) edge
-   * stream whose size the caller can estimate without a job (guide §2.4 —
-   * remove shuffles outright): hash-partition on `src` at the width
-   * right-sized from `estEdges`, fold the exact (src, dst) dedup into the
-   * SAME exchange — `HashPartitioning(src)` satisfies the distinct's
-   * `ClusteredDistribution(src, dst)`, so Catalyst inserts no second
-   * shuffle — then CSR-sort, persist, count. Replaces the former
-   * distinct-exchange → repartition-exchange → (re-layout exchange) triple
-   * of `edges().distinct()` + [[layoutForIteration]] with a single shuffle
-   * and a single materializing count.
-   *
-   * Trade stated for 100 TB: the raw rows shuffle UNaggregated (the explicit
-   * repartition precedes the dedup, so there is no map-side combine). Use
-   * only where raw ≈ distinct (the doc graph's duplicate rate is per-doc
-   * hash collisions, ≲0.2%); a heavily duplicated source should keep the
-   * distinct-first shape so partial aggregation shrinks the shuffle.
-   * The estimate only picks the partition count — correctness never depends
-   * on it, and the returned count is the exact materialized |E|.
-   *
-   * Lifetime: the caller owns the cached table. Every iterative driver that
-   * takes one — the [[Superstep]] drivers (CC, LP, SCC's label phases,
-   * condensation layering, truss, the neighbourhood balls and the fixed-k
-   * doc-graph drivers), WL refinement, alternating CC and the
-   * neighbourhood-function curve — unpersists it before returning its
-   * eagerly checkpointed result.
-   */
-  def layoutDedupForIteration(rawEdges: DataFrame, confParts: Int,
-                              estEdges: Long,
-                              keyCol: String = "src"): (DataFrame, Long, Int) = {
-    val p = rightSizedParts(estEdges, confParts)
-    val laid = rawEdges.repartition(p, col(keyCol))
-      .dropDuplicates("src", "dst")
-      .sortWithinPartitions(keyCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    (laid, laid.count(), p)
-  }
-
-  /**
    * Attach a one-row scalar frame to EVERY row of `df` as a broadcast HASH
    * join on a degenerate NON-foldable key: both sides key on `attr * 0`
    * (always 0, but an attribute expression, so constant folding cannot
@@ -196,11 +106,11 @@ object GraphOps {
    * ContextCleaner only drops checkpoint blocks after the RDD is GC'd on the
    * driver — in a tight superstep loop that lags far behind allocation and
    * shows up as spill/GC spikes, so iterative drivers free the previous
-   * superstep's blocks explicitly.
+   * superstep's blocks explicitly ([[CheckpointShim.free]]).
    */
   def freeCheckpoint(df: DataFrame): Unit =
     df.queryExecution.logical.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case lr: org.apache.spark.sql.execution.LogicalRDD => CheckpointShim.free(lr.rdd)
       case _ => ()
     }
 

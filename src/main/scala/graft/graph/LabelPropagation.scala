@@ -20,12 +20,9 @@ import org.apache.spark.sql.functions._
  */
 object LabelPropagation {
 
-  def run(spark: SparkSession, edges: DataFrame,
-          numPartitions: Int = 0, maxIter: Int = 20,
+  def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 20,
           broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame =
-    runLaid(GraphOps.layoutForIteration(GraphOps.symmetrized(edges),
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt,
-      numPartitions = numPartitions), maxIter, broadcastMaxRows)
+    runLaid(Superstep.lay(GraphOps.symmetrized(edges)), maxIter, broadcastMaxRows)
 
   /** [[run]] over a laid symmetric edge table (e.g. DocGraph.laidSym's
     * one-exchange layout), which is unpersisted on return. `maxIter` is

@@ -32,7 +32,7 @@ final case class PageRankConfig(
     damping: Double = 0.85,
     eps: Double = 1e-9,
     maxIter: Int = 200,
-    numPartitions: Int = 0,          // 0 → spark.sql.shuffle.partitions
+    numPartitions: Int = 0,          // 0 → right-sized, Superstep.width
     /** out-degree above which a source vertex is treated as a hub and salted
       * (J4). 0 → derived from the run's own degree stats (A8):
       * max(1024, |E| / (2·partitions)) — a key holding more than half an
@@ -91,8 +91,8 @@ final case class PageRankConfig(
  * every stage. With AQE on, each query stage is its own job, so 2: the
  * partial-sum exchange (shuffle regime) or the broadcast build (broadcast
  * regime), then the materializing pass. One exception: in the shuffle regime
- * with `parts` other than `spark.sql.shuffle.partitions`, the planner lays
- * the update join out at the session's width, so the state is exchanged for
+ * with `parts` other than the session's shuffle-partition count, the planner
+ * lays the update join out at the session's width, so the state is exchanged for
  * the contribution join and again for the update join (4 jobs).
  */
 object PageRank {
@@ -132,9 +132,8 @@ object PageRank {
     // the right-sized width's floor is 2: a one-partition exchange plans as
     // SinglePartition, which the co-partitioned superstep joins do not accept
     // — they re-shuffle the state (and the shuffle regime's edges) each time
-    val (eSrc, edgeCount, parts) = GraphOps.layoutForIteration(typedEdges,
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt, minParts = 2,
-      numPartitions = cfg.numPartitions)
+    val (eSrc, edgeCount, parts) =
+      Superstep.lay(typedEdges, parts = cfg.numPartitions, minParts = 2)
 
     // hub sources for salting: threshold from the run's own degree stats when
     // not pinned (SURVEY.md §5.2); membership stays distributed as a DataFrame
@@ -183,8 +182,15 @@ object PageRank {
     // chain. One extra edge shuffle up front buys maxIter shuffle-free
     // supersteps. The shuffle regime keeps the src layout (its join streams
     // the cached edge side); why the crossover stays at 500k rows:
-    // Superstep.BroadcastMaxRows, OPTIMIZATION_r06.md.
-    val e = if (n <= cfg.broadcastMaxRows) GraphOps.relay(eSrc, parts, "dst") else eSrc
+    // Superstep.BroadcastMaxRows, OPTIMIZATION_r06.md. The dst layout is laid
+    // from the src layout at its final width: the order of a destination's
+    // in-edges, and so the rounding of its contribution sum, is then the same
+    // whether that width was pinned or right-sized.
+    val e = if (n > cfg.broadcastMaxRows) eSrc else {
+      val byDst = Superstep.lay(eSrc, key = "dst", parts = parts)._1
+      eSrc.unpersist(false)
+      byDst
+    }
     val g = new Superstep((e, edgeCount, parts), cfg.broadcastMaxRows, Some(verts -> n))
 
     // --- resume or cold start: the rank state (vid, rank, outDeg) and, in
@@ -230,8 +236,8 @@ object PageRank {
       cur.join(Superstep.shuffleHash(contribs), cur("vid") === contribs("dst"), "left")
         .select(cur("vid"), newRank.as("rank"), cur("outDeg"), cur("rank").as("prev"))
     }(_.head / Scale < cfg.eps, (iter, sums, mat) => {
-      // in the shuffle regime with `parts` other than spark.sql.shuffle.
-      // partitions, the planner lays the update join out at the latter width
+      // in the shuffle regime with `parts` other than the session's shuffle
+      // width, the planner lays the update join out at the latter width
       // (and exchanges the state twice); count the state's real partitions once
       val width = mat.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.getNumPartitions
       if (width != partStats.size)

@@ -63,8 +63,7 @@ object StronglyConnectedComponents {
     // r6: shuffle width right-sized from the materialized |E| (the former
     // fixed conf width scheduled 32 near-empty tasks per superstep on small
     // remainders — PageRank.run's rationale, applied here)
-    val parts = GraphOps.rightSizedParts(nE,
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    val parts = Superstep.width(spark, nE)
     // self-loops are SCC-irrelevant (v is always in its own SCC) but their
     // endpoints are still vertices
     // lazy: the |V| count on the next line is the materializing action (r6)

@@ -31,9 +31,8 @@ object Truss {
   /** `rounds` support-peel rounds toward the k-truss over the canonical
     * undirected edge set of `edges`; returns surviving (a, b), a < b. */
   def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame =
-    peelUnd(GraphOps.layoutForIteration(
-      GraphOps.undirected(edges).select(col("a").as("src"), col("b").as("dst")),
-      edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt), k, rounds)
+    peelUnd(Superstep.lay(
+      GraphOps.undirected(edges).select(col("a").as("src"), col("b").as("dst"))), k, rounds)
 
   /** [[peel]] over an ALREADY-canonical undirected pair set laid out as
     * (src, dst), src < dst, deduplicated — e.g. DocGraph.laidUnd's cached

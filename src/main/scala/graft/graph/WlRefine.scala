@@ -36,8 +36,7 @@ object WlRefine {
   def refine(spark: SparkSession, edges: DataFrame, k: Int): DataFrame = {
     val sym = GraphOps.symmetrized(
       edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst")))
-    refineLaid(spark, GraphOps.layoutForIteration(sym,
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt), k)
+    refineLaid(spark, Superstep.lay(sym), k)
   }
 
   /** [[refine]] core over a pre-laid-out symmetric edge table (cached,

@@ -49,12 +49,9 @@ object DocGraph {
   /** Expected |E| with NO job: each doc emits `doc_id % 7 + 1` candidate
     * links (mean 4, exact over any id-contiguous corpus); self-loop and
     * duplicate losses are ≲0.2 %. Only ever used to pick a partition count
-    * (GraphOps.rightSizedParts) — correctness never depends on it. */
+    * (Superstep.width) — correctness never depends on it. */
   private def estEdges(spark: SparkSession, sfDir: String): Long =
     4L * math.max(1L, nDocs(spark, sfDir))
-
-  private def confParts(spark: SparkSession): Int =
-    spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
   /** Directed doc edge table laid out for iteration — same rows as
     * [[edges]], produced with ONE exchange (dedup folded into the
@@ -62,22 +59,19 @@ object DocGraph {
     * distinct-exchange → repartition-exchange → re-layout triple. The
     * consuming driver unpersists it. */
   private[graft] def laidDirected(spark: SparkSession, sfDir: String): Laid =
-    GraphOps.layoutDedupForIteration(rawEdges(spark, sfDir),
-      confParts(spark), estEdges(spark, sfDir))
+    Superstep.lay(rawEdges(spark, sfDir), estimate = Some(estEdges(spark, sfDir)))
 
   /** [[laidDirected]] partitioned on `dst` instead of `src` — the layout the
     * broadcast-regime fixed-k PageRank wants: its per-superstep groupBy(dst)
     * lands on the cached partitioning (zero exchange), while the rank side
     * ships as a broadcast hash relation and never needs src clustering. */
   private[graft] def laidDirectedDst(spark: SparkSession, sfDir: String): Laid =
-    GraphOps.layoutDedupForIteration(rawEdges(spark, sfDir),
-      confParts(spark), estEdges(spark, sfDir), keyCol = "dst")
+    Superstep.lay(rawEdges(spark, sfDir), key = "dst", estimate = Some(estEdges(spark, sfDir)))
 
   /** Directed doc edges REVERSED (dst→src), laid out in one exchange —
     * the landmark driver's propagation orientation. */
   private[graft] def laidReversed(spark: SparkSession, sfDir: String): Laid =
-    GraphOps.layoutDedupForIteration(reversed(rawEdges(spark, sfDir)),
-      confParts(spark), estEdges(spark, sfDir))
+    Superstep.lay(reversed(rawEdges(spark, sfDir)), estimate = Some(estEdges(spark, sfDir)))
 
   /** Symmetric doc edge set (both orientations, distinct — identical rows to
     * `GraphOps.symmetrized(edges(…))`), laid out in ONE exchange: distinct of
@@ -85,28 +79,25 @@ object DocGraph {
     * undirected set. */
   private[graft] def laidSym(spark: SparkSession, sfDir: String): Laid = {
     val r = rawEdges(spark, sfDir)
-    GraphOps.layoutDedupForIteration(
-      r.unionByName(reversed(r)), confParts(spark), 2L * estEdges(spark, sfDir))
+    Superstep.lay(r.unionByName(reversed(r)), estimate = Some(2L * estEdges(spark, sfDir)))
   }
 
   /** Canonical undirected pairs a < b as (src, dst) — identical rows to
     * `GraphOps.undirected(edges(…))` under that renaming — laid out in ONE
     * exchange. */
   private[graft] def laidUnd(spark: SparkSession, sfDir: String): Laid =
-    GraphOps.layoutDedupForIteration(
-      rawEdges(spark, sfDir).select(
+    Superstep.lay(rawEdges(spark, sfDir).select(
         least(col("src"), col("dst")).as("src"), greatest(col("src"), col("dst")).as("dst")),
-      confParts(spark), estEdges(spark, sfDir))
+      estimate = Some(estEdges(spark, sfDir)))
 
   /** Any (src, dst) edge table with its ids cast to long, oriented by
     * `orient` and laid out for iteration as it is (no dedup) — the drivers'
     * `*IterLaid` entry on an edge table of the caller's. Orientations:
     * identity (directed), [[reversed]], `GraphOps.symmetrized`,
     * [[canonical]]. */
-  private[graft] def lay(spark: SparkSession, edges: DataFrame,
-                         orient: DataFrame => DataFrame = identity): Laid =
-    GraphOps.layoutForIteration(orient(edges.select(
-      col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))), confParts(spark))
+  private[graft] def lay(edges: DataFrame, orient: DataFrame => DataFrame = identity): Laid =
+    Superstep.lay(orient(edges.select(
+      col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))))
 
   /** Edges dst→src. */
   private[graft] def reversed(edges: DataFrame): DataFrame =

@@ -168,14 +168,15 @@ object Similarity {
    * candidates come from an equi-join on centroid id, never an all-pairs
    * join, and at scale the inverted lists ARE the partition layout.
    *
-   * SCALE ENVELOPE (measured, AnnScaleProbe): single-level IVF's candidate
-   * volume is N·nProbe·N/nlist rows through the re-rank shuffle; with nlist
-   * clamped (ranking cost is N·nlist dots) this grows quadratically in N —
-   * ~2 B candidate rows at 1 M vectors. Flat IVF is therefore the
-   * 10⁴–10⁶-vector tool; past that use [[lshTopK]] (bucket count grows with
-   * the corpus at constant per-row cost) or [[ivfTopKTwoLevel]] (the
-   * coarse-router hierarchy — measured 49 s / twin-recall 1.0 at 1 M
-   * vectors where this flat path ran >20 min, AnnScaleProbe r5).
+   * SCALE ENVELOPE (measured, BENCH/BASELINE.md §"ANN at 1M vectors"):
+   * single-level IVF's candidate volume is N·nProbe·N/nlist rows through
+   * the re-rank shuffle; with nlist clamped (ranking cost is N·nlist dots)
+   * this grows quadratically in N — ~2 B candidate rows at 1 M vectors. Flat
+   * IVF is therefore the 10⁴–10⁶-vector tool; past that use [[lshTopK]]
+   * (bucket count grows with the corpus at constant per-row cost) or
+   * [[ivfTopKTwoLevel]] (the coarse-router hierarchy — measured 49 s /
+   * twin-recall 1.0 at 1 M vectors where this flat path ran >20 min, same
+   * section).
    */
   def ivfTopK(docs: DataFrame, idCol: String, vecCol: String, k: Int,
               nCentroids: Int = 0, nProbe: Int = 4, iters: Int = 2): DataFrame = {
@@ -283,9 +284,9 @@ object Similarity {
 
   /**
    * Two-level (coarse-router) IVF ANN — the scale path flat [[ivfTopK]]'s
-   * measured envelope calls for (AnnScaleProbe r4: flat IVF's candidate
-   * volume N·nProbe·N/nlist goes quadratic once nlist clamps; 155 s at 200k
-   * vectors, >20 min at 1M). Here nlist grows ~linearly with the corpus
+   * measured envelope calls for (BENCH/BASELINE.md §"ANN at 1M vectors":
+   * flat IVF's candidate volume N·nProbe·N/nlist goes quadratic once nlist
+   * clamps; 155 s at 200k vectors, >20 min at 1M). Here nlist grows ~linearly with the corpus
    * (list sizes stay O(1)) because routing no longer costs nlist dots per
    * row: a √nlist-sized coarse layer (spherical k-means over the fine
    * centroid set) routes each row to `cProbe` super-lists and only their

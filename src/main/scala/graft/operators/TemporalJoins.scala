@@ -36,8 +36,9 @@ object TemporalJoins {
    * greatest payload struct (field order = right's column order) — callers
    * wanting a specific tie-break should pre-dedup the right side.
    *
-   * KEY-SKEW ENVELOPE (measured, TemporalProbe r5): the window partitions by
-   * key alone, so one hyperactive key serializes into a single task's sort.
+   * KEY-SKEW ENVELOPE (measured, BENCH/BASELINE.md §"Temporal joins at 10M
+   * events"): the window partitions by key alone, so one hyperactive key
+   * serializes into a single task's sort.
    * With one key holding 10% of 10M events (a 1M-row single-task sort) the
    * wall was INDISTINGUISHABLE from the uniform run (5.4 s vs 6.8 s at
    * local[32]) — a per-task in-memory timsort is ~1 s/M rows, far below the

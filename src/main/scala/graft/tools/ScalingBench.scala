@@ -101,8 +101,8 @@ object ScalingBench {
    * scalar sum — no shuffle of substance, no cached blocks, every byte
    * produced and consumed inside one whole-stage-codegen pipeline. The
    * PageRank legs are memory-bus-bound on this single-socket box
-   * (MemBandwidthProbe: raw streaming loops themselves scale 0.41–0.43
-   * across the 8→32 knee), so their N→4N efficiency measures the bus, not
+   * (BENCH/BASELINE.md's measured hardware ceiling: raw streaming loops
+   * themselves scale 0.41–0.43 across the 8→32 knee), so their N→4N efficiency measures the bus, not
    * the engine. This leg is the control: per-row regex state machines are
    * register/L1-resident, so if the ENGINE added scaling overhead it would
    * show here — and conversely a ≥0.8 ratio here pins the PageRank pairs'

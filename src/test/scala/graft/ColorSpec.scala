@@ -47,7 +47,7 @@ class ColorSpec extends SparkSpec {
 
   private def engine(k: Int): Map[Long, Long] = {
     val e = rawEdges.toDF("src", "dst")
-    DocGraph.colorIterLaid(DocGraph.lay(spark, e, GraphOps.symmetrized), k)
+    DocGraph.colorIterLaid(DocGraph.lay(e, GraphOps.symmetrized), k)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 

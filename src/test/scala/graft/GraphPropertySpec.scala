@@ -126,8 +126,8 @@ class GraphPropertySpec extends SparkSpec {
     // table and a duplicate-edge table: a defined result (no exception, one
     // null-free row per vertex at most), empty on empty input
     import operators.DocGraph
-    def dir(x: DataFrame) = DocGraph.lay(spark, x)
-    def sym(x: DataFrame) = DocGraph.lay(spark, x, GraphOps.symmetrized)
+    def dir(x: DataFrame) = DocGraph.lay(x)
+    def sym(x: DataFrame) = DocGraph.lay(x, GraphOps.symmetrized)
     val drivers: Seq[(String, DataFrame => DataFrame)] = Seq(
       "pr" -> (x => DocGraph.prIterLaid(dir(x), 3)),
       "ppr" -> (x => DocGraph.pprIterLaid(dir(x), 3)),
@@ -139,8 +139,8 @@ class GraphPropertySpec extends SparkSpec {
       "katz" -> (x => DocGraph.katzIterLaid(dir(x), 3)),
       "mis" -> (x => DocGraph.misIterLaid(sym(x), 3)),
       "color" -> (x => DocGraph.colorIterLaid(sym(x), 3)),
-      "match" -> (x => DocGraph.matchIterLaid(DocGraph.lay(spark, x, DocGraph.canonical), 3)),
-      "landmark" -> (x => DocGraph.landmarkIterLaid(DocGraph.lay(spark, x, DocGraph.reversed), 3)),
+      "match" -> (x => DocGraph.matchIterLaid(DocGraph.lay(x, DocGraph.canonical), 3)),
+      "landmark" -> (x => DocGraph.landmarkIterLaid(DocGraph.lay(x, DocGraph.reversed), 3)),
       "kcore" -> (x => DocGraph.kcoreIterLaid(sym(x), 1, 3)),
       "cc" -> (x => DocGraph.ccIterLaid(sym(x), 3)),
       "lp" -> (x => DocGraph.lpIterLaid(sym(x), 3)))
@@ -168,7 +168,7 @@ class GraphPropertySpec extends SparkSpec {
     def balls(x: DataFrame) = ids(Neighborhood.exactBall(GraphOps.vertices(x), dir(x), 2))
     def harmonic(x: DataFrame) = ids(Neighborhood.harmonic(GraphOps.vertices(x), dir(x), 2, 2L))
     def estimates(x: DataFrame) =
-      ids(Neighborhood.hyperBall(GraphOps.vertices(x), DocGraph.lay(spark, x, DocGraph.reversed), 2))
+      ids(Neighborhood.hyperBall(GraphOps.vertices(x), DocGraph.lay(x, DocGraph.reversed), 2))
     def truss(x: DataFrame) = Truss.peel(x, 3, 2).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val selfIds = selfLoopRows.map(_._1)
     for ((input, rows) <- Seq("empty" -> Seq.empty[(Long, Long)], "self-loops" -> selfLoopRows,
@@ -266,7 +266,7 @@ class GraphPropertySpec extends SparkSpec {
     // 3→2→1→0→5; only vid 0 is a landmark (0 % 97 == 0). Forward distance
     // vid→0 is the chain position; 5 cannot reach 0 (edges point away).
     val edges = Seq((3L, 2L), (2L, 1L), (1L, 0L), (0L, 5L)).toDF("src", "dst")
-    val got = operators.DocGraph.landmarkIterLaid(operators.DocGraph.lay(spark, edges, operators.DocGraph.reversed), 4)
+    val got = operators.DocGraph.landmarkIterLaid(operators.DocGraph.lay(edges, operators.DocGraph.reversed), 4)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got == Map(
       0L -> ((1L, 0L, 0L)), 1L -> ((1L, 1L, 1L)), 2L -> ((1L, 2L, 2L)),

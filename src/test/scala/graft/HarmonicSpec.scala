@@ -46,7 +46,7 @@ class HarmonicSpec extends SparkSpec {
   private def engine(k: Int, scale: Long): Map[Long, Long] = {
     val e = rawEdges.toDF("src", "dst")
     val v = verts.toDF("vid")
-    Neighborhood.harmonic(v, DocGraph.lay(spark, e), k, scale)
+    Neighborhood.harmonic(v, DocGraph.lay(e), k, scale)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
@@ -65,7 +65,7 @@ class HarmonicSpec extends SparkSpec {
 
   test("a non-divisible scale is refused") {
     intercept[IllegalArgumentException] {
-      Neighborhood.harmonic(verts.toDF("vid"), DocGraph.lay(spark, rawEdges.toDF("src", "dst")), 3, 4L)
+      Neighborhood.harmonic(verts.toDF("vid"), DocGraph.lay(rawEdges.toDF("src", "dst")), 3, 4L)
     }
   }
 }

@@ -131,78 +131,78 @@ class JobCountSpec extends SparkSpec {
     // broadcast regime's zero-actions-per-superstep chain is exercised by
     // the oracle parity suite; job counts there are AQE-shaped.)
     val e = pathEdges(noAqe)
-    val j3 = jobsDuring { DocGraph.pprIterLaid(DocGraph.lay(noAqe, e), 3, broadcastMaxRows = 0L).count() }
-    val j6 = jobsDuring { DocGraph.pprIterLaid(DocGraph.lay(noAqe, e), 6, broadcastMaxRows = 0L).count() }
+    val j3 = jobsDuring { DocGraph.pprIterLaid(DocGraph.lay(e), 3, broadcastMaxRows = 0L).count() }
+    val j6 = jobsDuring { DocGraph.pprIterLaid(DocGraph.lay(e), 6, broadcastMaxRows = 0L).count() }
     assert(j6 - j3 == 6, s"expected checkpoint + scalar-broadcast build per superstep, got j3=$j3 j6=$j6")
   }
 
   test("HITS: pinned jobs per half-step in the shuffle regime (r6)") {
     val e = pathEdges(noAqe)
-    val j2 = jobsDuring { DocGraph.hitsIterLaid(DocGraph.lay(noAqe, e), 2, broadcastMaxRows = 0L).count() }
-    val j4 = jobsDuring { DocGraph.hitsIterLaid(DocGraph.lay(noAqe, e), 4, broadcastMaxRows = 0L).count() }
+    val j2 = jobsDuring { DocGraph.hitsIterLaid(DocGraph.lay(e), 2, broadcastMaxRows = 0L).count() }
+    val j4 = jobsDuring { DocGraph.hitsIterLaid(DocGraph.lay(e), 4, broadcastMaxRows = 0L).count() }
     assert(j4 - j2 == 8, s"expected checkpoint + normalizer-broadcast build per half-step, got j2=$j2 j4=$j4")
   }
 
   test("multi-source BFS: zero extra jobs per superstep (lazy chain, one materializing action)") {
     val e = pathEdges(noAqe)
-    val j4 = jobsDuring { DocGraph.bfsIterLaid(DocGraph.lay(noAqe, e), 4, broadcastMaxRows = 0L).count() }
-    val j8 = jobsDuring { DocGraph.bfsIterLaid(DocGraph.lay(noAqe, e), 8, broadcastMaxRows = 0L).count() }
+    val j4 = jobsDuring { DocGraph.bfsIterLaid(DocGraph.lay(e), 4, broadcastMaxRows = 0L).count() }
+    val j8 = jobsDuring { DocGraph.bfsIterLaid(DocGraph.lay(e), 8, broadcastMaxRows = 0L).count() }
     assert(j8 - j4 == 0, s"expected a k-independent job count, got j4=$j4 j8=$j8")
   }
 
   test("weighted SSSP: zero extra jobs per superstep (lazy chain, one materializing action)") {
     val e = pathEdges(noAqe)
-    val j4 = jobsDuring { DocGraph.ssspIterLaid(DocGraph.lay(noAqe, e), 4, broadcastMaxRows = 0L).count() }
-    val j8 = jobsDuring { DocGraph.ssspIterLaid(DocGraph.lay(noAqe, e), 8, broadcastMaxRows = 0L).count() }
+    val j4 = jobsDuring { DocGraph.ssspIterLaid(DocGraph.lay(e), 4, broadcastMaxRows = 0L).count() }
+    val j8 = jobsDuring { DocGraph.ssspIterLaid(DocGraph.lay(e), 8, broadcastMaxRows = 0L).count() }
     assert(j8 - j4 == 0, s"expected a k-independent job count, got j4=$j4 j8=$j8")
   }
 
   test("truncated Katz: zero extra jobs per superstep (lazy chain, one materializing action)") {
     val e = pathEdges(noAqe)
-    val j3 = jobsDuring { DocGraph.katzIterLaid(DocGraph.lay(noAqe, e), 3, broadcastMaxRows = 0L).count() }
-    val j6 = jobsDuring { DocGraph.katzIterLaid(DocGraph.lay(noAqe, e), 6, broadcastMaxRows = 0L).count() }
+    val j3 = jobsDuring { DocGraph.katzIterLaid(DocGraph.lay(e), 3, broadcastMaxRows = 0L).count() }
+    val j6 = jobsDuring { DocGraph.katzIterLaid(DocGraph.lay(e), 6, broadcastMaxRows = 0L).count() }
     assert(j6 - j3 == 0, s"expected a k-independent job count, got j3=$j3 j6=$j6")
   }
 
   test("weighted PageRank: pinned jobs per superstep in the shuffle regime (r6)") {
     val e = pathEdges(noAqe)
-    val j3 = jobsDuring { DocGraph.wprIterLaid(DocGraph.lay(noAqe, e), 3, broadcastMaxRows = 0L).count() }
-    val j6 = jobsDuring { DocGraph.wprIterLaid(DocGraph.lay(noAqe, e), 6, broadcastMaxRows = 0L).count() }
+    val j3 = jobsDuring { DocGraph.wprIterLaid(DocGraph.lay(e), 3, broadcastMaxRows = 0L).count() }
+    val j6 = jobsDuring { DocGraph.wprIterLaid(DocGraph.lay(e), 6, broadcastMaxRows = 0L).count() }
     assert(j6 - j3 == 6, s"expected checkpoint + scalar-broadcast build per superstep, got j3=$j3 j6=$j6")
   }
 
   test("greedy matching: zero extra jobs per round (lazy chain, one materializing action)") {
     val e = pathEdges(noAqe)
-    val j2 = jobsDuring { DocGraph.matchIterLaid(DocGraph.lay(noAqe, e, DocGraph.canonical), 2, broadcastMaxRows = 0L).count() }
-    val j5 = jobsDuring { DocGraph.matchIterLaid(DocGraph.lay(noAqe, e, DocGraph.canonical), 5, broadcastMaxRows = 0L).count() }
+    val j2 = jobsDuring { DocGraph.matchIterLaid(DocGraph.lay(e, DocGraph.canonical), 2, broadcastMaxRows = 0L).count() }
+    val j5 = jobsDuring { DocGraph.matchIterLaid(DocGraph.lay(e, DocGraph.canonical), 5, broadcastMaxRows = 0L).count() }
     assert(j5 - j2 == 0, s"expected a round-independent job count, got j2=$j2 j5=$j5")
   }
 
   test("Luby MIS: zero extra jobs per round (lazy chain, one materializing action)") {
     val e = pathEdges(noAqe)
-    val j2 = jobsDuring { DocGraph.misIterLaid(DocGraph.lay(noAqe, e, GraphOps.symmetrized), 2, broadcastMaxRows = 0L).count() }
-    val j5 = jobsDuring { DocGraph.misIterLaid(DocGraph.lay(noAqe, e, GraphOps.symmetrized), 5, broadcastMaxRows = 0L).count() }
+    val j2 = jobsDuring { DocGraph.misIterLaid(DocGraph.lay(e, GraphOps.symmetrized), 2, broadcastMaxRows = 0L).count() }
+    val j5 = jobsDuring { DocGraph.misIterLaid(DocGraph.lay(e, GraphOps.symmetrized), 5, broadcastMaxRows = 0L).count() }
     assert(j5 - j2 == 0, s"expected a round-independent job count, got j2=$j2 j5=$j5")
   }
 
   test("SALSA: zero extra jobs per iteration (stochastic half-steps need no normalizer)") {
     val e = pathEdges(noAqe)
-    val j2 = jobsDuring { DocGraph.salsaIterLaid(DocGraph.lay(noAqe, e), 2, broadcastMaxRows = 0L).count() }
-    val j5 = jobsDuring { DocGraph.salsaIterLaid(DocGraph.lay(noAqe, e), 5, broadcastMaxRows = 0L).count() }
+    val j2 = jobsDuring { DocGraph.salsaIterLaid(DocGraph.lay(e), 2, broadcastMaxRows = 0L).count() }
+    val j5 = jobsDuring { DocGraph.salsaIterLaid(DocGraph.lay(e), 5, broadcastMaxRows = 0L).count() }
     assert(j5 - j2 == 0, s"expected an iteration-independent job count, got j2=$j2 j5=$j5")
   }
 
   test("Luby coloring: zero extra jobs per round (lazy chain, one materializing action)") {
     val e = pathEdges(noAqe)
-    val j2 = jobsDuring { DocGraph.colorIterLaid(DocGraph.lay(noAqe, e, GraphOps.symmetrized), 2, broadcastMaxRows = 0L).count() }
-    val j5 = jobsDuring { DocGraph.colorIterLaid(DocGraph.lay(noAqe, e, GraphOps.symmetrized), 5, broadcastMaxRows = 0L).count() }
+    val j2 = jobsDuring { DocGraph.colorIterLaid(DocGraph.lay(e, GraphOps.symmetrized), 2, broadcastMaxRows = 0L).count() }
+    val j5 = jobsDuring { DocGraph.colorIterLaid(DocGraph.lay(e, GraphOps.symmetrized), 5, broadcastMaxRows = 0L).count() }
     assert(j5 - j2 == 0, s"expected a round-independent job count, got j2=$j2 j5=$j5")
   }
 
   test("k-core peel: zero extra jobs per round (lazy chain, one materializing action)") {
     val e = pathEdges(noAqe)
-    val j2 = jobsDuring { DocGraph.kcoreIterLaid(DocGraph.lay(noAqe, e, GraphOps.symmetrized), 2, 2, broadcastMaxRows = 0L).count() }
-    val j4 = jobsDuring { DocGraph.kcoreIterLaid(DocGraph.lay(noAqe, e, GraphOps.symmetrized), 2, 4, broadcastMaxRows = 0L).count() }
+    val j2 = jobsDuring { DocGraph.kcoreIterLaid(DocGraph.lay(e, GraphOps.symmetrized), 2, 2, broadcastMaxRows = 0L).count() }
+    val j4 = jobsDuring { DocGraph.kcoreIterLaid(DocGraph.lay(e, GraphOps.symmetrized), 2, 4, broadcastMaxRows = 0L).count() }
     assert(j4 - j2 == 0, s"expected a round-independent job count, got j2=$j2 j4=$j4")
   }
 
@@ -228,8 +228,8 @@ class JobCountSpec extends SparkSpec {
   test("HyperBall: zero extra jobs per superstep (lazy chain, one materializing action)") {
     val e = pathEdges(noAqeNoBc)
     val v = GraphOps.vertices(e)
-    val j1 = jobsDuring { operators.Neighborhood.hyperBall(v, DocGraph.lay(noAqeNoBc, e, DocGraph.reversed), 1).count() }
-    val j3 = jobsDuring { operators.Neighborhood.hyperBall(v, DocGraph.lay(noAqeNoBc, e, DocGraph.reversed), 3).count() }
+    val j1 = jobsDuring { operators.Neighborhood.hyperBall(v, DocGraph.lay(e, DocGraph.reversed), 1).count() }
+    val j3 = jobsDuring { operators.Neighborhood.hyperBall(v, DocGraph.lay(e, DocGraph.reversed), 3).count() }
     assert(j3 - j1 == 0, s"expected a superstep-independent job count, got j1=$j1 j3=$j3")
   }
 

@@ -31,7 +31,7 @@ class KatzSpec extends SparkSpec {
 
   private def engine(k: Int): Map[Long, Long] = {
     val e = rawEdges.toDF("src", "dst")
-    DocGraph.katzIterLaid(DocGraph.lay(spark, e), k)
+    DocGraph.katzIterLaid(DocGraph.lay(e), k)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 

@@ -48,7 +48,7 @@ class MatchSpec extends SparkSpec {
 
   private def engine(k: Int): Map[Long, Long] = {
     val e = rawEdges.toDF("src", "dst")
-    DocGraph.matchIterLaid(DocGraph.lay(spark, e, DocGraph.canonical), k)
+    DocGraph.matchIterLaid(DocGraph.lay(e, DocGraph.canonical), k)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 

@@ -50,7 +50,7 @@ class MisSpec extends SparkSpec {
 
   private def engine(k: Int): Map[Long, Long] = {
     val e = rawEdges.toDF("src", "dst")
-    DocGraph.misIterLaid(DocGraph.lay(spark, e, GraphOps.symmetrized), k)
+    DocGraph.misIterLaid(DocGraph.lay(e, GraphOps.symmetrized), k)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 

@@ -74,8 +74,8 @@ class NeighborhoodSpec extends SparkSpec {
     val edges = (ring ++ hubs).distinct.filter { case (s, d) => s != d }
       .toDF("src", "dst")
     val verts = graph.GraphOps.vertices(edges)
-    val exact = Neighborhood.exactBall(verts, DocGraph.lay(spark, edges), 2)
-    val est = Neighborhood.hyperBall(verts, DocGraph.lay(spark, edges, DocGraph.reversed), 2)
+    val exact = Neighborhood.exactBall(verts, DocGraph.lay(edges), 2)
+    val est = Neighborhood.hyperBall(verts, DocGraph.lay(edges, DocGraph.reversed), 2)
     val err = exact.join(est, "vid")
       .select((sum(abs(col("est") - col("ball")) / col("ball")) / count(lit(1))).as("e"))
       .head().getDouble(0)
@@ -96,7 +96,7 @@ class NeighborhoodSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
     assert(curve.keySet == Set(1L, 2L, 3L, 4L))
     for (t <- 1 to 3) {
-      val want = Neighborhood.exactBall(verts, DocGraph.lay(spark, edges), t)
+      val want = Neighborhood.exactBall(verts, DocGraph.lay(edges), t)
         .agg(sum(col("ball"))).head().getLong(0)
       assert(curve(t.toLong)._1 == want, s"nf_exact diverged from exactBall sum at t=$t")
       assert(curve(t.toLong)._2, s"HLL gate failed at t=$t")

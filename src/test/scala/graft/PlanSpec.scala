@@ -24,8 +24,7 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
 
   test("superstep contribution join avoids SortMergeJoin in both regimes") {
-    val (edges, _, _) = GraphOps.layoutForIteration(
-      PageSynth.edgeList(spark, 2000).toDF(), 4, numPartitions = 4)
+    val (edges, _, _) = Superstep.lay(PageSynth.edgeList(spark, 2000).toDF(), parts = 4)
     val verts  = GraphOps.vertices(edges)
     val n      = verts.count()
     val rankDeg = verts.select(col("vid"), lit(1.0 / n).as("w"))

@@ -22,7 +22,7 @@ class SalsaSpec extends SparkSpec {
   test("directed cycle: scores are exactly 1.0 at every k") {
     val cyc = (0L until 12L).map(i => (i, (i + 1) % 12))
     for (k <- Seq(1, 3)) {
-      val rows = DocGraph.salsaIterLaid(DocGraph.lay(spark, cyc.toDF("src", "dst")), k).collect()
+      val rows = DocGraph.salsaIterLaid(DocGraph.lay(cyc.toDF("src", "dst")), k).collect()
       assert(rows.length == 12)
       assert(rows.forall(r => r.getLong(1) == 10000000L && r.getLong(2) == 10000000L),
         s"cycle scores drifted at k=$k: ${rows.take(3).mkString(",")}")
@@ -30,7 +30,7 @@ class SalsaSpec extends SparkSpec {
   }
 
   test("authority mass after one step equals the non-dangling count") {
-    val out = DocGraph.salsaIterLaid(DocGraph.lay(spark, rawEdges.toDF("src", "dst")), 1)
+    val out = DocGraph.salsaIterLaid(DocGraph.lay(rawEdges.toDF("src", "dst")), 1)
       .agg(sum(col("salsa_a1e7"))).collect()(0).getLong(0)
     val nonDangling = rawEdges.map(_._1).distinct.size
     // each pinned score is floor(a*1e7 + 0.500001): the sum is the mass
@@ -53,7 +53,7 @@ class SalsaSpec extends SparkSpec {
       for ((u, v) <- rawEdges) h += u -> (h(u) + a(v) / id(v))
     }
     def pin(x: Double): Long = math.floor(x * 1e7 + 0.500001).toLong
-    val got = DocGraph.salsaIterLaid(DocGraph.lay(spark, rawEdges.toDF("src", "dst")), 2)
+    val got = DocGraph.salsaIterLaid(DocGraph.lay(rawEdges.toDF("src", "dst")), 2)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val want = verts.map(v => v -> ((pin(a(v)), pin(h(v))))).toMap
     assert(got == want, "pinned SALSA scores diverged from the replay")

@@ -45,7 +45,7 @@ class SsspSpec extends SparkSpec {
 
   private def engine(k: Int): Map[Long, Long] = {
     val e = rawEdges.toDF("src", "dst")
-    DocGraph.ssspIterLaid(DocGraph.lay(spark, e), k)
+    DocGraph.ssspIterLaid(DocGraph.lay(e), k)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 

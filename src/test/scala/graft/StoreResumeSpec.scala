@@ -132,61 +132,66 @@ class StoreResumeSpec extends SparkSpec {
   }
 
   test("PageRank resumes mid-iteration from durable checkpoint") {
-    val root  = Files.createTempDirectory("graft-resume").toString
-    val store = new IcebergLikeStore(spark, root)
     val pages = PageSynth.pages(spark, 300).toDF()
     val edges = GraphOps.edgesFromPages(pages).persist()
-    val cfg   = PageRankConfig(eps = 1e-9, maxIter = 40, numPartitions = 4, ckptEvery = 4)
-
-    // uninterrupted run
-    val full = PageRank.run(spark, edges, cfg)
-
-    // interrupted at iter 10, then resumed with the same store
-    val part = PageRank.run(spark, edges, cfg.copy(maxIter = 10),
-      store.rankCheckpointer("ranks"))
-    assert(part.iterations == 10)
-    val snap = store.currentSnapshot("ranks").get
-    assert(snap.iter == 9 && snap.metrics.length == 10) // last completed superstep
-    val resumed = PageRank.run(spark, edges, cfg, store.rankCheckpointer("ranks"))
-
-    assert(resumed.iterations == full.iterations,
-      s"resumed=${resumed.iterations} full=${full.iterations}")
-    val f = full.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val g = resumed.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(f.keySet == g.keySet)
-    f.foreach { case (k, v) => assert(math.abs(g(k) - v) < 1e-12, s"vid=$k") }
-    // metrics history covers every superstep exactly once
-    assert(resumed.metrics.map(_.iter) == (0 until resumed.iterations))
-    // per-partition lineage stats survive the manifest JSON round-trip
-    // (SURVEY §2.2; BASELINE.json:6 "per-partition lineage + iteration metrics")
-    val resumedSnap = store.currentSnapshot("ranks").get
-    assert(resumedSnap.metrics.forall(_.partStats.nonEmpty))
-    val nVerts = full.ranks.count()
-    assert(resumedSnap.metrics.forall(m => m.partStats.map(_.rows).sum == nVerts))
-    assert(resumedSnap.files.nonEmpty && resumedSnap.files.forall(_.bytes > 0))
-
-    // resuming a finished run, stopped at maxIter (above) or on eps, runs no
-    // further superstep and commits no second snapshot of the same superstep
-    def resumeFinished(e: DataFrame, c: PageRankConfig, st: IcebergLikeStore,
-                       done: PageRankResult): Unit = {
-      val again = PageRank.run(spark, e, c, st.rankCheckpointer("ranks"))
-      assert(again.iterations == done.iterations, s"again=${again.iterations} done=${done.iterations}")
-      val want = done.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val got  = again.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(want.keySet == got.keySet)
-      want.foreach { case (k, v) => assert(math.abs(got(k) - v) < 1e-12, s"vid=$k") }
-      val iters = st.history("ranks").map(_.iter)
-      assert(iters.distinct == iters, s"snapshots by superstep: $iters")
-    }
-    resumeFinished(edges, cfg, store, full)
-    edges.unpersist()
-
     val e7    = PageSynth.edgeList(spark, 300L, 7L).toDF()
-    val conv  = PageRankConfig(eps = 1e-6, numPartitions = 4, ckptEvery = 4)
-    val store7 = new IcebergLikeStore(spark, Files.createTempDirectory("graft-resume-eps").toString)
-    val done  = PageRank.run(spark, e7, conv, store7.rankCheckpointer("ranks"))
-    assert(done.iterations < conv.maxIter, "the run must stop on eps")
-    resumeFinished(e7, conv, store7, done)
+    // both layouts PageRank iterates over: 300 pages run in the broadcast
+    // regime (edges laid by dst), and broadcastMaxRows = 0 forces the shuffle
+    // regime (edges laid by src)
+    for (bmr <- Seq(Superstep.BroadcastMaxRows, 0L)) withClue(s"broadcastMaxRows=$bmr: ") {
+      val store = new IcebergLikeStore(spark, Files.createTempDirectory("graft-resume").toString)
+      val cfg   = PageRankConfig(eps = 1e-9, maxIter = 40, numPartitions = 4, ckptEvery = 4,
+        broadcastMaxRows = bmr)
+
+      // uninterrupted run
+      val full = PageRank.run(spark, edges, cfg)
+
+      // interrupted at iter 10, then resumed with the same store
+      val part = PageRank.run(spark, edges, cfg.copy(maxIter = 10),
+        store.rankCheckpointer("ranks"))
+      assert(part.iterations == 10)
+      val snap = store.currentSnapshot("ranks").get
+      assert(snap.iter == 9 && snap.metrics.length == 10) // last completed superstep
+      val resumed = PageRank.run(spark, edges, cfg, store.rankCheckpointer("ranks"))
+
+      assert(resumed.iterations == full.iterations,
+        s"resumed=${resumed.iterations} full=${full.iterations}")
+      val f = full.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val g = resumed.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(f.keySet == g.keySet)
+      f.foreach { case (k, v) => assert(math.abs(g(k) - v) < 1e-12, s"vid=$k") }
+      // metrics history covers every superstep exactly once
+      assert(resumed.metrics.map(_.iter) == (0 until resumed.iterations))
+      // per-partition lineage stats survive the manifest JSON round-trip
+      // (SURVEY §2.2; BASELINE.json:6 "per-partition lineage + iteration metrics")
+      val resumedSnap = store.currentSnapshot("ranks").get
+      assert(resumedSnap.metrics.forall(_.partStats.nonEmpty))
+      val nVerts = full.ranks.count()
+      assert(resumedSnap.metrics.forall(m => m.partStats.map(_.rows).sum == nVerts))
+      assert(resumedSnap.files.nonEmpty && resumedSnap.files.forall(_.bytes > 0))
+
+      // resuming a finished run, stopped at maxIter (above) or on eps, runs no
+      // further superstep and commits no second snapshot of the same superstep
+      def resumeFinished(e: DataFrame, c: PageRankConfig, st: IcebergLikeStore,
+                         done: PageRankResult): Unit = {
+        val again = PageRank.run(spark, e, c, st.rankCheckpointer("ranks"))
+        assert(again.iterations == done.iterations, s"again=${again.iterations} done=${done.iterations}")
+        val want = done.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        val got  = again.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        assert(want.keySet == got.keySet)
+        want.foreach { case (k, v) => assert(math.abs(got(k) - v) < 1e-12, s"vid=$k") }
+        val iters = st.history("ranks").map(_.iter)
+        assert(iters.distinct == iters, s"snapshots by superstep: $iters")
+      }
+      resumeFinished(edges, cfg, store, full)
+
+      val conv  = PageRankConfig(eps = 1e-6, numPartitions = 4, ckptEvery = 4, broadcastMaxRows = bmr)
+      val store7 = new IcebergLikeStore(spark, Files.createTempDirectory("graft-resume-eps").toString)
+      val done  = PageRank.run(spark, e7, conv, store7.rankCheckpointer("ranks"))
+      assert(done.iterations < conv.maxIter, "the run must stop on eps")
+      resumeFinished(e7, conv, store7, done)
+    }
+    edges.unpersist()
   }
 
   test("pages live in the store: extraction reads the committed snapshot") {
