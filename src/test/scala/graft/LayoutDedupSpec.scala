@@ -1,58 +1,46 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-import graft.graph.GraphOps
-import graft.operators.DocGraph
+import graft.graph.Superstep
 
 /**
- * r6 structural guard for the one-exchange dedup layout
- * (GraphOps.layoutDedupForIteration) and the DocGraph laid builders: the
- * optimization's whole claim is "same rows, one shuffle", so both halves are
- * pinned — row equivalence against the reference derivations, and exactly
- * ONE Exchange in the executed plan (HashPartitioning(key) must keep
- * satisfying the dedup's ClusteredDistribution; a Spark behavior change that
- * re-inserts the second exchange fails here, not silently in the bench).
+ * The estimate path of [[Superstep.lay]] (once `layoutDedupForIteration`,
+ * the name its test keeps): the width is right-sized from the estimate before
+ * the one exchange, and the (src, dst) dedup rides that exchange. The claim is
+ * "same rows, one shuffle", so both halves are pinned — distinct rows with an
+ * exact |E|, and exactly ONE Exchange in the executed plan
+ * (HashPartitioning(key) must keep satisfying the dedup's
+ * ClusteredDistribution; a Spark behavior change that re-inserts the second
+ * exchange fails here, not silently in the bench). The suite's session width
+ * is 4.
  */
-class LayoutDedupSpec extends SparkSpec {
+class LayoutDedupSpec extends LaidSpec {
   import spark.implicits._
-
-  private val sfDir = "/root/testdata/sf0.001"
 
   test("layoutDedupForIteration: distinct rows, exact count, ONE exchange") {
     val raw = Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 1L), (2L, 3L), (4L, 1L))
       .toDF("src", "dst")
-    // estEdges forces parts > 1 so the layout plans as a real
-    // hashpartitioning exchange (at parts = 1 it prints as SinglePartition)
-    val (laid, cnt, parts) = GraphOps.layoutDedupForIteration(raw, 8, estEdges = 600000L)
-    try {
-      val want = raw.distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val got  = laid.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == want && cnt == want.size)
-      assert(parts > 1)
-      // the executed plan prints each exchange in both the initial and the
-      // final adaptive plan — count DISTINCT exchange plan ids
-      val plan = laid.queryExecution.executedPlan.toString
-      val ids = "Exchange [^\\n]*plan_id=(\\d+)".r
-        .findAllMatchIn(plan).map(_.group(1)).toSet
-      assert(ids.size == 1,
-        s"expected the dedup folded into the single layout exchange, got ${ids.size}:\n$plan")
-      assert(plan.contains("Exchange hashpartitioning(src"),
-        s"layout exchange is not the src hash partitioning:\n$plan")
-    } finally laid.unpersist(false)
-  }
-
-  test("laid doc builders match the reference derivations row for row") {
-    val (dir, _, _) = DocGraph.laidDirected(spark, sfDir)
-    val (sym, _, _) = DocGraph.laidSym(spark, sfDir)
-    val (und, _, _) = DocGraph.laidUnd(spark, sfDir)
-    try {
-      def set(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(set(dir) == set(DocGraph.edges(spark, sfDir)))
-      assert(set(sym) == set(GraphOps.symmetrized(DocGraph.edges(spark, sfDir))))
-      assert(set(und) == set(GraphOps.undirected(DocGraph.edges(spark, sfDir))
-        .select(col("a").as("src"), col("b").as("dst"))))
-    } finally { dir.unpersist(false); sym.unpersist(false); und.unpersist(false) }
+    val want = raw.distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // the width follows the estimate, not the rows: 600k estimated edges
+    // right-size to the session's 4, where the layout plans as a real
+    // hashpartitioning exchange (at width 1 it prints as SinglePartition)
+    for ((est, width) <- Seq(600000L -> 4, 1000L -> 1)) {
+      val ((_, cnt, parts), e) = laid(raw)(Superstep.lay(_, estimate = Some(est)))
+      try {
+        val got = e.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(got == want && cnt == want.size)
+        assert(parts == width)
+        if (parts > 1) {
+          // the executed plan prints each exchange in both the initial and
+          // the final adaptive plan — count DISTINCT exchange plan ids
+          val plan = e.queryExecution.executedPlan.toString
+          val ids = "Exchange [^\\n]*plan_id=(\\d+)".r
+            .findAllMatchIn(plan).map(_.group(1)).toSet
+          assert(ids.size == 1,
+            s"expected the dedup folded into the single layout exchange, got ${ids.size}:\n$plan")
+          assert(plan.contains("Exchange hashpartitioning(src"),
+            s"layout exchange is not the src hash partitioning:\n$plan")
+        }
+      } finally e.unpersist(false)
+    }
   }
 }

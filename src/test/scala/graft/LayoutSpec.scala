@@ -8,16 +8,13 @@ import graft.operators.DocGraph
 
 /**
  * The one edge-layout function ([[Superstep.lay]]) and its width rule
- * ([[Superstep.width]]), path by path: a pinned width is taken exactly; an
- * estimate right-sizes the one exchange the dedup rides (same rows, ONE
- * Exchange in the executed plan — HashPartitioning(key) must keep satisfying
- * the dedup's ClusteredDistribution, so a Spark behavior change that
- * re-inserts the second exchange fails here, not silently in the bench); a
+ * ([[Superstep.width]]), path by path: a pinned width is taken exactly; a
  * count right-sizes by one re-lay from the cache; `minParts` floors the
- * right-sized width. |E| is exact on every path. The suite's session width
- * is 4.
+ * right-sized width (the estimate path, whose dedup rides the one exchange,
+ * is [[LayoutDedupSpec]]). |E| is exact on every path. The suite's session
+ * width is 4.
  */
-class LayoutSpec extends SparkSpec {
+class LayoutSpec extends LaidSpec {
   import spark.implicits._
 
   /** a documents table of 1,000 contiguous ids: all the doc graph reads */
@@ -29,19 +26,6 @@ class LayoutSpec extends SparkSpec {
 
   /** a 31-row edge table: 30 path edges plus one duplicate */
   private def small: DataFrame = ((0L until 30L).map(i => (i, i + 1)) :+ ((0L, 1L))).toDF("src", "dst")
-
-  private def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
-
-  /** `lay`'s result, checked: exact |E|, the width it reports is the cached
-    * table's, and the call leaves exactly that one table cached. */
-  private def laid(input: DataFrame)(lay: DataFrame => Superstep.Laid): (Superstep.Laid, DataFrame) = {
-    val before = persisted()
-    val l @ (e, n, p) = lay(input)
-    assert(n == e.count())
-    assert(e.rdd.getNumPartitions == p)
-    assert((persisted() -- before).size == 1, "the session-width table was not released")
-    (l, e)
-  }
 
   test("the width rule: 50k edges per partition, floored at minParts, capped at the session width") {
     assert(Superstep.width(spark, 0L) == 1)
@@ -73,34 +57,6 @@ class LayoutSpec extends SparkSpec {
     }
   }
 
-  test("an estimate right-sizes the one exchange the dedup rides: distinct rows, exact count") {
-    val raw = Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 1L), (2L, 3L), (4L, 1L))
-      .toDF("src", "dst")
-    val want = raw.distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // the width follows the estimate, not the rows: 600k estimated edges
-    // right-size to the session's 4, where the layout plans as a real
-    // hashpartitioning exchange (at width 1 it prints as SinglePartition)
-    for ((est, width) <- Seq(600000L -> 4, 1000L -> 1)) {
-      val ((_, cnt, parts), e) = laid(raw)(Superstep.lay(_, estimate = Some(est)))
-      try {
-        val got = e.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        assert(got == want && cnt == want.size)
-        assert(parts == width)
-        if (parts > 1) {
-          // the executed plan prints each exchange in both the initial and
-          // the final adaptive plan — count DISTINCT exchange plan ids
-          val plan = e.queryExecution.executedPlan.toString
-          val ids = "Exchange [^\\n]*plan_id=(\\d+)".r
-            .findAllMatchIn(plan).map(_.group(1)).toSet
-          assert(ids.size == 1,
-            s"expected the dedup folded into the single layout exchange, got ${ids.size}:\n$plan")
-          assert(plan.contains("Exchange hashpartitioning(src"),
-            s"layout exchange is not the src hash partitioning:\n$plan")
-        }
-      } finally e.unpersist(false)
-    }
-  }
-
   test("laid doc builders match the reference derivations row for row") {
     val (dir, _, _) = DocGraph.laidDirected(spark, sfDir)
     val (sym, _, _) = DocGraph.laidSym(spark, sfDir)
@@ -113,5 +69,21 @@ class LayoutSpec extends SparkSpec {
       assert(set(und) == set(GraphOps.undirected(DocGraph.edges(spark, sfDir))
         .select(col("a").as("src"), col("b").as("dst"))))
     } finally { dir.unpersist(false); sym.unpersist(false); und.unpersist(false) }
+  }
+}
+
+/** Checks shared by the layout specs. */
+abstract class LaidSpec extends SparkSpec {
+  protected def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** `lay`'s result, checked: exact |E|, the width it reports is the cached
+    * table's, and the call leaves exactly that one table cached. */
+  protected def laid(input: DataFrame)(lay: DataFrame => Superstep.Laid): (Superstep.Laid, DataFrame) = {
+    val before = persisted()
+    val l @ (e, n, p) = lay(input)
+    assert(n == e.count())
+    assert(e.rdd.getNumPartitions == p)
+    assert((persisted() -- before).size == 1, "the session-width table was not released")
+    (l, e)
   }
 }
