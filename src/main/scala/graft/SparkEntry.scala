@@ -434,9 +434,7 @@ object SparkEntry {
     // graph, vertices with deg ≥ 2 only (denominator > 0)
     "q_lcc" -> ((s, d) => {
       val e = DocGraph.edges(s, d)
-      val und = GraphOps.undirected(e)
-      val deg = und.select(col("a").as("vid")).unionByName(und.select(col("b").as("vid")))
-        .groupBy("vid").agg(count(lit(1)).as("deg"))
+      val deg = GraphOps.undirectedDegrees(GraphOps.undirected(e))
       val t = Triangles.perVertex(s, e)
       deg.filter(col("deg") >= 2)
         .join(t, Seq("vid"), "left")
@@ -985,9 +983,7 @@ object SparkEntry {
     // ratio is a projection the user divides at read time
     "q_clust_coeff" -> ((s, d) => {
       val e   = DocGraph.edges(s, d)
-      val und = GraphOps.undirected(e)
-      val deg = und.select(col("a").as("vid")).unionAll(und.select(col("b").as("vid")))
-        .groupBy("vid").agg(count(lit(1)).as("deg"))
+      val deg = GraphOps.undirectedDegrees(GraphOps.undirected(e))
       deg.filter(col("deg") >= 2)
         .join(Triangles.perVertex(s, e), Seq("vid"), "left")
         .select(col("vid"), coalesce(col("triangles"), lit(0L)).as("triangles"),

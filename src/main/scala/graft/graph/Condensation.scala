@@ -42,11 +42,10 @@ object Condensation {
     * checkpoint. The layering state holds the components on a condensation
     * edge; every other component has no predecessor and stays at layer 0. */
   def topoLayers(spark: SparkSession, edges: DataFrame, k: Int,
-                 assumeDistinct: Boolean = false,
-                 broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
+                 assumeDistinct: Boolean = false): DataFrame = {
     val scc = StronglyConnectedComponents.run(spark, edges, assumeDistinct = assumeDistinct)
     val g = Superstep(Superstep.lay(
-      condense(edges, scc).select(col("cs").as("src"), col("cd").as("dst"))), broadcastMaxRows)
+      condense(edges, scc).select(col("cs").as("src"), col("cd").as("dst"))))
     val ce = g.edges
     val layers = g.fixedK(g.vertices.select(col("vid"), lit(0L).as("l")), k,
       out = st => scc.join(g.pin(st.select(col("vid").as("scc_id"), col("l"))), Seq("scc_id"), "left")

@@ -75,6 +75,12 @@ object GraphOps {
               greatest(col("src"), col("dst")).as("b"))
       .dropDuplicates("a", "b")
 
+  /** (vid, deg): the degree of every vertex of a canonical undirected pair
+    * set (a, b), as [[undirected]] returns it. */
+  def undirectedDegrees(und: DataFrame): DataFrame =
+    und.select(col("a").as("vid")).unionByName(und.select(col("b").as("vid")))
+      .groupBy("vid").agg(count(lit(1)).as("deg"))
+
   /** Both directions of the canonical undirected set (for message passing). */
   def symmetrized(edges: DataFrame): DataFrame = {
     val und = undirected(edges)

@@ -20,17 +20,15 @@ import org.apache.spark.sql.functions._
  */
 object LabelPropagation {
 
-  def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 20,
-          broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame =
-    runLaid(Superstep.lay(GraphOps.symmetrized(edges)), maxIter, broadcastMaxRows)
+  def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 20): DataFrame =
+    runLaid(Superstep.lay(GraphOps.symmetrized(edges)), maxIter)
 
   /** [[run]] over a laid symmetric edge table (e.g. DocGraph.laidSym's
     * one-exchange layout), which is unpersisted on return. `maxIter` is
     * kept exactly: a capped run (q_lp's maxIter = 10) executes exactly the
     * oracle's superstep count. */
-  private[graft] def runLaid(laidSym: Superstep.Laid, maxIter: Int = 20,
-                             broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
-    val g = Superstep(laidSym, broadcastMaxRows)
+  private[graft] def runLaid(laidSym: Superstep.Laid, maxIter: Int = 20): DataFrame = {
+    val g = Superstep(laidSym)
     g.untilStable(g.vertices.select(col("vid"), col("vid").as("label")), maxIter,
       col("label") =!= col("old"))(vote(g))
   }

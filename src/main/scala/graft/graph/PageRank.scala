@@ -42,10 +42,12 @@ final case class PageRankConfig(
     /** durable checkpoint every k supersteps (resume point); lineage is truncated every superstep regardless. */
     ckptEvery: Int = 5,
     /** the superstep join's crossover (BASELINE.json:6 "broadcast-or-shuffle
-      * hash join", [[Superstep.pinFor]]): the rank side is broadcast while
-      * |V| ≤ broadcastMaxRows, a co-partitioned shuffle-hash join beyond;
-      * never SMJ, which would re-sort the O(|E|) cached edge side every
-      * superstep. 0 forces the shuffle regime, Long.MaxValue the broadcast. */
+      * hash join", [[Superstep.broadcasts]]): the rank side is broadcast while
+      * the session allows broadcast joins and |V| ≤ broadcastMaxRows, a
+      * co-partitioned shuffle-hash join otherwise; never SMJ, which would
+      * re-sort the O(|E|) cached edge side every superstep. 0 forces the
+      * shuffle regime, as does a session whose
+      * `spark.sql.autoBroadcastJoinThreshold` is negative. */
     broadcastMaxRows: Long = Superstep.BroadcastMaxRows)
 
 /**
@@ -186,7 +188,7 @@ object PageRank {
     // from the src layout at its final width: the order of a destination's
     // in-edges, and so the rounding of its contribution sum, is then the same
     // whether that width was pinned or right-sized.
-    val e = if (n > cfg.broadcastMaxRows) eSrc else {
+    val e = if (!Superstep.broadcasts(eSrc.sparkSession, n, cfg.broadcastMaxRows)) eSrc else {
       val byDst = Superstep.lay(eSrc, key = "dst", parts = parts)._1
       eSrc.unpersist(false)
       byDst

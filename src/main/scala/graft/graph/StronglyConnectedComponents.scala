@@ -40,7 +40,8 @@ import org.apache.spark.sql.functions._
  *
  * Scale shape: every step is an equi-join or aggregate on vid — no
  * cartesian, no global sort, no driver-side row data. The O(|V|) label side
- * broadcasts below `broadcastMaxRows` (shuffle-hash beyond), re-sized by the
+ * broadcasts up to `Superstep.BroadcastMaxRows` rows (shuffle-hash beyond, or
+ * when the session disallows broadcast joins), re-sized by the
  * residual |V| each round; the label state is the kernel's checkpoint
  * chain, which keeps its hash partitioning. Worst case (a chain of k
  * non-trivial SCCs behind one minimum color) needs k rounds — the published mitigation is recursing on both reachability sides
@@ -55,7 +56,6 @@ object StronglyConnectedComponents {
     * whole exchange) when the caller guarantees the input edge set is
     * already distinct — DocGraph.edges / its laid-out variants are. */
   def run(spark: SparkSession, edges: DataFrame, maxRounds: Int = 64,
-          broadcastMaxRows: Long = Superstep.BroadcastMaxRows,
           assumeDistinct: Boolean = false): DataFrame = {
     val e0 = edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
     var e = (if (assumeDistinct) e0 else e0.distinct()).localCheckpoint(true)
@@ -70,14 +70,14 @@ object StronglyConnectedComponents {
     var v = GraphOps.vertices(edges).repartition(parts, col("vid")).localCheckpoint(false)
     var nV = v.count()
     // re-sized as the residual vertex set shrinks
-    def pin(df: DataFrame): DataFrame = Superstep.pinFor(nV, broadcastMaxRows)(df)
+    def pin(df: DataFrame): DataFrame = Superstep.pinFor(nV)(df)
 
     /** HashMin to fixpoint from `init` (vid, label) along `laid`'s edges,
       * with the residual vertex set as the kernel's vertex table. The input
       * |E| bounds every residual edge set, which the kernel reads only for
       * its empty-graph test and crossover: no count job. */
     def minLabels(laid: DataFrame, init: DataFrame): DataFrame = {
-      val g = new Superstep((laid, nE, parts), broadcastMaxRows, Some(v -> nV))
+      val g = new Superstep((laid, nE, parts), Superstep.BroadcastMaxRows, Some(v -> nV))
       g.untilStable(init, Int.MaxValue, col("label") < col("old"))(ConnectedComponents.hashMin(g))
     }
 

@@ -2,7 +2,7 @@ package graft.graph
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointShim
@@ -19,12 +19,15 @@ import org.apache.spark.storage.StorageLevel
  *
  *  - the vertex table: `(vid)`, hash-laid at the edges' width, or one the
  *    caller built with its |V| (PageRank's `(vid, outDeg)`);
- *  - the join pin, the engine's one broadcast-or-shuffle-hash crossover
- *    ([[pinFor]]). It is sized by |V|, because the state side of a superstep
- *    join holds a row per vertex: broadcast while |V| ≤ `broadcastMaxRows`,
- *    a co-partitioned shuffle-hash join beyond. Never sort-merge, which
- *    would re-sort the cached O(|E|) edge side every superstep. |V| ≤ 2|E|,
- *    so |V| is counted only when 2|E| passes the crossover;
+ *  - the join pin, decided by the engine's one broadcast-or-shuffle-hash
+ *    crossover ([[broadcasts]]). It is sized by |V|, because the state side
+ *    of a superstep join holds a row per vertex: broadcast while the session
+ *    allows broadcast joins and |V| ≤ `broadcastMaxRows`, a co-partitioned
+ *    shuffle-hash join otherwise. Never sort-merge, which would re-sort the
+ *    cached O(|E|) edge side every superstep. |V| ≤ 2|E|, so |V| is counted
+ *    only when 2|E| passes the crossover. `broadcastMaxRows` is
+ *    [[Superstep.BroadcastMaxRows]] for every driver but PageRank, which
+ *    passes its config's;
  *  - the checkpoint chain. Each superstep's state is a lazy
  *    `localCheckpoint`: the plan is truncated, execution waits for the one
  *    closing action, so a fixed-k run costs no driver action per superstep.
@@ -56,7 +59,8 @@ final class Superstep private[graph] (laid: Superstep.Laid, broadcastMaxRows: Lo
   lazy val nV: Long = table.fold(vertices.count())(_._2)
 
   // lazy: a driver whose joins are unpinned never counts |V|
-  private lazy val broadcasts = 2 * numEdges <= broadcastMaxRows || nV <= broadcastMaxRows
+  private lazy val broadcasts = Superstep.broadcasts(edges.sparkSession,
+    if (2 * numEdges <= broadcastMaxRows) 2 * numEdges else nV, broadcastMaxRows)
 
   lazy val pin: DataFrame => DataFrame = Superstep.pinWhen(broadcasts)
 
@@ -221,13 +225,22 @@ object Superstep {
     * cost more than the contribution shuffle it replaced. */
   val BroadcastMaxRows = 500000L
 
-  def apply(laid: Laid, broadcastMaxRows: Long = BroadcastMaxRows): Superstep =
-    new Superstep(laid, broadcastMaxRows, None)
+  def apply(laid: Laid): Superstep = new Superstep(laid, BroadcastMaxRows, None)
 
-  /** The join pin for a vertex-keyed side of `nV` rows: broadcast up to
-    * `broadcastMaxRows`, a shuffle-hash join beyond. */
-  def pinFor(nV: Long, broadcastMaxRows: Long): DataFrame => DataFrame =
-    pinWhen(nV <= broadcastMaxRows)
+  /** The engine's one broadcast-or-shuffle-hash crossover: a join side of
+    * `rows` rows broadcasts when `spark` allows broadcast joins (Spark's own
+    * `spark.sql.autoBroadcastJoinThreshold` is not negative) and `rows` ≤
+    * `maxRows`. An explicit broadcast hint overrides a session that disabled
+    * broadcast joins, so every pin asks here first. `rows` is evaluated only
+    * when the session allows broadcasts. */
+  def broadcasts(spark: SparkSession, rows: => Long, maxRows: Long = BroadcastMaxRows): Boolean =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold >= 0 &&
+      rows <= maxRows
+
+  /** The join pin for a vertex-keyed side of `rows` rows in the session of
+    * the frame it pins ([[broadcasts]]): broadcast, or a shuffle-hash join. */
+  def pinFor(rows: Long): DataFrame => DataFrame =
+    df => pinWhen(broadcasts(df.sparkSession, rows))(df)
 
   private def pinWhen(broadcasts: Boolean): DataFrame => DataFrame =
     if (broadcasts) broadcast(_) else shuffleHash

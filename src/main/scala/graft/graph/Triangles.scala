@@ -26,8 +26,7 @@ object Triangles {
   /** Degree-ordered oriented edge set: columns (u, v), u precedes v in (deg, id) order. */
   def oriented(edges: DataFrame): DataFrame = {
     val und = GraphOps.undirected(edges) // (a, b), a < b, deduplicated
-    val deg = und.select(col("a").as("vid")).union(und.select(col("b").as("vid")))
-      .groupBy("vid").agg(count(lit(1)).as("deg"))
+    val deg = GraphOps.undirectedDegrees(und)
     val withDeg = und
       .join(deg.withColumnRenamed("vid", "a").withColumnRenamed("deg", "da"), "a")
       .join(deg.withColumnRenamed("vid", "b").withColumnRenamed("deg", "db"), "b")

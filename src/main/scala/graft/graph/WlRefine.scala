@@ -42,11 +42,11 @@ object WlRefine {
   /** [[refine]] core over a pre-laid-out symmetric edge table (cached,
     * src-hash-partitioned — e.g. DocGraph.laidSym's one-exchange layout). */
   private[graft] def refineLaid(spark: SparkSession, laidSym: (DataFrame, Long, Int),
-                                k: Int, broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
+                                k: Int): DataFrame = {
     val (e, nE, parts) = laidSym
     // the kernel's crossover, sized here by the laid |E| (an upper bound of
     // |V| on a symmetric table) so the loop needs no |V| count
-    val pin = Superstep.pinFor(nE, broadcastMaxRows)
+    val pin = Superstep.pinFor(nE)
     // color_0 = symmetric degree (every vertex of sym appears as a src)
     var st = e.groupBy(col("src").as("vid")).agg(count(lit(1)).as("c"))
       .localCheckpoint(true)

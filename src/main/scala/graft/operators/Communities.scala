@@ -65,8 +65,7 @@ object Communities {
     // materializes it once; the count() that produces m rides the same blocks
     val und = GraphOps.undirected(edges).localCheckpoint(true)
     val m   = und.count()
-    val deg = und.select(col("a").as("vid")).unionByName(und.select(col("b").as("vid")))
-      .groupBy("vid").agg(count(lit(1)).as("deg"))
+    val deg = GraphOps.undirectedDegrees(und)
     val dc = deg.join(member, Seq("vid"))
       .groupBy("comm").agg(sum(col("deg")).as("d_c"))
     val ma = member.select(col("vid").as("a"), col("comm").as("ca"))
@@ -102,8 +101,7 @@ object Communities {
   def conductance(spark: SparkSession, edges: DataFrame, member: DataFrame): DataFrame = {
     val und = GraphOps.undirected(edges).localCheckpoint(true)
     val m   = und.count()
-    val deg = und.select(col("a").as("vid")).unionByName(und.select(col("b").as("vid")))
-      .groupBy("vid").agg(count(lit(1)).as("deg"))
+    val deg = GraphOps.undirectedDegrees(und)
     val vol = deg.join(member, Seq("vid"))
       .groupBy("comm").agg(sum(col("deg")).as("vol"))
     val ma = member.select(col("vid").as("a"), col("comm").as("ca"))

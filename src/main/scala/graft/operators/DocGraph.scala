@@ -129,6 +129,9 @@ object DocGraph {
       |outdeg AS MATERIALIZED (SELECT src AS vid, count(*) AS c FROM edges GROUP BY src),
       |nv AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS n FROM verts)""".stripMargin
 
+  /** The damping factor of the PageRank-family drivers. */
+  private val Damping = 0.85
+
   /** A fixed-k result score `r` as an integer, `floor(r*1e7 + 0.5 + 1e-6)`:
     * the engine and the oracle compute r identically to ≲1e-11 absolute at
     * this scale, and the 1e-6 nudge moves the discretization boundary away
@@ -146,20 +149,19 @@ object DocGraph {
    */
   def prIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
     prIterLaid(
-      if (nDocs(spark, sfDir) <= Superstep.BroadcastMaxRows) laidDirectedDst(spark, sfDir)
+      if (Superstep.broadcasts(spark, nDocs(spark, sfDir))) laidDirectedDst(spark, sfDir)
       else laidDirected(spark, sfDir), k)
 
   /** [[prIter]] over a laid directed edge table. The dangling term is
     * in-plan ([[massFlow]]), so the broadcast regime runs the k supersteps
     * as one job. */
-  private[graft] def prIterLaid(laid: Laid, k: Int, d: Double = 0.85,
-                                broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
-    val g = Superstep(laid, broadcastMaxRows)
+  private[graft] def prIterLaid(laid: Laid, k: Int): DataFrame = {
+    val g = Superstep(laid)
     val n = g.nV.toDouble
     massFlow(g, GraphOps.outDegrees(g.edges), k, s"pr${k}e7", lit(1.0 / n),
       col("r") / col("deg"),
-      (tm, s) => lit(1.0 - d) / lit(n) + (lit(d) * greatest(lit(0.0), lit(1.0) - tm)) / lit(n)
-        + lit(d) * s)
+      (tm, s) => lit(1.0 - Damping) / lit(n) + (lit(Damping) * greatest(lit(0.0), lit(1.0) - tm)) / lit(n)
+        + lit(Damping) * s)
   }
 
   /**
@@ -217,29 +219,27 @@ object DocGraph {
    * integer pinning and arithmetic-order discipline as [[prIter]]. A graph
    * without seeds has all-zero scores.
    */
-  def pprIter(spark: SparkSession, sfDir: String, k: Int,
-              d: Double = 0.85): DataFrame =
-    pprIterLaid(laidDirected(spark, sfDir), k, d)
+  def pprIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
+    pprIterLaid(laidDirected(spark, sfDir), k)
 
-  private[graft] def pprIterLaid(laid: Laid, k: Int, d: Double = 0.85,
-                                 broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
-    val g = Superstep(laid, broadcastMaxRows)
+  private[graft] def pprIterLaid(laid: Laid, k: Int): DataFrame = {
+    val g = Superstep(laid)
     val seed = col("vid") % 100 === 0
     val nS = g.vertices.filter(seed).count().toDouble
     massFlow(g, GraphOps.outDegrees(g.edges), k, s"ppr${k}e7",
       when(seed, lit(1.0 / nS)).otherwise(lit(0.0)),
       col("r") / col("deg"),
-      (tm, s) => when(seed, lit((1.0 - d) / nS) + (lit(d) * (lit(1.0) - tm)) / lit(nS))
-        .otherwise(lit(0.0)) + lit(d) * s)
+      (tm, s) => when(seed, lit((1.0 - Damping) / nS) + (lit(Damping) * (lit(1.0) - tm)) / lit(nS))
+        .otherwise(lit(0.0)) + lit(Damping) * s)
   }
 
-  /** Oracle SQL for exactly k personalized-PageRank supersteps. `d` must
-    * match the engine call's damping — the constants are generated from it
-    * (Double.toString round-trips exactly through DuckDB's literal parser),
-    * so a non-default damping can't silently diverge from its oracle. */
-  def pprIterSql(k: Int, d: Double = 0.85): String = {
-    val restart = (1.0 - d).toString
-    val damp    = d.toString
+  /** Oracle SQL for exactly k personalized-PageRank supersteps. Its
+    * constants are generated from [[Damping]] (Double.toString round-trips
+    * exactly through DuckDB's literal parser), so the oracle cannot diverge
+    * from the engine's damping. */
+  def pprIterSql(k: Int): String = {
+    val restart = (1.0 - Damping).toString
+    val damp    = Damping.toString
     val sb = new StringBuilder(graphCtes)
     sb.append(
       """,
@@ -275,9 +275,8 @@ object DocGraph {
   def hitsIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
     hitsIterLaid(laidDirected(spark, sfDir), k)
 
-  private[graft] def hitsIterLaid(laid: Laid, k: Int,
-                                  broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame =
-    linkAnalysis(laid, k, broadcastMaxRows, salsa = false, "auth", "hub")
+  private[graft] def hitsIterLaid(laid: Laid, k: Int): DataFrame =
+    linkAnalysis(laid, k, salsa = false, "auth", "hub")
 
   /**
    * Exactly k SALSA iterations (Lempel & Moran, "The stochastic approach
@@ -292,9 +291,8 @@ object DocGraph {
   def salsaIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
     salsaIterLaid(laidDirected(spark, sfDir), k)
 
-  private[graft] def salsaIterLaid(laid: Laid, k: Int,
-                                   broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame =
-    linkAnalysis(laid, k, broadcastMaxRows, salsa = true, "salsa_a", "salsa_h")
+  private[graft] def salsaIterLaid(laid: Laid, k: Int): DataFrame =
+    linkAnalysis(laid, k, salsa = true, "salsa_a", "salsa_h")
 
   /**
    * HITS and SALSA as 2k half-steps over one state (vid, h, a, outDeg,
@@ -306,9 +304,9 @@ object DocGraph {
    * and Σ_{(u→v)} a(v) = Σ_v a(v)·in(v) — and is attached in-plan; 1 on an
    * edgeless graph keeps the all-zero scores zero instead of NaN.
    */
-  private def linkAnalysis(laid: Laid, k: Int, broadcastMaxRows: Long, salsa: Boolean,
+  private def linkAnalysis(laid: Laid, k: Int, salsa: Boolean,
                            aName: String, hName: String): DataFrame = {
-    val g = Superstep(laid, broadcastMaxRows)
+    val g = Superstep(laid)
     val e = g.edges
     val init = g.vertices.join(GraphOps.outDegrees(e), Seq("vid"), "left")
       .join(GraphOps.inDegrees(e), Seq("vid"), "left")
@@ -395,16 +393,15 @@ object DocGraph {
   def bfsIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
     bfsIterLaid(laidDirected(spark, sfDir), k)
 
-  private[graft] def bfsIterLaid(laid: Laid, k: Int,
-                                 broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame =
-    relax(laid, k, broadcastMaxRows, lit(1L), s"dist$k")
+  private[graft] def bfsIterLaid(laid: Laid, k: Int): DataFrame =
+    relax(laid, k, lit(1L), s"dist$k")
 
   /** k min-plus relaxation supersteps from the vid%100 seeds along directed
     * edges weighted `w` (an expression over src and dst); unreached
     * vertices report -1. */
-  private def relax(laid: Laid, k: Int, broadcastMaxRows: Long, w: Column,
+  private def relax(laid: Laid, k: Int, w: Column,
                     name: String): DataFrame = {
-    val g = Superstep(laid, broadcastMaxRows)
+    val g = Superstep(laid)
     val e = g.edges
     val init = g.vertices.select(col("vid"),
       when(col("vid") % 100 === 0, lit(0L)).otherwise(lit(null).cast("long")).as("d"))
@@ -450,9 +447,8 @@ object DocGraph {
   def ssspIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
     ssspIterLaid(laidDirected(spark, sfDir), k)
 
-  private[graft] def ssspIterLaid(laid: Laid, k: Int,
-                                  broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame =
-    relax(laid, k, broadcastMaxRows, (col("src") + col("dst")) % 5L + 1L, s"sdist$k")
+  private[graft] def ssspIterLaid(laid: Laid, k: Int): DataFrame =
+    relax(laid, k, (col("src") + col("dst")) % 5L + 1L, s"sdist$k")
 
   /** Oracle SQL for exactly k weighted Bellman-Ford supersteps (see [[ssspIter]]). */
   def ssspIterSql(k: Int): String = {
@@ -492,9 +488,8 @@ object DocGraph {
   def katzIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
     katzIterLaid(laidDirected(spark, sfDir), k)
 
-  private[graft] def katzIterLaid(laid: Laid, k: Int,
-                                  broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
-    val g = Superstep(laid, broadcastMaxRows)
+  private[graft] def katzIterLaid(laid: Laid, k: Int): DataFrame = {
+    val g = Superstep(laid)
     val e = g.edges
     g.fixedK(g.vertices.select(col("vid"), lit(1L).as("w"), lit(0L).as("acc")), k,
         out = _.select(col("vid"), col("acc").as(s"katz${k}s"))) { (st, _) =>
@@ -574,9 +569,8 @@ object DocGraph {
   def misIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
     misIterLaid(laidSym(spark, sfDir), k)
 
-  private[graft] def misIterLaid(laid: Laid, k: Int,
-                                 broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
-    val g = Superstep(laid, broadcastMaxRows)
+  private[graft] def misIterLaid(laid: Laid, k: Int): DataFrame = {
+    val g = Superstep(laid)
     val e = g.edges
     g.fixedK(lubyInit(g), k, out = _.select(col("vid"), col("c").as("mis_st"))) { (st, _) =>
       val win = lubyWinners(g, st)
@@ -638,9 +632,8 @@ object DocGraph {
   def colorIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
     colorIterLaid(laidSym(spark, sfDir), k)
 
-  private[graft] def colorIterLaid(laid: Laid, k: Int,
-                                   broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
-    val g = Superstep(laid, broadcastMaxRows)
+  private[graft] def colorIterLaid(laid: Laid, k: Int): DataFrame = {
+    val g = Superstep(laid)
     g.fixedK(lubyInit(g), k, out = _.select(col("vid"), col("c").as("color"))) { (st, i) =>
       st.join(g.pin(lubyWinners(g, st)), Seq("vid"), "left")
         .select(col("vid"), col("pri"),
@@ -707,9 +700,8 @@ object DocGraph {
     matchIterLaid(laidUnd(spark, sfDir), k)
 
   /** [[matchIter]] over canonical pairs laid as (src, dst) = (a, b), a < b. */
-  private[graft] def matchIterLaid(laid: Laid, k: Int,
-                                   broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
-    val g = Superstep(laid, broadcastMaxRows)
+  private[graft] def matchIterLaid(laid: Laid, k: Int): DataFrame = {
+    val g = Superstep(laid)
     val und = g.edges.select(col("src").as("a"), col("dst").as("b"))
     g.fixedK(g.vertices.select(col("vid"), lit(null).cast("long").as("mate")), k,
         out = _.select(col("vid"), coalesce(col("mate"), lit(-1L)).as(s"mate$k"))) { (st, _) =>
@@ -786,9 +778,8 @@ object DocGraph {
     landmarkIterLaid(laidReversed(spark, sfDir), k)
 
   /** [[landmarkIter]] over REVERSED edges laid for iteration. */
-  private[graft] def landmarkIterLaid(laid: Laid, k: Int,
-                                      broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
-    val g = Superstep(laid, broadcastMaxRows)
+  private[graft] def landmarkIterLaid(laid: Laid, k: Int): DataFrame = {
+    val g = Superstep(laid)
     val e = g.edges
     val init = g.vertices.filter(col("vid") % 97 === 0)
       .select(col("vid"), col("vid").as("seed"), lit(0L).as("d"))
@@ -845,10 +836,9 @@ object DocGraph {
   def kcoreIter(spark: SparkSession, sfDir: String, kCore: Int, rounds: Int): DataFrame =
     kcoreIterLaid(laidSym(spark, sfDir), kCore, rounds)
 
-  private[graft] def kcoreIterLaid(laid: Laid, kCore: Int, rounds: Int,
-                                   broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
+  private[graft] def kcoreIterLaid(laid: Laid, kCore: Int, rounds: Int): DataFrame = {
     require(rounds >= 1, "need at least one peel round")
-    val g = Superstep(laid, broadcastMaxRows)
+    val g = Superstep(laid)
     val sym = g.edges
     g.fixedK(g.vertices.select(col("vid"), lit(null).cast("long").as("deg")), rounds) {
       (st, _) =>
@@ -885,25 +875,23 @@ object DocGraph {
    * the e7 floor pins the output. Σ transmitted = Σ r over non-dangling
    * holds because Σ_v w(u,v)/S(u) = 1 exactly as in the unweighted case.
    */
-  def wprIter(spark: SparkSession, sfDir: String, k: Int,
-              d: Double = 0.85): DataFrame =
-    wprIterLaid(laidDirected(spark, sfDir), k, d)
+  def wprIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
+    wprIterLaid(laidDirected(spark, sfDir), k)
 
-  private[graft] def wprIterLaid(laid: Laid, k: Int, d: Double = 0.85,
-                                 broadcastMaxRows: Long = Superstep.BroadcastMaxRows): DataFrame = {
-    val g = Superstep(laid, broadcastMaxRows)
+  private[graft] def wprIterLaid(laid: Laid, k: Int): DataFrame = {
+    val g = Superstep(laid)
     val n = g.nV.toDouble
     val w = (col("src") + col("dst")) % 5L + 1L
     massFlow(g, g.edges.groupBy(col("src").as("vid")).agg(sum(w).as("outS")), k,
       s"wpr${k}e7", lit(1.0 / n),
       col("r") * w / col("deg"),
-      (tm, s) => lit((1.0 - d) / n) + (lit(d) * (lit(1.0) - tm)) / lit(n) + lit(d) * s)
+      (tm, s) => lit((1.0 - Damping) / n) + (lit(Damping) * (lit(1.0) - tm)) / lit(n) + lit(Damping) * s)
   }
 
   /** Oracle SQL for exactly k weighted-PageRank supersteps (see [[wprIter]]). */
-  def wprIterSql(k: Int, d: Double = 0.85): String = {
-    val restart = (1.0 - d).toString
-    val damp    = d.toString
+  def wprIterSql(k: Int): String = {
+    val restart = (1.0 - Damping).toString
+    val damp    = Damping.toString
     val sb = new StringBuilder(graphCtes)
     sb.append(
       """,

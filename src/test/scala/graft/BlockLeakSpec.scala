@@ -69,10 +69,10 @@ class BlockLeakSpec extends SparkSpec {
   }
 
   test("CC and LP leave only their result's checkpoint, in the shuffle regime too") {
-    val e = (0L until 30L).map(i => (i, i + 1)).toDF("src", "dst")
-    for (bmr <- Seq(Superstep.BroadcastMaxRows, 0L)) {
-      leavesOnlyItsResult(s"CC bmr=$bmr")(ConnectedComponents.run(spark, e, maxIter = 7, broadcastMaxRows = bmr))
-      leavesOnlyItsResult(s"LP bmr=$bmr")(LabelPropagation.run(spark, e, maxIter = 7, broadcastMaxRows = bmr))
+    for ((regime, s) <- Seq("broadcast" -> spark, "shuffle" -> noBroadcast)) {
+      val e = s.createDataFrame((0L until 30L).map(i => (i, i + 1))).toDF("src", "dst")
+      leavesOnlyItsResult(s"CC $regime")(ConnectedComponents.run(s, e, maxIter = 7))
+      leavesOnlyItsResult(s"LP $regime")(LabelPropagation.run(s, e, maxIter = 7))
     }
   }
 

@@ -3,7 +3,7 @@ package graft
 import scala.collection.mutable
 import scala.util.Random
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.graph._
 
@@ -121,10 +121,21 @@ class GraphPropertySpec extends SparkSpec {
     assert(pr.ranks.columns.toSeq == Seq("vid", "rank") && pr.ranks.count() == 0)
     assert(ConnectedComponents.run(spark, e).count() == 0)
     assert(LabelPropagation.run(spark, e).count() == 0)
+    robustnessMatrix(spark)
+  }
 
-    // every superstep-kernel driver, over the empty table, a self-loop-only
-    // table and a duplicate-edge table: a defined result (no exception, one
-    // null-free row per vertex at most), empty on empty input
+  test("the robustness matrix in the shuffle regime: a broadcast-disabled session") {
+    robustnessMatrix(noBroadcast)
+  }
+
+  /** Every superstep-kernel driver, SCC, condensation layering, truss
+    * peeling, the neighbourhood balls and PageRank over the empty table, a
+    * self-loop-only table, a duplicate-edge table and one giant hub (a
+    * source with 50 out-edges to dangling leaves), in session `s`: a defined
+    * result (no exception, one null-free row per vertex at most), empty on
+    * empty input, and the hand expectations below. */
+  private def robustnessMatrix(s: SparkSession): Unit = {
+    def table(rows: Seq[(Long, Long)]): DataFrame = s.createDataFrame(rows).toDF("src", "dst")
     import operators.DocGraph
     def dir(x: DataFrame) = DocGraph.lay(x)
     def sym(x: DataFrame) = DocGraph.lay(x, GraphOps.symmetrized)
@@ -146,22 +157,24 @@ class GraphPropertySpec extends SparkSpec {
       "lp" -> (x => DocGraph.lpIterLaid(sym(x), 3)))
     val selfLoopRows = Seq((0L, 0L), (1L, 1L), (100L, 100L))
     val dupRows = Seq((0L, 1L), (0L, 1L), (1L, 2L), (1L, 2L), (2L, 0L), (3L, 1L))
-    val selfLoops = selfLoopRows.toDF("src", "dst")
-    val dups = dupRows.toDF("src", "dst")
+    val hubRows = (1L to 50L).map(i => (0L, i))
+    val inputs = Seq("self-loops" -> selfLoopRows, "duplicates" -> dupRows, "hub" -> hubRows)
+    val empty = table(Nil)
     for ((name, run) <- drivers) {
-      assert(run(e).count() == 0, s"$name on the empty table")
-      for ((input, g) <- Seq("self-loops" -> selfLoops, "duplicates" -> dups)) {
-        val rows = run(g).collect()
-        val vids = rows.map(_.getLong(0))
-        assert(vids.distinct.length == vids.length && vids.length <= 4, s"$name on $input: ${rows.toSeq}")
-        assert(!rows.exists(_.anyNull), s"$name on $input: ${rows.toSeq}")
+      assert(run(empty).count() == 0, s"$name on the empty table")
+      for ((input, rows) <- inputs) {
+        val got = run(table(rows)).collect()
+        val vids = got.map(_.getLong(0))
+        val nV = rows.flatMap(r => Seq(r._1, r._2)).distinct.size
+        assert(vids.distinct.length == vids.length && vids.length <= nV, s"$name on $input: ${got.toSeq}")
+        assert(!got.exists(_.anyNull), s"$name on $input: ${got.toSeq}")
       }
     }
 
     // SCC (against refScc), condensation layering, truss peeling, the exact
     // and HyperBall balls and harmonic centrality over the same tables plus
     // the empty one; expectations by hand for the 4-vertex duplicate table
-    // (cycle 0→1→2→0 entered from 3)
+    // (cycle 0→1→2→0 entered from 3) and the hub (0 → 1..50)
     import operators.Neighborhood
     def ids(df: DataFrame): Map[Long, Seq[Any]] =
       df.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
@@ -171,18 +184,21 @@ class GraphPropertySpec extends SparkSpec {
       ids(Neighborhood.hyperBall(GraphOps.vertices(x), DocGraph.lay(x, DocGraph.reversed), 2))
     def truss(x: DataFrame) = Truss.peel(x, 3, 2).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val selfIds = selfLoopRows.map(_._1)
-    for ((input, rows) <- Seq("empty" -> Seq.empty[(Long, Long)], "self-loops" -> selfLoopRows,
-                              "duplicates" -> dupRows)) {
-      val g = rows.toDF("src", "dst")
-      val scc = StronglyConnectedComponents.run(spark, g)
+    val leaves = hubRows.map(_._2)
+    for ((input, rows) <- ("empty" -> Seq.empty[(Long, Long)]) +: inputs) {
+      val g = table(rows)
+      val scc = StronglyConnectedComponents.run(s, g)
       assert(scc.columns.toSeq == Seq("vid", "scc_id"), s"SCC on $input")
       assert(scc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == refScc(rows), s"SCC on $input")
-      val topo = Condensation.topoLayers(spark, g, 3)
+      val topo = Condensation.topoLayers(s, g, 3)
       assert(topo.columns.toSeq == Seq("vid", "scc_id", "layer3"), s"topoLayers on $input")
       val (layers, ball, harm, tri) = input match {
         case "empty" => (Map.empty[Long, Seq[Any]], Map.empty[Long, Seq[Any]], Map.empty[Long, Seq[Any]], Set.empty[(Long, Long)])
         case "self-loops" => (selfIds.map(v => v -> Seq(v, 0L)).toMap, selfIds.map(_ -> Seq(1L)).toMap,
           selfIds.map(_ -> Seq(0L)).toMap, Set.empty[(Long, Long)])
+        case "hub" => ((leaves.map(v => v -> Seq(v, 1L)) :+ (0L -> Seq(0L, 0L))).toMap,
+          (leaves.map(_ -> Seq(1L)) :+ (0L -> Seq(51L))).toMap,
+          (leaves.map(_ -> Seq(2L)) :+ (0L -> Seq(0L))).toMap, Set.empty[(Long, Long)])
         case _ => (Map(0L -> Seq(0L, 1L), 1L -> Seq(0L, 1L), 2L -> Seq(0L, 1L), 3L -> Seq(3L, 0L)),
           (0L to 3L).map(_ -> Seq(3L)).toMap, Map(0L -> Seq(3L), 1L -> Seq(5L), 2L -> Seq(4L), 3L -> Seq(0L)),
           Set((0L, 1L), (0L, 2L), (1L, 2L)))
@@ -205,7 +221,7 @@ class GraphPropertySpec extends SparkSpec {
     val star = (1L to 20L).map(i => (0L, i))
     for ((input, g) <- Seq("self-loops" -> selfLoopRows, "duplicates" -> dupRows, "star" -> star);
          threshold <- Seq(Long.MaxValue, 1L)) {
-      val res = PageRank.run(spark, g.toDF("src", "dst"), PageRankConfig(eps = 1e-10,
+      val res = PageRank.run(s, table(g), PageRankConfig(eps = 1e-10,
         hubDegreeThreshold = threshold, saltBuckets = 4, ckptEvery = 0))
       assert(threshold == Long.MaxValue || input == "self-loops" || res.hubCount > 0, s"$input salted no hub")
       val got = res.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap

@@ -21,17 +21,32 @@ import graft.operators.DocGraph
  *
  * Counting protocol: AQE is OFF in a dedicated child session (AQE splits one
  * action into one job per materialized query stage, making counts
- * plan-shape-dependent) and broadcasts are disabled via
- * broadcastMaxRows = 0 (each BroadcastExchange submits its own async collect
- * job). Under those pins, jobs == driver actions exactly. PageRank is also
- * pinned in the suite's default AQE-on session, where every materialized
- * query stage is its own job, so the count is the superstep's stage shape.
+ * plan-shape-dependent) whose `spark.sql.autoBroadcastJoinThreshold` is -1,
+ * so every driver's crossover (`Superstep.broadcasts`) picks the
+ * shuffle-hash regime (each BroadcastExchange submits its own async collect
+ * job). PageRank is pinned to the same regime by its own
+ * `broadcastMaxRows = 0`. Under those pins, jobs == driver actions exactly;
+ * the in-plan scalars' broadcasts (`GraphOps.attachScalar`) are the one
+ * exception, counted where they occur. PageRank is also pinned in the
+ * suite's default AQE-on session, where every materialized query stage is
+ * its own job, so the count is the superstep's stage shape.
  */
 class JobCountSpec extends SparkSpec {
 
   private lazy val noAqe: SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
+    s
+  }
+
+  /** Like noAqe but with broadcast joins also switched off: the drivers'
+    * crossover reads the session, so they run in the shuffle regime (each
+    * BroadcastExchange would submit its own async collect job and poison
+    * the count). */
+  private lazy val noAqeNoBc: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s
   }
 
@@ -108,112 +123,102 @@ class JobCountSpec extends SparkSpec {
   }
 
   test("HashMin CC: exactly one job per strided superstep PAIR (r6)") {
-    val e = pathEdges(noAqe)
-    val j4 = jobsDuring { ConnectedComponents.run(noAqe, e, maxIter = 4, broadcastMaxRows = 0L) }
-    val j8 = jobsDuring { ConnectedComponents.run(noAqe, e, maxIter = 8, broadcastMaxRows = 0L) }
+    val e = pathEdges(noAqeNoBc)
+    val j4 = jobsDuring { ConnectedComponents.run(noAqeNoBc, e, maxIter = 4) }
+    val j8 = jobsDuring { ConnectedComponents.run(noAqeNoBc, e, maxIter = 8) }
     assert(j8 - j4 == 2, s"expected 1 job per 2 supersteps, got j4=$j4 j8=$j8")
   }
 
   test("label propagation: exactly one job per strided superstep PAIR (r6)") {
-    val e = pathEdges(noAqe)
-    val j4 = jobsDuring { LabelPropagation.run(noAqe, e, maxIter = 4, broadcastMaxRows = 0L) }
-    val j8 = jobsDuring { LabelPropagation.run(noAqe, e, maxIter = 8, broadcastMaxRows = 0L) }
+    val e = pathEdges(noAqeNoBc)
+    val j4 = jobsDuring { LabelPropagation.run(noAqeNoBc, e, maxIter = 4) }
+    val j8 = jobsDuring { LabelPropagation.run(noAqeNoBc, e, maxIter = 8) }
     assert(j8 - j4 == 2, s"expected 1 job per 2 supersteps, got j4=$j4 j8=$j8")
   }
 
   test("personalized PageRank: pinned jobs per superstep in the shuffle regime (r6)") {
-    // seeds = vid%100==0 → {0} on the 31-vertex path. broadcastMaxRows = 0
-    // forces the SHUFFLE regime, where the state checkpoints EAGERLY per
+    // seeds = vid%100==0 → {0} on the 31-vertex path. The broadcast-disabled
+    // session forces the SHUFFLE regime, where the state checkpoints EAGERLY per
     // superstep (so the in-plan scalar's broadcast build never carries a
     // whole superstep inside the broadcast timeout): exactly the checkpoint
     // action + the scalar-broadcast build per extra superstep — pinned as
     // an exact count so a regression to more driver work fails here. (The
     // broadcast regime's zero-actions-per-superstep chain is exercised by
     // the oracle parity suite; job counts there are AQE-shaped.)
-    val e = pathEdges(noAqe)
-    val j3 = jobsDuring { DocGraph.pprIterLaid(DocGraph.lay(e), 3, broadcastMaxRows = 0L).count() }
-    val j6 = jobsDuring { DocGraph.pprIterLaid(DocGraph.lay(e), 6, broadcastMaxRows = 0L).count() }
+    val e = pathEdges(noAqeNoBc)
+    val j3 = jobsDuring { DocGraph.pprIterLaid(DocGraph.lay(e), 3).count() }
+    val j6 = jobsDuring { DocGraph.pprIterLaid(DocGraph.lay(e), 6).count() }
     assert(j6 - j3 == 6, s"expected checkpoint + scalar-broadcast build per superstep, got j3=$j3 j6=$j6")
   }
 
   test("HITS: pinned jobs per half-step in the shuffle regime (r6)") {
-    val e = pathEdges(noAqe)
-    val j2 = jobsDuring { DocGraph.hitsIterLaid(DocGraph.lay(e), 2, broadcastMaxRows = 0L).count() }
-    val j4 = jobsDuring { DocGraph.hitsIterLaid(DocGraph.lay(e), 4, broadcastMaxRows = 0L).count() }
+    val e = pathEdges(noAqeNoBc)
+    val j2 = jobsDuring { DocGraph.hitsIterLaid(DocGraph.lay(e), 2).count() }
+    val j4 = jobsDuring { DocGraph.hitsIterLaid(DocGraph.lay(e), 4).count() }
     assert(j4 - j2 == 8, s"expected checkpoint + normalizer-broadcast build per half-step, got j2=$j2 j4=$j4")
   }
 
   test("multi-source BFS: zero extra jobs per superstep (lazy chain, one materializing action)") {
-    val e = pathEdges(noAqe)
-    val j4 = jobsDuring { DocGraph.bfsIterLaid(DocGraph.lay(e), 4, broadcastMaxRows = 0L).count() }
-    val j8 = jobsDuring { DocGraph.bfsIterLaid(DocGraph.lay(e), 8, broadcastMaxRows = 0L).count() }
+    val e = pathEdges(noAqeNoBc)
+    val j4 = jobsDuring { DocGraph.bfsIterLaid(DocGraph.lay(e), 4).count() }
+    val j8 = jobsDuring { DocGraph.bfsIterLaid(DocGraph.lay(e), 8).count() }
     assert(j8 - j4 == 0, s"expected a k-independent job count, got j4=$j4 j8=$j8")
   }
 
   test("weighted SSSP: zero extra jobs per superstep (lazy chain, one materializing action)") {
-    val e = pathEdges(noAqe)
-    val j4 = jobsDuring { DocGraph.ssspIterLaid(DocGraph.lay(e), 4, broadcastMaxRows = 0L).count() }
-    val j8 = jobsDuring { DocGraph.ssspIterLaid(DocGraph.lay(e), 8, broadcastMaxRows = 0L).count() }
+    val e = pathEdges(noAqeNoBc)
+    val j4 = jobsDuring { DocGraph.ssspIterLaid(DocGraph.lay(e), 4).count() }
+    val j8 = jobsDuring { DocGraph.ssspIterLaid(DocGraph.lay(e), 8).count() }
     assert(j8 - j4 == 0, s"expected a k-independent job count, got j4=$j4 j8=$j8")
   }
 
   test("truncated Katz: zero extra jobs per superstep (lazy chain, one materializing action)") {
-    val e = pathEdges(noAqe)
-    val j3 = jobsDuring { DocGraph.katzIterLaid(DocGraph.lay(e), 3, broadcastMaxRows = 0L).count() }
-    val j6 = jobsDuring { DocGraph.katzIterLaid(DocGraph.lay(e), 6, broadcastMaxRows = 0L).count() }
+    val e = pathEdges(noAqeNoBc)
+    val j3 = jobsDuring { DocGraph.katzIterLaid(DocGraph.lay(e), 3).count() }
+    val j6 = jobsDuring { DocGraph.katzIterLaid(DocGraph.lay(e), 6).count() }
     assert(j6 - j3 == 0, s"expected a k-independent job count, got j3=$j3 j6=$j6")
   }
 
   test("weighted PageRank: pinned jobs per superstep in the shuffle regime (r6)") {
-    val e = pathEdges(noAqe)
-    val j3 = jobsDuring { DocGraph.wprIterLaid(DocGraph.lay(e), 3, broadcastMaxRows = 0L).count() }
-    val j6 = jobsDuring { DocGraph.wprIterLaid(DocGraph.lay(e), 6, broadcastMaxRows = 0L).count() }
+    val e = pathEdges(noAqeNoBc)
+    val j3 = jobsDuring { DocGraph.wprIterLaid(DocGraph.lay(e), 3).count() }
+    val j6 = jobsDuring { DocGraph.wprIterLaid(DocGraph.lay(e), 6).count() }
     assert(j6 - j3 == 6, s"expected checkpoint + scalar-broadcast build per superstep, got j3=$j3 j6=$j6")
   }
 
   test("greedy matching: zero extra jobs per round (lazy chain, one materializing action)") {
-    val e = pathEdges(noAqe)
-    val j2 = jobsDuring { DocGraph.matchIterLaid(DocGraph.lay(e, DocGraph.canonical), 2, broadcastMaxRows = 0L).count() }
-    val j5 = jobsDuring { DocGraph.matchIterLaid(DocGraph.lay(e, DocGraph.canonical), 5, broadcastMaxRows = 0L).count() }
+    val e = pathEdges(noAqeNoBc)
+    val j2 = jobsDuring { DocGraph.matchIterLaid(DocGraph.lay(e, DocGraph.canonical), 2).count() }
+    val j5 = jobsDuring { DocGraph.matchIterLaid(DocGraph.lay(e, DocGraph.canonical), 5).count() }
     assert(j5 - j2 == 0, s"expected a round-independent job count, got j2=$j2 j5=$j5")
   }
 
   test("Luby MIS: zero extra jobs per round (lazy chain, one materializing action)") {
-    val e = pathEdges(noAqe)
-    val j2 = jobsDuring { DocGraph.misIterLaid(DocGraph.lay(e, GraphOps.symmetrized), 2, broadcastMaxRows = 0L).count() }
-    val j5 = jobsDuring { DocGraph.misIterLaid(DocGraph.lay(e, GraphOps.symmetrized), 5, broadcastMaxRows = 0L).count() }
+    val e = pathEdges(noAqeNoBc)
+    val j2 = jobsDuring { DocGraph.misIterLaid(DocGraph.lay(e, GraphOps.symmetrized), 2).count() }
+    val j5 = jobsDuring { DocGraph.misIterLaid(DocGraph.lay(e, GraphOps.symmetrized), 5).count() }
     assert(j5 - j2 == 0, s"expected a round-independent job count, got j2=$j2 j5=$j5")
   }
 
   test("SALSA: zero extra jobs per iteration (stochastic half-steps need no normalizer)") {
-    val e = pathEdges(noAqe)
-    val j2 = jobsDuring { DocGraph.salsaIterLaid(DocGraph.lay(e), 2, broadcastMaxRows = 0L).count() }
-    val j5 = jobsDuring { DocGraph.salsaIterLaid(DocGraph.lay(e), 5, broadcastMaxRows = 0L).count() }
+    val e = pathEdges(noAqeNoBc)
+    val j2 = jobsDuring { DocGraph.salsaIterLaid(DocGraph.lay(e), 2).count() }
+    val j5 = jobsDuring { DocGraph.salsaIterLaid(DocGraph.lay(e), 5).count() }
     assert(j5 - j2 == 0, s"expected an iteration-independent job count, got j2=$j2 j5=$j5")
   }
 
   test("Luby coloring: zero extra jobs per round (lazy chain, one materializing action)") {
-    val e = pathEdges(noAqe)
-    val j2 = jobsDuring { DocGraph.colorIterLaid(DocGraph.lay(e, GraphOps.symmetrized), 2, broadcastMaxRows = 0L).count() }
-    val j5 = jobsDuring { DocGraph.colorIterLaid(DocGraph.lay(e, GraphOps.symmetrized), 5, broadcastMaxRows = 0L).count() }
+    val e = pathEdges(noAqeNoBc)
+    val j2 = jobsDuring { DocGraph.colorIterLaid(DocGraph.lay(e, GraphOps.symmetrized), 2).count() }
+    val j5 = jobsDuring { DocGraph.colorIterLaid(DocGraph.lay(e, GraphOps.symmetrized), 5).count() }
     assert(j5 - j2 == 0, s"expected a round-independent job count, got j2=$j2 j5=$j5")
   }
 
   test("k-core peel: zero extra jobs per round (lazy chain, one materializing action)") {
-    val e = pathEdges(noAqe)
-    val j2 = jobsDuring { DocGraph.kcoreIterLaid(DocGraph.lay(e, GraphOps.symmetrized), 2, 2, broadcastMaxRows = 0L).count() }
-    val j4 = jobsDuring { DocGraph.kcoreIterLaid(DocGraph.lay(e, GraphOps.symmetrized), 2, 4, broadcastMaxRows = 0L).count() }
+    val e = pathEdges(noAqeNoBc)
+    val j2 = jobsDuring { DocGraph.kcoreIterLaid(DocGraph.lay(e, GraphOps.symmetrized), 2, 2).count() }
+    val j4 = jobsDuring { DocGraph.kcoreIterLaid(DocGraph.lay(e, GraphOps.symmetrized), 2, 4).count() }
     assert(j4 - j2 == 0, s"expected a round-independent job count, got j2=$j2 j4=$j4")
-  }
-
-  /** Like noAqe but with broadcast joins also pinned off — for operators
-    * that take no broadcastMaxRows knob (each BroadcastExchange would submit its
-    * own async collect job and poison the count). */
-  private lazy val noAqeNoBc: SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s
   }
 
   test("k-truss peel: zero extra jobs per round (lazy chain, one materializing action)") {
@@ -234,11 +239,11 @@ class JobCountSpec extends SparkSpec {
   }
 
   test("alternating CC: one job per contraction round plus fixed setup") {
-    val e = pathEdges(noAqe)
+    val e = pathEdges(noAqeNoBc)
     var rounds = -1
     val jobs = jobsDuring {
       val (labels, r) =
-        ConnectedComponents.runAlternatingDetailed(noAqe, e, broadcastMaxRows = 0L)
+        ConnectedComponents.runAlternatingDetailed(noAqeNoBc, e)
       rounds = r
       // sanity: the result is still the right one (single component, min id 0)
       assert(labels.collect().forall(_.getLong(1) == 0L))

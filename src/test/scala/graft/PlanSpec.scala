@@ -1,7 +1,13 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.sql.{classic, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.graph._
 import graft.operators.Dedup
@@ -12,7 +18,8 @@ import graft.sources.PageSynth
  * at 100× data, asserted on the actual executed plans, not by convention:
  *
  *  - iterative superstep joins NEVER sort-merge (an SMJ re-sorts the cached
- *    O(|E|) edge side every superstep);
+ *    O(|E|) edge side every superstep), and never broadcast in a session
+ *    that switches broadcast joins off;
  *  - no cartesian/broadcast-nested-loop joins anywhere in the harness
  *    queries except the documented exact-ANN baseline (`q_ann_cosine`, a
  *    bounded 50-query brute-force reference);
@@ -24,19 +31,50 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
 
   test("superstep contribution join avoids SortMergeJoin in both regimes") {
-    val (edges, _, _) = Superstep.lay(PageSynth.edgeList(spark, 2000).toDF(), parts = 4)
-    val verts  = GraphOps.vertices(edges)
-    val n      = verts.count()
-    val rankDeg = verts.select(col("vid"), lit(1.0 / n).as("w"))
-    val empty   = spark.range(0).select(col("id").as("vid"))
-
-    for ((regime, bmr) <- Seq("broadcast" -> Long.MaxValue, "shuffle_hash" -> 0L)) {
-      val sums = Salting.contribSums(edges, rankDeg, empty, 0L, 8, Superstep.pinFor(n, bmr))
+    for ((regime, s) <- Seq("broadcast" -> spark, "shuffle_hash" -> noBroadcast)) {
+      val (edges, _, _) = Superstep.lay(PageSynth.edgeList(s, 2000).toDF(), parts = 4)
+      val verts  = GraphOps.vertices(edges)
+      val n      = verts.count()
+      val rankDeg = verts.select(col("vid"), lit(1.0 / n).as("w"))
+      val empty   = s.range(0).select(col("id").as("vid"))
+      val sums = Salting.contribSums(edges, rankDeg, empty, 0L, 8, Superstep.pinFor(n))
       sums.collect() // run through AQE so the final plan is the real one
       val plan = executed(sums)
       assert(!plan.contains("SortMergeJoin"), s"$regime plan has SMJ:\n$plan")
+      edges.unpersist()
     }
-    edges.unpersist()
+  }
+
+  /** the executed plan of every query `s` runs during `body` */
+  private def plansDuring(s: SparkSession)(body: => Unit): Seq[String] = {
+    val plans = new ConcurrentLinkedQueue[String]
+    val l = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val listeners = s.asInstanceOf[classic.SparkSession].listenerManager
+    listeners.register(l)
+    try { body; ListenerBusDrain.drain(s.sparkContext) }
+    finally listeners.unregister(l)
+    plans.asScala.toSeq
+  }
+
+  test("the graph drivers obey a session that switches broadcast joins off") {
+    // an explicit broadcast hint overrides spark.sql.autoBroadcastJoinThreshold
+    // = -1, so the drivers' crossover must read the session: their superstep
+    // joins are shuffle-hash joins there, at a size that broadcasts elsewhere
+    val e = PageSynth.edgeList(noBroadcast, 300).toDF()
+    for ((name, run) <- Seq[(String, () => DataFrame)](
+           "CC" -> (() => ConnectedComponents.run(noBroadcast, e, maxIter = 4)),
+           "PageRank" -> (() => PageRank.run(noBroadcast, e,
+             PageRankConfig(maxIter = 3, ckptEvery = 0)).ranks))) {
+      var res: DataFrame = null
+      val plans = plansDuring(noBroadcast) { res = run() }
+      GraphOps.freeCheckpoint(res)
+      assert(plans.exists(_.contains("ShuffledHashJoin")), s"$name ran no superstep join")
+      plans.foreach(p => assert(!p.contains("BroadcastHashJoin"), s"$name broadcasts:\n$p"))
+    }
   }
 
   test("no cartesian/nested-loop join or single-partition global window in any harness query plan") {

@@ -21,7 +21,7 @@ class SaltingLayoutSpec extends SparkSpec {
 
     val noHubs = Seq.empty[Long].toDF("vid")
     val hub7   = Seq(7L).toDF("vid")
-    val pin    = Superstep.pinFor(rankDeg.count(), Superstep.BroadcastMaxRows)
+    val pin    = Superstep.pinFor(rankDeg.count())
     val plain  = Salting.contribSums(edges, rankDeg, noHubs, 0L, 8, pin)
     val salted = Salting.contribSums(edges, rankDeg, hub7, 1L, 8, pin)
 

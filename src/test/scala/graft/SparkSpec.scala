@@ -18,8 +18,18 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** A child session with broadcast joins switched off
+    * (`spark.sql.autoBroadcastJoinThreshold` = -1): every graph driver's
+    * crossover (`Superstep.broadcasts`) picks the shuffle-hash regime there. */
+  lazy val noBroadcast: SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+  lazy val noBroadcast: SparkSession = TestSpark.noBroadcast
 }

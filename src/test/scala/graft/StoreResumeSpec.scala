@@ -194,6 +194,36 @@ class StoreResumeSpec extends SparkSpec {
     edges.unpersist()
   }
 
+  test("PageRank resumes on the salted path and from a ckptEvery boundary") {
+    val edges = GraphOps.edgesFromPages(PageSynth.pages(spark, 300).toDF()).persist()
+    val base  = PageRankConfig(eps = 1e-9, maxIter = 40, numPartitions = 4, ckptEvery = 4)
+    // salted: interrupted at superstep 10, after the closing save of the
+    // interrupted run; boundary: interrupted at superstep 8 = 2 · ckptEvery,
+    // where the closing save is skipped and the resume reads the periodic one
+    for ((name, cfg, stop, saves) <- Seq(
+           ("salted", base.copy(hubDegreeThreshold = 3, saltBuckets = 4), 10, Seq(3, 7, 9)),
+           ("boundary", base, 8, Seq(3, 7)))) withClue(s"$name: ") {
+      val store = new IcebergLikeStore(spark, Files.createTempDirectory("graft-resume").toString)
+      val full  = PageRank.run(spark, edges, cfg)
+      val part  = PageRank.run(spark, edges, cfg.copy(maxIter = stop), store.rankCheckpointer("ranks"))
+      assert(part.iterations == stop)
+      val snap = store.currentSnapshot("ranks").get
+      assert(snap.iter == stop - 1 && snap.metrics.length == stop)
+      assert(store.history("ranks").map(_.iter).sorted == saves)
+      val resumed = PageRank.run(spark, edges, cfg, store.rankCheckpointer("ranks"))
+      assert(resumed.iterations == full.iterations, s"resumed=${resumed.iterations} full=${full.iterations}")
+      assert(resumed.hubCount == full.hubCount && (name != "salted" || full.hubCount > 0),
+        s"hubs: resumed=${resumed.hubCount} full=${full.hubCount}")
+      val f = full.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val g = resumed.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(f.keySet == g.keySet)
+      f.foreach { case (k, v) => assert(math.abs(g(k) - v) < 1e-12, s"vid=$k") }
+      assert(resumed.metrics.map(_.iter) == (0 until resumed.iterations))
+      Seq(full, part, resumed).foreach(r => GraphOps.freeCheckpoint(r.ranks))
+    }
+    edges.unpersist()
+  }
+
   test("pages live in the store: extraction reads the committed snapshot") {
     // BASELINE.json:15 input contract — the engine consumes an Iceberg-style
     // `pages` table, not an in-memory DataFrame: commit the synthetic crawl,
