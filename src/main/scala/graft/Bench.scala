@@ -36,7 +36,7 @@ import graft.sources.PageSynth
  *   `pagerank_edges_per_sec`        — whole-run edges/sec/superstep (headline)
  *   `pagerank_median_edges_per_sec` — median-superstep rate of the best run
  *   `pagerank_salted_edges_per_sec` — same engine on a hub-skewed graph where
- *                                     the salted-join path is actually active
+ *                                     hub detection actually fires
  * Scaling-efficiency evidence (local[8] vs local[32]) is produced by
  * [[graft.tools.ScalingBench]] and recorded in BENCH/BASELINE.md.
  */
@@ -160,7 +160,7 @@ object Bench {
     metric("pagerank_median_edges_per_sec",    nEdges.toDouble / (bestMedMs / 1000.0))
     spark.catalog.clearCache()
 
-    // ---- salted path: hub-skewed graph where hub detection actually fires --
+    // ---- hub path: hub-skewed graph where hub detection actually fires ----
     val hubPages = nPages / 4
     val hubEdges = PageSynth.edgeListWithHubOut(spark, hubPages, hubOut = 200000)
     val nHubE    = hubEdges.count()
@@ -177,7 +177,7 @@ object Bench {
     results("pagerank_salted_bench")         = saltBest
     runLog("pagerank_salted_bench")          = saltRuns
     metric("pagerank_salted_edges_per_sec",    nHubE.toDouble * 4 / saltBest)
-    // proof the salted path was active, not dead code (hub set non-empty)
+    // proof the hub path was active, not dead code (hub set non-empty)
     metric("pagerank_salted_hub_count",        saltHubs.toDouble)
     spark.catalog.clearCache()
 

@@ -161,7 +161,7 @@ object Neighborhood {
     val e = g.edges
     g.fixedK(verts.select(col("vid"), HllExprs.hllInit(col("vid")).as("reg")), k,
       out = _.select(col("vid"), HllExprs.hllEstimate(col("reg")).as("est"))) { (b, _) =>
-      e.join(b, e("src") === b("vid")).select(e("dst").as("vid"), b("reg"))
+      e.join(g.pin(b), e("src") === b("vid")).select(e("dst").as("vid"), b("reg"))
         .unionByName(b)
         .groupBy("vid").agg(HllExprs.hllUnionAgg(col("reg")).as("reg"))
     }

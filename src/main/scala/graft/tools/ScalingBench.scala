@@ -21,12 +21,20 @@ import graft.sources.PageSynth
  * in BENCH/BASELINE.md. Each leg uses its own best configuration — a conf
  * that slows one leg must not be used to flatter the ratio (the round-1
  * "0.976" came from exactly that artifact).
+ *
+ * Both legs run the same plan: the pinned `numPartitions` and
+ * `spark.sql.shuffle.partitions` are `cores` floored at 2. At width 1 the
+ * layout plans as `SinglePartition`, which PageRank's co-partitioned
+ * superstep joins do not accept, so the 1-core leg would re-shuffle every
+ * superstep and its ratio to the 4-core leg would measure that plan, not
+ * the added cores ([[graft.graph.Superstep.width]]).
  */
 object ScalingBench {
   def main(args: Array[String]): Unit = {
     val cores  = args(0).toInt
     val nPages = if (args.length > 1) args(1).toLong else 500000L
     val iters  = if (args.length > 2) args(2).toInt else 8
+    val parts  = math.max(2, cores)
     // SPARK_GRAFT_MASTER overrides the master URL — the N-vs-4N *executor*
     // form of the north rule uses `local-cluster[N,c,mem]`: real separate
     // executor JVMs (own heap, own GC) on this box, vs local[N]'s single
@@ -35,7 +43,7 @@ object ScalingBench {
     val builder = SparkSession.builder()
       .master(master)
       .appName(s"graft-scaling-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.shuffle.partitions", parts.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
@@ -55,11 +63,7 @@ object ScalingBench {
     spark.sparkContext.setLogLevel("ERROR")
 
     val repeats  = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
-    // engine: "sql" = Catalyst superstep (default), "cpu" = shuffle-free
-    // compute-bound control leg (see cpuLeg)
-    val engine   = sys.env.getOrElse("SPARK_GRAFT_ENGINE", "sql")
-    if (engine == "cpu") { cpuLeg(spark, cores, nPages, repeats); spark.stop(); return }
-    val cfg = PageRankConfig(eps = 0.0, maxIter = iters, ckptEvery = 0, numPartitions = cores)
+    val cfg = PageRankConfig(eps = 0.0, maxIter = iters, ckptEvery = 0, numPartitions = parts)
     val edges  = PageSynth.edgeList(spark, nPages, numPartitions = cores)
     val nEdges = edges.count()
 
@@ -91,51 +95,7 @@ object ScalingBench {
     val runsJson = runs.map { case (s, m, a, b, _) =>
       s"""{"sec":$s,"median_superstep_ms":$m,"load_before":$a,"load_after":$b}"""
     }.mkString("[", ",", "]")
-    println(s"""{"bench":"pagerank_scaling","engine":"$engine","cores":$cores,"pages":$nPages,"edges":$nEdges,"supersteps":$its,"sec":$sec,"edges_per_sec_per_superstep":$rate,"median_superstep_ms":$medMs,"median_edges_per_sec":$medRate,"load_before":$l0,"load_after":$l1,"runs":$runsJson}""")
+    println(s"""{"bench":"pagerank_scaling","engine":"sql","cores":$cores,"pages":$nPages,"edges":$nEdges,"supersteps":$its,"sec":$sec,"edges_per_sec_per_superstep":$rate,"median_superstep_ms":$medMs,"median_edges_per_sec":$medRate,"load_before":$l0,"load_after":$l1,"runs":$runsJson}""")
     spark.stop()
-  }
-
-  /**
-   * Compute-bound control leg: BPE-ish `regexp_count` + quality score over
-   * synthesized page text, one map-only job closed by a partial-aggregated
-   * scalar sum — no shuffle of substance, no cached blocks, every byte
-   * produced and consumed inside one whole-stage-codegen pipeline. The
-   * PageRank legs are memory-bus-bound on this single-socket box
-   * (BENCH/BASELINE.md's measured hardware ceiling: raw streaming loops
-   * themselves scale 0.41–0.43 across the 8→32 knee), so their N→4N efficiency measures the bus, not
-   * the engine. This leg is the control: per-row regex state machines are
-   * register/L1-resident, so if the ENGINE added scaling overhead it would
-   * show here — and conversely a ≥0.8 ratio here pins the PageRank pairs'
-   * shortfall on the hardware.
-   */
-  private def cpuLeg(spark: SparkSession, cores: Int, nPages: Long, repeats: Int): Unit = {
-    import org.apache.spark.sql.functions._
-    val pages = PageSynth.pages(spark, nPages, numPartitions = cores)
-
-    def onePass(): Long =
-      pages.select(sum(graft.operators.TextOps.tokenCountBpeish(col("text")) +
-          graft.operators.TextOps.qualityScorePpm(col("text"))).as("s"))
-        .collect()(0).getLong(0)
-    onePass() // warm-up (JIT + codegen compile)
-
-    def loadavg(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-
-    var checksum = 0L
-    val runs = (1 to repeats).map { _ =>
-      val l0  = loadavg()
-      val t0  = System.nanoTime()
-      checksum = onePass()
-      val sec = (System.nanoTime() - t0) / 1e9
-      (sec, l0, loadavg())
-    }
-    val (sec, l0, l1) = runs.minBy(_._1)
-    val rate = nPages.toDouble / sec
-    val runsJson = runs.map { case (s, a, b) =>
-      s"""{"sec":$s,"load_before":$a,"load_after":$b}"""
-    }.mkString("[", ",", "]")
-    println(s"""{"bench":"cpu_text_scaling","engine":"cpu","cores":$cores,"pages":$nPages,"checksum":$checksum,"sec":$sec,"pages_per_sec":$rate,"load_before":$l0,"load_after":$l1,"runs":$runsJson}""")
   }
 }

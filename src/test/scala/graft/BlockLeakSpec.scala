@@ -83,7 +83,9 @@ class BlockLeakSpec extends SparkSpec {
     for (bmr <- Seq(Superstep.BroadcastMaxRows, 0L))
       leavesOnlyItsResult(s"PageRank bmr=$bmr")(pr(PageRankConfig(maxIter = 5, ckptEvery = 0, broadcastMaxRows = bmr)))
     leavesOnlyItsResult("PageRank salted")(
-      pr(PageRankConfig(maxIter = 5, ckptEvery = 0, hubDegreeThreshold = 3, saltBuckets = 4)))
+      pr(PageRankConfig(maxIter = 5, ckptEvery = 0, hubDegreeThreshold = 3)))
+    leavesOnlyItsResult("PageRank split")(
+      pr(PageRankConfig(maxIter = 5, ckptEvery = 0, hubDegreeThreshold = 3, broadcastMaxRows = 0)))
     val store = new graft.ckpt.IcebergLikeStore(spark,
       java.nio.file.Files.createTempDirectory("graft-leak-pr").toString)
     GraphOps.freeCheckpoint(pr(PageRankConfig(maxIter = 4, ckptEvery = 3), store.rankCheckpointer()))

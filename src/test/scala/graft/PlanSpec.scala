@@ -31,17 +31,26 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
 
   test("superstep contribution join avoids SortMergeJoin in both regimes") {
-    for ((regime, s) <- Seq("broadcast" -> spark, "shuffle_hash" -> noBroadcast)) {
+    // split: the sources of out-degree > 3 are hubs whose edges are laid by
+    // dst and joined to their broadcast rank rows; the rest of the edges join
+    // the state shuffle-hash
+    for ((regime, s) <- Seq("broadcast" -> spark, "shuffle_hash" -> noBroadcast, "split" -> spark)) {
       val (edges, _, _) = Superstep.lay(PageSynth.edgeList(s, 2000).toDF(), parts = 4)
       val verts  = GraphOps.vertices(edges)
       val n      = verts.count()
       val rankDeg = verts.select(col("vid"), lit(1.0 / n).as("w"))
-      val empty   = s.range(0).select(col("id").as("vid"))
-      val sums = Salting.contribSums(edges, rankDeg, empty, 0L, 8, Superstep.pinFor(n))
+      val joins = if (regime != "split") Seq(edges -> Superstep.pinFor(n)(rankDeg)) else {
+        val hubs = GraphOps.outDegrees(edges).filter(col("outDeg") > 3).select("vid")
+        val hubCount = hubs.count()
+        val (Some(rest), Some(byDst)) = PageRank.layout(edges, 4, all = false, hubs, hubCount)
+        Seq(rest -> Superstep.shuffleHash(rankDeg),
+          byDst -> Superstep.pinFor(hubCount)(rankDeg.join(hubs, Seq("vid"), "left_semi")))
+      }
+      val sums = PageRank.contribSums(joins)
       sums.collect() // run through AQE so the final plan is the real one
       val plan = executed(sums)
       assert(!plan.contains("SortMergeJoin"), s"$regime plan has SMJ:\n$plan")
-      edges.unpersist()
+      joins.foreach(_._1.unpersist())
     }
   }
 
@@ -75,6 +84,21 @@ class PlanSpec extends SparkSpec {
       assert(plans.exists(_.contains("ShuffledHashJoin")), s"$name ran no superstep join")
       plans.foreach(p => assert(!p.contains("BroadcastHashJoin"), s"$name broadcasts:\n$p"))
     }
+  }
+
+  test("HyperBall's superstep join never sort-merges in a broadcast-disabled session") {
+    // the join of the laid edges against the counter state goes through the
+    // kernel's pin: unpinned, the planner picks a sort-merge join that
+    // re-shuffles and re-sorts the cached edge side every superstep
+    import operators.{DocGraph, Neighborhood}
+    val e = noBroadcast.createDataFrame((0L until 30L).map(i => (i, i + 1))).toDF("src", "dst")
+    var res: DataFrame = null
+    val plans = plansDuring(noBroadcast) {
+      res = Neighborhood.hyperBall(GraphOps.vertices(e), DocGraph.lay(e, DocGraph.reversed), 5)
+    }
+    GraphOps.freeCheckpoint(res)
+    plans.foreach(p => assert(!p.contains("SortMergeJoin"), s"HyperBall sort-merges:\n$p"))
+    assert(plans.exists(_.contains("ShuffledHashJoin")), "HyperBall ran no superstep join")
   }
 
   test("no cartesian/nested-loop join or single-partition global window in any harness query plan") {
