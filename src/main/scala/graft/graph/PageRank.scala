@@ -24,8 +24,8 @@ final case class PageRankResult(
     metrics: Seq[IterMetrics],
     iterations: Int,
     /** how many sources have an out-degree above the (possibly derived) hub
-      * threshold this run; their edges are laid by `dst` where their rank
-      * rows are broadcast ([[PageRank.layout]]). */
+      * threshold this run. A measurement only: no layout or join depends on
+      * it ([[PageRank.layout]]). */
     hubCount: Long = 0L,
     hubThreshold: Long = 0L)
 
@@ -34,10 +34,10 @@ final case class PageRankConfig(
     eps: Double = 1e-9,
     maxIter: Int = 200,
     numPartitions: Int = 0,          // 0 → right-sized, Superstep.width
-    /** out-degree above which a source vertex is a hub whose edges are laid
-      * by `dst` (J4). 0 → derived from the run's own degree stats (A8):
-      * max(1024, |E| / (2·partitions)) — a key holding more than half an
-      * average partition's edges is a genuine single-task skew source. */
+    /** out-degree above which a source vertex counts as a hub in
+      * [[PageRankResult.hubCount]]. 0 → derived from the run's own degree
+      * stats (A8): max(1024, |E| / (2·partitions)) — a key holding more than
+      * half an average partition's edges is a genuine single-task skew source. */
     hubDegreeThreshold: Long = 0L,
     /** durable checkpoint every k supersteps (resume point); lineage is truncated every superstep regardless. */
     ckptEvery: Int = 5,
@@ -55,16 +55,15 @@ final case class PageRankConfig(
  * L1-convergence epsilon) — BASELINE.json:6; golden values FIXTURES.md §2.
  *
  * Superstep = one shuffle-hash (or broadcast) join of ranks against the
- * cached edge table (two joins when hub edges are laid apart, [[layout]]),
- * then a groupBy-destination sum with map-side partial aggregation — the
- * Spark-native form of the reference's CSR gather + block reduction
- * kernels [R].
+ * cached edge table, then a groupBy-destination sum with map-side partial
+ * aggregation — the Spark-native form of the reference's CSR gather + block
+ * reduction kernels [R].
  *
  * Scale design (SURVEY.md §4.2):
- *  - edges are hash-partitioned ONCE (on `src` in the shuffle regime) and
- *    persisted; every superstep join reuses that partitioning, so
- *    per-iteration shuffle traffic is O(|V|) ranks + O(|V|) partial sums,
- *    never O(|E|) edges;
+ *  - edges are hash-partitioned ONCE ([[layout]]: on `src` in the shuffle
+ *    regime, on `dst` in the broadcast regime) and persisted; every
+ *    superstep join reuses that partitioning, so per-iteration shuffle
+ *    traffic is O(|V|) ranks + O(|V|) partial sums, never O(|E|) edges;
  *  - the rank state `(vid, rank, outDeg)` is laid out by an explicit
  *    `repartition(parts, vid)` that both the contribution join and the
  *    update join read; AQE can coalesce neither an explicit-count exchange
@@ -83,10 +82,12 @@ final case class PageRankConfig(
  *  - the per-superstep scalar enters the plan through a closure UDF, not a
  *    literal, so every superstep generates the same code and the codegen
  *    cache compiles it once per JVM;
- *  - one layout rule handles hub skew ([[layout]]): an edge is laid by
- *    `dst` exactly when its source's rank row is broadcast, so a hub's
- *    edges spread over every partition instead of filling its own — on top
- *    of AQE's skew-join splits (both layers mandated by BASELINE.json:6);
+ *  - hub skew: in the broadcast regime every edge is laid by `dst`, so a
+ *    hub's edges spread over every partition. In the shuffle regime a
+ *    hub's edges stay in its own `src` partition: splitting them off to
+ *    join their broadcast rank rows was measured slower than not splitting
+ *    (ROADMAP direction 7), and AQE's skew-join splits cannot split the
+ *    cached edge scan. `hubCount` reports the hubs either way;
  *  - the loop is the kernel's [[Superstep.converge]], one superstep per
  *    driver action; every `ckptEvery` supersteps the materialized state is
  *    written through the pluggable [[Checkpointer]], so a run resumes
@@ -128,62 +129,35 @@ object PageRank {
   private def fixed(t: Column): Column = rint(t * lit(Scale)).cast("long")
 
   /**
-   * The superstep's edge layouts, by one rule: an edge is laid by `dst`
-   * exactly when its source's rank row is broadcast. `eSrc` is the edge
-   * table laid by `src` at `parts`; `all` says the whole rank state is
-   * broadcast; `hubs` (vid) are the sources above the hub threshold, and
-   * `hubCount` their number. Returns (src-laid, dst-laid) edges, `None` for
-   * a side the rule lays no edge on; `eSrc` is released unless returned.
+   * The superstep's edge layout. `eSrc` is the edge table laid by `src` at
+   * `parts`; `all` says the whole rank state is broadcast (the broadcast
+   * regime). There every edge is re-laid by `dst` and `eSrc` is released:
+   * the superstep join needs no src clustering (the rank side ships as a
+   * hash relation), so the per-destination aggregate lands on the cached
+   * partitioning and the superstep runs with NO shuffle — one edge shuffle
+   * up front buys `maxIter` shuffle-free supersteps (r6, guide §2.4), and a
+   * hub's edges spread over every partition by `pmod(hash(dst), parts)`.
+   * The shuffle regime keeps `eSrc`: its join streams the cached edge side.
+   * Why the crossover stays at 500k rows: [[Superstep.BroadcastMaxRows]],
+   * OPTIMIZATION_r06.md.
    *
-   *  - `all` (the broadcast regime): every edge is laid by `dst`. The
-   *    superstep join needs no src clustering there (the rank side ships as
-   *    a hash relation), so the per-destination aggregate lands on the
-   *    cached partitioning and the superstep runs with NO shuffle: one edge
-   *    shuffle up front buys `maxIter` shuffle-free supersteps (r6, guide
-   *    §2.4). Why the crossover stays at 500k rows:
-   *    [[Superstep.BroadcastMaxRows]], OPTIMIZATION_r06.md;
-   *  - otherwise, while the session broadcasts `hubCount` rows: the hubs'
-   *    edges are laid by `dst`, the rest keep the src layout. A hub's edges
-   *    then spread over every partition by `pmod(hash(dst), parts)` — a
-   *    deterministic salt applied once, at layout (J4) — instead of filling
-   *    the hub's own partition. The derived threshold max(1024,
-   *    |E|/(2·parts)) admits fewer than 2·parts hubs;
-   *  - otherwise (no hub, or a session with broadcast joins off): every edge
-   *    keeps the src layout.
-   *
-   * A dst layout is laid from the src layout at its final width: the order
-   * of a destination's in-edges, and so the rounding of its contribution
-   * sum, is then the same whether that width was pinned or right-sized.
+   * The dst layout is laid from the src layout at its final width: the
+   * order of a destination's in-edges, and so the rounding of its
+   * contribution sum, is then the same whether that width was pinned or
+   * right-sized.
    */
-  private[graft] def layout(eSrc: DataFrame, parts: Int, all: Boolean, hubs: DataFrame,
-                            hubCount: Long): (Option[DataFrame], Option[DataFrame]) = {
-    def byDst(e: DataFrame): DataFrame = Superstep.lay(e, key = "dst", parts = parts)._1
-    if (all) {
-      val e = byDst(eSrc)
+  private[graft] def layout(eSrc: DataFrame, parts: Int, all: Boolean): DataFrame =
+    if (!all) eSrc else {
+      val e = Superstep.lay(eSrc, key = "dst", parts = parts)._1
       eSrc.unpersist(false)
-      (None, Some(e))
-    } else if (hubCount > 0 && Superstep.broadcasts(eSrc.sparkSession, hubCount)) {
-      val h = Superstep.pinFor(hubCount)(hubs)
-      def side(how: String): DataFrame = eSrc.join(h, eSrc("src") === h("vid"), how)
-      val rest = Superstep.lay(side("left_anti"), parts = parts)._1
-      val hubEdges = byDst(side("left_semi"))
-      eSrc.unpersist(false)
-      (Some(rest), Some(hubEdges))
-    } else (Some(eSrc), None)
-  }
+      e
+    }
 
-  /** Per-destination contribution sums `(dst, s)` of one superstep: one
-    * `groupBy(dst)` over the union of `joins`, each a laid edge table with
-    * the pinned rank rows `(vid, w)` of its sources, w = rank/outDeg. Union,
-    * never a join of per-table sums: plan-stat estimation sums a union's
-    * sizeInBytes but multiplies a join's, and a per-superstep join of two
-    * subtrees that both read the previous superstep's checkpoint compounds
-    * the estimate across supersteps until Catalyst livelocks in stats
-    * arithmetic (measured by superstep ~20 when the salted merge was first
-    * written as a full-outer join). */
-  private[graft] def contribSums(joins: Seq[(DataFrame, DataFrame)]): DataFrame =
-    joins.map { case (e, r) => e.join(r, e("src") === r("vid")).select(e("dst"), r("w")) }
-      .reduce(_ unionByName _)
+  /** Per-destination contribution sums `(dst, s)` of one superstep: the laid
+    * edges `e` joined with the pinned rank rows `(vid, w)` of their sources,
+    * w = rank/outDeg, summed by `dst`. */
+  private[graft] def contribSums(e: DataFrame, r: DataFrame): DataFrame =
+    e.join(r, e("src") === r("vid")).select(e("dst"), r("w"))
       .groupBy("dst").agg(sum(col("w")).as("s"))
 
   def run(spark: SparkSession, edges: DataFrame,
@@ -206,8 +180,8 @@ object PageRank {
       else math.max(1024L, edgeCount / (2L * parts))
 
     // the vertex table (vid, outDeg), outDeg null for dangling vertices, from
-    // ONE aggregation over the laid edges; cached: it is the cold-start state,
-    // the hub set's source and the resume path's degree side
+    // ONE aggregation over the laid edges; cached: it is the cold-start state
+    // and the resume path's degree side
     val verts = eSrc.select(col("src").as("vid"), lit(1L).as("o"))
       .unionByName(eSrc.select(col("dst").as("vid"), lit(0L).as("o")))
       .groupBy("vid").agg(sum(col("o")).as("o"))
@@ -234,18 +208,9 @@ object PageRank {
 
     val d = cfg.damping
 
-    // the kernel releases the laid table it iterates; the run frees byDst
-    val (bySrc, byDst) = layout(eSrc, parts, Superstep.broadcasts(eSrc.sparkSession, n, cfg.broadcastMaxRows),
-      verts.filter(col("outDeg") > hubThreshold).select("vid"), hubCount)
-    val g = new Superstep((bySrc.getOrElse(byDst.get), edgeCount, parts), cfg.broadcastMaxRows, Some(verts -> n))
-    // the rank rows each laid table joins: the src-laid edges join the state
-    // through the kernel's pin, the dst-laid edges the broadcast rows of their
-    // sources (every row when the state broadcasts, else the hubs')
-    def w(st: DataFrame): DataFrame = st.select(col("vid"), (col("rank") / col("outDeg")).as("w"))
-    def joins(st: DataFrame): Seq[(DataFrame, DataFrame)] =
-      bySrc.map(_ -> g.pin(w(st))).toSeq ++ byDst.map(_ -> (
-        if (bySrc.isEmpty) g.pin(w(st))
-        else Superstep.pinFor(hubCount)(w(st.filter(col("outDeg") > hubThreshold)))))
+    // the kernel releases the laid table it iterates
+    val e = layout(eSrc, parts, Superstep.broadcasts(eSrc.sparkSession, n, cfg.broadcastMaxRows))
+    val g = new Superstep((e, edgeCount, parts), cfg.broadcastMaxRows, Some(verts -> n))
 
     // --- resume or cold start: the rank state (vid, rank, outDeg) and, in
     // fixed point, the L1 of the superstep before it (none yet on a cold
@@ -278,8 +243,9 @@ object PageRank {
       // already has it. Dangling vertices (outDeg null) own no edges, so the
       // inner contribution join drops them without a filter
       val cur = st.repartition(parts, col("vid"))
+      val rankDeg = cur.select(col("vid"), (col("rank") / col("outDeg")).as("w"))
       // per-destination partial sums (J1 + A1)
-      val contribs = contribSums(joins(cur))
+      val contribs = contribSums(g.edges, g.pin(rankDeg))
 
       // both sides hash-partitioned on the key — pin SHJ so neither is sorted
       val newRank = Superstep.scalar(base) + lit(d) * coalesce(col("s"), lit(0.0))
@@ -299,7 +265,6 @@ object PageRank {
       if (cfg.ckptEvery > 0 && (iter + 1) % cfg.ckptEvery == 0)
         ckpt.save(iter, mat.select("vid", "rank"), metrics)
     }).select("vid", "rank")
-    byDst.foreach(_.unpersist(false))
 
     // the final state is durably recorded once (exact resume point = done)
     val iterations = startIter + metrics.size - metrics0.size

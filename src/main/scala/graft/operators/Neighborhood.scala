@@ -155,13 +155,16 @@ object Neighborhood {
 
   /** (vid, est) — HyperBall estimate of |B_k(vid)| as a double. `laidRev`
     * holds the graph's edges reversed (dst→src): counters flow along them,
-    * a join on the laid key. */
+    * a join on the laid key. The counter side is pinned shuffle-hash in every
+    * session: each row carries a register array, so a row-count broadcast
+    * crossover says nothing of its bytes, and unpinned the join plans as a
+    * sort-merge join that re-sorts the cached edge side every superstep. */
   def hyperBall(verts: DataFrame, laidRev: Superstep.Laid, k: Int): DataFrame = {
     val g = Superstep(laidRev)
     val e = g.edges
     g.fixedK(verts.select(col("vid"), HllExprs.hllInit(col("vid")).as("reg")), k,
       out = _.select(col("vid"), HllExprs.hllEstimate(col("reg")).as("est"))) { (b, _) =>
-      e.join(g.pin(b), e("src") === b("vid")).select(e("dst").as("vid"), b("reg"))
+      e.join(Superstep.shuffleHash(b), e("src") === b("vid")).select(e("dst").as("vid"), b("reg"))
         .unionByName(b)
         .groupBy("vid").agg(HllExprs.hllUnionAgg(col("reg")).as("reg"))
     }

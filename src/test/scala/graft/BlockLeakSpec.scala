@@ -84,8 +84,6 @@ class BlockLeakSpec extends SparkSpec {
       leavesOnlyItsResult(s"PageRank bmr=$bmr")(pr(PageRankConfig(maxIter = 5, ckptEvery = 0, broadcastMaxRows = bmr)))
     leavesOnlyItsResult("PageRank salted")(
       pr(PageRankConfig(maxIter = 5, ckptEvery = 0, hubDegreeThreshold = 3)))
-    leavesOnlyItsResult("PageRank split")(
-      pr(PageRankConfig(maxIter = 5, ckptEvery = 0, hubDegreeThreshold = 3, broadcastMaxRows = 0)))
     val store = new graft.ckpt.IcebergLikeStore(spark,
       java.nio.file.Files.createTempDirectory("graft-leak-pr").toString)
     GraphOps.freeCheckpoint(pr(PageRankConfig(maxIter = 4, ckptEvery = 3), store.rankCheckpointer()))

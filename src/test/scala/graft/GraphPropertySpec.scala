@@ -217,15 +217,12 @@ class GraphPropertySpec extends SparkSpec {
 
     // PageRank, unsalted and with every source of out-degree > 1 a hub, over
     // the same tables and a one-hub star: ranks sum to 1 and match the
-    // sequential reference. The hubs run in the session's regime and, with
-    // broadcastMaxRows = 0, on the split path where the session broadcasts
-    // (the state shuffle-hash joined, the hubs' edges laid by dst)
+    // sequential reference
     val star = (1L to 20L).map(i => (0L, i))
-    val bmr = Superstep.BroadcastMaxRows
     for ((input, g) <- Seq("self-loops" -> selfLoopRows, "duplicates" -> dupRows, "star" -> star);
-         (threshold, maxRows) <- Seq(Long.MaxValue -> bmr, 1L -> bmr, 1L -> 0L)) {
+         threshold <- Seq(Long.MaxValue, 1L)) {
       val res = PageRank.run(s, table(g), PageRankConfig(eps = 1e-10,
-        hubDegreeThreshold = threshold, ckptEvery = 0, broadcastMaxRows = maxRows))
+        hubDegreeThreshold = threshold, ckptEvery = 0))
       assert(threshold == Long.MaxValue || input == "self-loops" || res.hubCount > 0, s"$input salted no hub")
       val got = res.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       val want = refPageRank(g)

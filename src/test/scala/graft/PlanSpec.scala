@@ -31,26 +31,16 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
 
   test("superstep contribution join avoids SortMergeJoin in both regimes") {
-    // split: the sources of out-degree > 3 are hubs whose edges are laid by
-    // dst and joined to their broadcast rank rows; the rest of the edges join
-    // the state shuffle-hash
-    for ((regime, s) <- Seq("broadcast" -> spark, "shuffle_hash" -> noBroadcast, "split" -> spark)) {
+    for ((regime, s) <- Seq("broadcast" -> spark, "shuffle_hash" -> noBroadcast)) {
       val (edges, _, _) = Superstep.lay(PageSynth.edgeList(s, 2000).toDF(), parts = 4)
       val verts  = GraphOps.vertices(edges)
       val n      = verts.count()
       val rankDeg = verts.select(col("vid"), lit(1.0 / n).as("w"))
-      val joins = if (regime != "split") Seq(edges -> Superstep.pinFor(n)(rankDeg)) else {
-        val hubs = GraphOps.outDegrees(edges).filter(col("outDeg") > 3).select("vid")
-        val hubCount = hubs.count()
-        val (Some(rest), Some(byDst)) = PageRank.layout(edges, 4, all = false, hubs, hubCount)
-        Seq(rest -> Superstep.shuffleHash(rankDeg),
-          byDst -> Superstep.pinFor(hubCount)(rankDeg.join(hubs, Seq("vid"), "left_semi")))
-      }
-      val sums = PageRank.contribSums(joins)
+      val sums = PageRank.contribSums(edges, Superstep.pinFor(n)(rankDeg))
       sums.collect() // run through AQE so the final plan is the real one
       val plan = executed(sums)
       assert(!plan.contains("SortMergeJoin"), s"$regime plan has SMJ:\n$plan")
-      joins.foreach(_._1.unpersist())
+      edges.unpersist()
     }
   }
 
@@ -87,8 +77,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("HyperBall's superstep join never sort-merges in a broadcast-disabled session") {
-    // the join of the laid edges against the counter state goes through the
-    // kernel's pin: unpinned, the planner picks a sort-merge join that
+    // the join of the laid edges against the counter state is pinned
+    // shuffle-hash: unpinned, the planner picks a sort-merge join that
     // re-shuffles and re-sorts the cached edge side every superstep
     import operators.{DocGraph, Neighborhood}
     val e = noBroadcast.createDataFrame((0L until 30L).map(i => (i, i + 1))).toDF("src", "dst")

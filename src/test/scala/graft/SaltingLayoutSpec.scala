@@ -20,19 +20,18 @@ class SaltingLayoutSpec extends SparkSpec {
       .join(outDeg, Seq("vid"), "inner")
       .select($"vid", (lit(1.0) / $"outDeg").as("w"))
 
-    val hub7   = Seq(7L).toDF("vid")
+    // salted: the broadcast regime's layout, where hub 7's edges are laid by
+    // dst and spread over every partition
     val pin    = Superstep.pinFor(rankDeg.count())
-    val plain  = PageRank.contribSums(Seq(edges -> pin(rankDeg)))
-    val (Some(bySrc), Some(byDst)) =
-      PageRank.layout(Superstep.lay(edges, parts = 4)._1, 4, all = false, hub7, 1L)
-    val salted = PageRank.contribSums(Seq(bySrc -> pin(rankDeg),
-      byDst -> pin(rankDeg.join(hub7, Seq("vid"), "left_semi"))))
+    val plain  = PageRank.contribSums(edges, pin(rankDeg))
+    val byDst  = PageRank.layout(Superstep.lay(edges, parts = 4)._1, 4, all = true)
+    val salted = PageRank.contribSums(byDst, pin(rankDeg))
 
     val p = plain.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val q = salted.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(p.keySet == q.keySet)
     p.foreach { case (k, v) => assert(math.abs(q(k) - v) < 1e-12, s"dst=$k") }
-    Seq(bySrc, byDst).foreach(_.unpersist())
+    byDst.unpersist()
   }
 
   test("PageRank with forced salting matches unsalted ranks") {
@@ -60,37 +59,33 @@ class SaltingLayoutSpec extends SparkSpec {
     val unsalted = PageRank.run(spark, edges,
       PageRankConfig(eps = 1e-10, maxIter = 30, numPartitions = 8,
         hubDegreeThreshold = Long.MaxValue, ckptEvery = 0))
+    val salted = PageRank.run(spark, edges,
+      PageRankConfig(eps = 1e-10, maxIter = 30, numPartitions = 8,
+        hubDegreeThreshold = 0, ckptEvery = 0))
+    assert(salted.hubCount > 0,
+      s"auto threshold ${salted.hubThreshold} did not fire (maxOut=$maxOut)")
     val ra = unsalted.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    // the broadcast regime (every edge laid by dst) and the split path (the
-    // state shuffle-hash joined, the hubs' edges laid by dst)
-    for (bmr <- Seq(Superstep.BroadcastMaxRows, 0L)) {
-      val salted = PageRank.run(spark, edges,
-        PageRankConfig(eps = 1e-10, maxIter = 30, numPartitions = 8,
-          hubDegreeThreshold = 0, ckptEvery = 0, broadcastMaxRows = bmr))
-      assert(salted.hubCount > 0,
-        s"auto threshold ${salted.hubThreshold} did not fire (maxOut=$maxOut)")
-      val rb = salted.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(ra.keySet == rb.keySet)
-      ra.foreach { case (k, v) => assert(math.abs(rb(k) - v) < 1e-9, s"vid=$k") }
-    }
+    val rb = salted.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(ra.keySet == rb.keySet)
+    ra.foreach { case (k, v) => assert(math.abs(rb(k) - v) < 1e-9, s"vid=$k") }
   }
 
   test("a hub's dst-laid edges fill every partition, none above twice the mean") {
-    // one giant hub (0 → 1..4000) over a ring of its leaves, in the shuffle
-    // regime: laid by src, every hub edge sits in the hub's own partition;
-    // the layout rule lays them by dst, spread over all partitions
+    // one giant hub (0 → 1..4000) over a ring of its leaves: laid by src,
+    // every hub edge sits in the hub's own partition; the broadcast regime's
+    // layout lays them by dst, spread over all partitions
     val hubRows = (1L to 4000L).map(i => (0L, i))
     val ring = (1L to 400L).map(i => (i, i % 400 + 1))
     val (eSrc, _, parts) = Superstep.lay((hubRows ++ ring).toDF("src", "dst"), parts = 4)
     def rowsPerPart(df: DataFrame): Seq[Long] =
       df.groupBy(spark_partition_id()).count().collect().map(_.getLong(1)).toSeq
     assert(rowsPerPart(eSrc.filter($"src" === 0L)) == Seq(4000L), "src layout: one partition")
-    val (rest, byDst) = PageRank.layout(eSrc, parts, all = false, Seq(0L).toDF("vid"), 1L)
-    val hubParts = rowsPerPart(byDst.get)
+    val byDst = PageRank.layout(eSrc, parts, all = true)
+    val hubParts = rowsPerPart(byDst.filter($"src" === 0L))
     assert(hubParts.sum == 4000L && hubParts.length == parts, s"hub edges per partition: $hubParts")
     assert(hubParts.max <= 2 * 4000.0 / parts, s"hub edges per partition: $hubParts")
-    assert(rest.get.count() == ring.size)
-    Seq(rest, byDst).flatten.foreach(_.unpersist())
+    assert(byDst.count() == hubRows.size + ring.size)
+    byDst.unpersist()
   }
 
   test("SNAP-style edge-list text ingest skips comments and parses ids") {

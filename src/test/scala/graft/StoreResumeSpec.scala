@@ -202,8 +202,7 @@ class StoreResumeSpec extends SparkSpec {
     // where the closing save is skipped and the resume reads the periodic one
     for ((name, cfg, stop, saves) <- Seq(
            ("salted", base.copy(hubDegreeThreshold = 3), 10, Seq(3, 7, 9)),
-           ("salted", base.copy(hubDegreeThreshold = 3, broadcastMaxRows = 0), 10, Seq(3, 7, 9)),
-           ("boundary", base, 8, Seq(3, 7)))) withClue(s"$name bmr=${cfg.broadcastMaxRows}: ") {
+           ("boundary", base, 8, Seq(3, 7)))) withClue(s"$name: ") {
       val store = new IcebergLikeStore(spark, Files.createTempDirectory("graft-resume").toString)
       val full  = PageRank.run(spark, edges, cfg)
       val part  = PageRank.run(spark, edges, cfg.copy(maxIter = stop), store.rankCheckpointer("ranks"))
